@@ -1,0 +1,45 @@
+package perfbench
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+/** The local file system with its metadata and open/create calls counted.
+  * Hadoop's own statistics count bytes for `file:` but no operations, and
+  * the snapshot table's cost is manifest I/O. Installed for the whole run
+  * (`spark.hadoop.fs.file.impl`), traced or not: a counter increment per
+  * call. */
+class CountingFs extends LocalFileSystem {
+  import CountingFs._
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    reads.incrementAndGet(); super.open(f, bufferSize)
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    reads.incrementAndGet(); super.getFileStatus(f)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    reads.incrementAndGet(); super.listStatus(f)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    writes.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    writes.incrementAndGet(); super.rename(src, dst)
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    writes.incrementAndGet(); super.delete(f, recursive)
+  }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    writes.incrementAndGet(); super.mkdirs(f, permission)
+  }
+}
+
+object CountingFs {
+  val reads = new AtomicLong()
+  val writes = new AtomicLong()
+}
