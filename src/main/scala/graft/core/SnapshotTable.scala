@@ -75,6 +75,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reader. [[readVersion]] is the same pin at an explicit version
   * (time travel across the retained window).
   *
+  * READ PLANNING: every snapshot read — [[read]], [[readVersion]], the
+  * `scanPruned*` family, both sides of a deletion-vector read, and the
+  * commit paths' read-backs — is planned from the manifest through one
+  * constructor ([[scan]]) over [[graft.sources.SnapshotFileIndex]]: no
+  * per-file status calls, no Parquet schema-inference job (the schema
+  * is one driver-side footer read), and pushed-down filters skip files
+  * by their recorded sections. [[table]] is therefore just [[read]].
+  *
   * CONCURRENCY: version numbers linearize committers through an
   * EXCLUSIVE CLAIM — before renaming, a committer creates
   * `v<N>.lock` with `FileSystem.create(overwrite = false)`, atomic-
@@ -224,6 +232,29 @@ object SnapshotTable {
   private def splitEntries(entries: Seq[String]): (Seq[String], Seq[String]) =
     entries.partition(e => !entryPath(e).startsWith(s"$DvDir/"))
 
+  /** Scan manifest `entries` planned from the manifest alone — THE
+    * constructor behind every snapshot read: a [[org.apache.spark.sql
+    * .execution.datasources.HadoopFsRelation]] over
+    * [[graft.sources.SnapshotFileIndex]], so file list and sizes come
+    * from the entries (no per-file status calls), pushed-down filters
+    * skip files by their recorded sections, and the data schema is one
+    * driver-side footer read ([[graft.sources.SnapshotFileIndex
+    * .dataSchema]]) instead of `spark.read.parquet`'s schema-inference
+    * job. Building the frame launches no Spark job. */
+  private[graft] def scan(spark: SparkSession, rootP: Path,
+                          entries: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    val index = graft.sources.SnapshotFileIndex(spark, rootP, entries)
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      index,
+      partitionSchema = org.apache.spark.sql.types.StructType(Nil),
+      dataSchema = index.dataSchema,
+      bucketSpec = None,
+      fileFormat = new org.apache.spark.sql.execution.datasources
+        .parquet.ParquetFileFormat(),
+      options = Map.empty)(spark))
+  }
+
   /** Read `dataEntries` with positional identity attached —
     * `__graft_fn` (file base name; part names carry a UUID, so it is
     * unique) and `__graft_ri` (row ordinal within the file, parquet's
@@ -236,16 +267,14 @@ object SnapshotTable {
                           dataEntries: Seq[String],
                           dvEntries: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val data = spark.read.parquet(
-        dataEntries.map(e => new Path(rootP, entryPath(e)).toString): _*)
+    val data = scan(spark, rootP, dataEntries)
       .select(col("*"),
         element_at(split(col("_metadata.file_path"), "/"), -1)
           .as("__graft_fn"),
         col("_metadata.row_index").as("__graft_ri"))
     if (dvEntries.isEmpty) data
     else data.join(
-      spark.read.parquet(
-          dvEntries.map(e => new Path(rootP, entryPath(e)).toString): _*)
+      scan(spark, rootP, dvEntries)
         .select(col("file_name").as("__graft_fn"),
           col("row_index").as("__graft_ri")),
       Seq("__graft_fn", "__graft_ri"), "left_anti")
@@ -258,9 +287,7 @@ object SnapshotTable {
   private def readEntriesWithDv(spark: SparkSession, rootP: Path,
                                 dataEntries: Seq[String],
                                 dvEntries: Seq[String]): DataFrame =
-    if (dvEntries.isEmpty)
-      spark.read.parquet(
-        dataEntries.map(e => new Path(rootP, entryPath(e)).toString): _*)
+    if (dvEntries.isEmpty) scan(spark, rootP, dataEntries)
     else readWithPos(spark, rootP, dataEntries, dvEntries)
       .drop("__graft_fn", "__graft_ri")
 
@@ -389,41 +416,18 @@ object SnapshotTable {
     readEntriesWithDv(spark, rootP, dataE, dvE)
   }
 
-  /** The current snapshot as a DataFrame whose SCAN prunes files
-    * TRANSPARENTLY: the relation is built over a manifest-backed
-    * [[graft.sources.SnapshotFileIndex]], so any filter Spark pushes
-    * down reaches the index and skips the files whose recorded
+  /** The current snapshot — the same relation as [[read]], kept as
+    * the name for reading with TRANSPARENT file pruning: every
+    * snapshot scan is built over the manifest-backed
+    * [[graft.sources.SnapshotFileIndex]] (see [[scan]]), so a filter
+    * Spark pushes down skips the files whose recorded
     * range/category/Bloom sections cannot match — `table(...).filter
     * (col("k") === 42)` plans the same file set as an explicit
-    * [[scanPrunedBloom]] probe, with no special API on the read path
-    * (the Delta/Iceberg data-skipping integration on the house
-    * format). The scan itself is Spark's native vectorized parquet
-    * reader; file list and sizes come from the manifest, so planning
-    * performs no per-file filesystem calls. Falls back to the plain
-    * [[read]] when the snapshot carries LIVE deletion vectors (the
-    * MOR anti-join wraps the whole scan and Spark does not push
-    * filters through the join's probe side; compact first, or accept
-    * unpruned scans until then — documented MOR read price). */
-  def table(spark: SparkSession, root: String): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = currentVersion(fs, rootP).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable at $root has no committed snapshot"))
-    val (dataE, dvE) = splitEntries(readManifest(fs, rootP, v))
-    if (dvE.nonEmpty) return readVersion(spark, root, v)
-    val index = graft.sources.SnapshotFileIndex(spark, rootP, dataE)
-    val schema = spark.read.parquet(
-      new Path(rootP, entryPath(dataE.head)).toString).schema
-    val relation = org.apache.spark.sql.execution.datasources
-      .HadoopFsRelation(
-        index,
-        partitionSchema = org.apache.spark.sql.types.StructType(Nil),
-        dataSchema = schema,
-        bucketSpec = None,
-        fileFormat = new org.apache.spark.sql.execution.datasources
-          .parquet.ParquetFileFormat(),
-        options = Map.empty)(spark)
-    spark.baseRelationToDataFrame(relation)
-  }
+    * [[scanPrunedBloom]] probe. With LIVE deletion vectors the scan
+    * sits under the merge-on-read anti-join, and Spark does not push
+    * filters through the join's probe side: compact first, or accept
+    * unpruned scans until then (the documented MOR read price). */
+  def table(spark: SparkSession, root: String): DataFrame = read(spark, root)
 
   /** Write `df`'s parquet files under a fresh unreferenced data
     * directory and return their manifest entries (root-relative path,
@@ -482,7 +486,7 @@ object SnapshotTable {
           "[A-Za-z0-9_]+ — rename or alias before recording stats"))
       import org.apache.spark.sql.functions._
       val bloomCap = bloomBits / 8
-      val written = spark.read.parquet(dataHome.toString)
+      val written = scan(spark, rootP, rels.map(sized(_, Nil)))
       // job 1: per-file long min/max — constant-size aggregation
       // state. try_cast, not cast: under ANSI (Spark's default) a
       // malformed value in a statsCol would otherwise FAIL the whole
@@ -877,8 +881,7 @@ object SnapshotTable {
       // the feed step is the appended rows as inserts, read back from
       // the just-written files — O(batch) with no lineage re-pay, and
       // exact by the disjointness guard above
-      val written = spark.read.parquet(
-        newEntries.map(e => new Path(rootP, entryPath(e)).toString): _*)
+      val written = scan(spark, rootP, newEntries)
       val nonKeys = written.columns.filterNot(changeKeys.contains).toSeq
       recordChangesStep(spark, root,
         v.get - 1, v.get,
@@ -1417,7 +1420,14 @@ object SnapshotTable {
           .repartition(1)
           .write.mode("overwrite").option("compression", "zstd")
           .parquet(staging.toString)
-        val n = spark.read.parquet(staging.toString).count()
+        // the tombstone count is the staged files' footer row counts:
+        // one listing, no read-back job
+        val staged = fs.listStatus(staging)
+          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+          .map(st => s"${st.getPath.getName}\t!${st.getLen}")
+          .sorted.toSeq
+        val n = graft.sources.SnapshotFileIndex(spark, rootP,
+          staged.map(e => s"$StagingDir/dv-$nonce/$e")).rowCount
         if (n == 0L) { fs.delete(staging, true); Left((bv, 0L, 0, null)) }
         else {
           val dvHome = new Path(new Path(rootP, DvDir), nonce)
@@ -1425,10 +1435,7 @@ object SnapshotTable {
           if (!fs.rename(staging, dvHome))
             sys.error(s"SnapshotTable: could not move staged deletion " +
               s"vector $staging into place at $dvHome")
-          val newDv = fs.listStatus(dvHome)
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map(st => s"$DvDir/$nonce/${st.getPath.getName}\t!${st.getLen}")
-            .sorted.toSeq
+          val newDv = staged.map(e => s"$DvDir/$nonce/$e")
           // feed step: the matched rows as deletes — lazy, and still
           // consistent post-commit (base data files are immutable)
           val step = () => {
@@ -1859,8 +1866,7 @@ object SnapshotTable {
         if (dvE.isEmpty) Set.empty
         else {
           val present = dataE.map(e => new Path(entryPath(e)).getName).toSet
-          spark.read.parquet(
-              dvE.map(e => new Path(rootP, entryPath(e)).toString): _*)
+          scan(spark, rootP, dvE)
             .select("file_name").distinct().collect()
             .map(_.getString(0)).toSet.intersect(present)
         }

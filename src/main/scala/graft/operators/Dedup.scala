@@ -515,16 +515,6 @@ object Dedup {
 
   // --- MinHash + LSH ---
 
-  /** Deterministic (a,b) parameters for the i-th hash permutation —
-    * splitmix64-style odd multipliers, fixed at build time so
-    * signatures are reproducible across runs/sessions. */
-  private def hashParams(i: Int): (Long, Long) = {
-    val a = ((0x9E3779B97F4A7C15L * (i + 1)) & 0x7FFFFFFFL) | 1L
-    val b = (0xBF58476D1CE4E5B9L * (i + 1)) & 0x7FFFFFFFL
-    (a, b)
-  }
-  private val MinhashPrime = 4294967311L // smallest prime > 2^32
-
   /** 32-bit base hash of a shingle, md5-derived (stable across engines,
     * enabling oracle parity for anything built on it). */
   def md5Hash32(c: Column): Column =

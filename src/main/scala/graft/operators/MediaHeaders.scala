@@ -37,8 +37,6 @@ object MediaHeaders {
   // means a u64 largesize follows; size==0 means "to end of file".
   // Containers relevant to metadata: moov > trak > mdia > minf > stbl.
 
-  private val Mp4Containers = Set("moov", "trak", "mdia", "minf", "stbl")
-
   /** Walk the direct children of byte range [from, to). */
   private def mp4Children(b: Array[Byte], from: Long, to: Long): Seq[(String, Long, Long)] = {
     val out = Seq.newBuilder[(String, Long, Long)]
@@ -235,15 +233,6 @@ object MediaHeaders {
       }
     }
     out.result()
-  }
-
-  private def ebmlFind(b: Array[Byte], from: Int, to: Int,
-                       path: List[Long]): Option[(Int, Int)] = path match {
-    case Nil => Some((from, to))
-    case head :: rest =>
-      ebmlChildren(b, from, to).collectFirst {
-        case (id, s, e) if id == head => (s, e)
-      }.flatMap { case (s, e) => ebmlFind(b, s, e, rest) }
   }
 
   private def ebmlUInt(b: Array[Byte], s: Int, e: Int): Long = {

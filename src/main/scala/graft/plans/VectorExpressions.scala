@@ -499,8 +499,9 @@ object TextExpressions {
   * and shuffles nothing. Base hash = first 8 hex chars of md5 (matches
   * `conv(substring(md5(s),1,8),16,10)` exactly, keeping candidate
   * generation deterministic and engine-reproducible); permutations are
-  * (aᵢ·x + bᵢ) mod p with the same splitmix-derived constants as
-  * Dedup.hashParams.
+  * (aᵢ·x + bᵢ) mod p with splitmix64-derived odd multipliers
+  * ([[SketchExpressions.hashParamA]], [[SketchExpressions.hashParamB]]),
+  * fixed at build time so signatures reproduce across runs and sessions.
   */
 object SketchExpressions {
   import org.apache.spark.sql.catalyst.expressions.UnaryExpression

@@ -1,11 +1,19 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.core.SnapshotTable
 
@@ -24,12 +32,19 @@ import graft.core.SnapshotTable
   * filters inside each kept file — three layers, one declarative
   * filter).
   *
+  * Every snapshot read plans through this index, not only
+  * [[graft.core.SnapshotTable.table]] (which is now just
+  * [[graft.core.SnapshotTable.read]]): reads, time travel, the
+  * `scanPruned*` family, the deletion-vector side of merge-on-read,
+  * and the commit paths' read-backs of the files they just wrote.
   * The file list and sizes come from the MANIFEST (entries pin the
   * snapshot; `!bytes` sections carry lengths), so constructing and
   * scanning this index performs no per-file filesystem calls at all —
   * at 400k files that is the difference between a plan and a
   * 400k-HEAD-call listing. Entries from pre-size manifests fall back
-  * to one `getFileStatus` each, once, at construction.
+  * to one `getFileStatus` each, once, at construction. The relation's
+  * schema is [[dataSchema]]: one footer read on the driver, where
+  * `spark.read.parquet` would launch a schema-inference job.
   *
   * Strictly a SUPERSET index: untranslatable filters and section-less
   * columns keep their files ([[SnapshotTable.entryMayMatch]]), and
@@ -60,6 +75,35 @@ final class SnapshotFileIndex(spark: SparkSession, rootP: Path,
   override def refresh(): Unit = ()
 
   override def sizeInBytes: Long = statuses.values.map(_.getLen).sum
+
+  private def footer(entry: String,
+                     filter: ParquetMetadataConverter.MetadataFilter)
+      : ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(
+      statuses(SnapshotFileIndex.entryPathOf(entry)),
+      spark.sessionState.newHadoopConf()), filter)
+
+  /** The indexed files' schema as `spark.read.parquet` over the same
+    * files infers it with schema merging off — the FIRST file decides —
+    * but from one footer read on the driver instead of an inference
+    * job: Spark's row-metadata key when the writer recorded it, else
+    * the parquet schema converted under the session conf (both via
+    * Spark's own `readSchemaFromFooter`), then made nullable, as every
+    * file-source relation's data schema is. */
+  def dataSchema: StructType = {
+    val first = entries.head
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(statuses(SnapshotFileIndex.entryPathOf(first)).getPath,
+        footer(first, ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    SnapshotFileIndex.asNullable(schema).asInstanceOf[StructType]
+  }
+
+  /** Total rows of the indexed files, summed from their footers' row
+    * groups — no scan, no job. */
+  def rowCount: Long = entries.iterator.map(e =>
+    footer(e, ParquetMetadataConverter.NO_FILTER).getBlocks.asScala
+      .map(_.getRowCount).sum).sum
 }
 
 object SnapshotFileIndex {
@@ -67,6 +111,17 @@ object SnapshotFileIndex {
   private[sources] def entryPathOf(line: String): String = {
     val t = line.indexOf('\t')
     if (t < 0) line else line.substring(0, t)
+  }
+
+  /** Spark's (package-private) `DataType.asNullable`: every struct
+    * field, array element and map value becomes nullable. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 
   /** Build the index for `entries` of the snapshot at `rootP` —

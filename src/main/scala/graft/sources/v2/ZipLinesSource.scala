@@ -131,7 +131,8 @@ object CentralDirectory {
 
   /** Parse (entryName, localHeaderOffset, method, compressedSize) for
     * every non-directory entry, or None when the directory cannot be
-    * trusted (zip64 sentinel values, missing EOCD, >64K-comment edge).
+    * trusted (zip64 sentinel values, missing EOCD, >64K-comment edge,
+    * a directory extent that overruns the EOCD).
     * Only the final ~64 KB and the central directory are read — not the
     * archive body. */
   def entries(path: Path, conf: Configuration): Option[Seq[(String, Long, Int, Long)]] = {
@@ -156,6 +157,10 @@ object CentralDirectory {
       val cdOffset = u32(tail, i + 16)
       if (nEntries == 0xFFFF || cdOffset == 0xFFFFFFFFL || cdSize == 0xFFFFFFFFL)
         return None // zip64 — fall back to streaming
+      // the directory must end at or before the EOCD record itself: a
+      // corrupt tail would otherwise size the buffer below (up to 4 GB,
+      // or negative past Int.MaxValue) from an untrusted u32
+      if (cdOffset + cdSize > len - tailLen + i) return None
       val cd = new Array[Byte](cdSize.toInt)
       in.readFully(cdOffset, cd, 0, cdSize.toInt)
       val out = Seq.newBuilder[(String, Long, Int, Long)]

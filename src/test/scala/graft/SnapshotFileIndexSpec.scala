@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -103,5 +104,127 @@ class SnapshotFileIndexSpec extends SparkSpec {
     assert(t2.count() == 99L)
     assert(scannedFiles(t2.filter(col("k") === 50L)) <
       scannedFiles(t2))
+  }
+
+  /** The manifest lines of `root`'s version `v`, read fs-level. */
+  private def manifest(root: String, v: Long): Seq[String] = {
+    val in = new java.io.FileInputStream(f"$root/_manifests/v$v%09d.manifest")
+    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    txt.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
+  private def tip(root: String): Long =
+    SnapshotTable.versions(spark, root).last
+
+  private def pathsOf(root: String, entries: Seq[String]): Seq[String] =
+    entries.map(e => s"$root/${e.split('\t').head}")
+
+  /** Jobs launched while `body` runs, counted by a listener between two
+    * listener-bus drains (so no earlier job leaks in and no job of
+    * `body`'s is still queued when the count is read). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("building read, readVersion, scanPruned and scanPrunedBloom " +
+      "frames launches no Spark job, with or without a live DV") {
+    val root = freshRoot()
+    val v1 = SnapshotTable.commit(spark, root,
+      spark.range(0L, 400L).selectExpr("id as k", "concat('v', id) as v")
+        .repartitionByRange(4, col("k")),
+      statsCols = Seq("k"), bloomCols = Seq("k"))
+    def frames(): Seq[org.apache.spark.sql.DataFrame] = Seq(
+      SnapshotTable.read(spark, root),
+      SnapshotTable.readVersion(spark, root, v1),
+      SnapshotTable.scanPruned(spark, root, "k", 10L, 20L)
+        .filter(col("k").between(10L, 20L)),
+      SnapshotTable.scanPrunedBloom(spark, root, "k", "37")
+        .filter(col("k") === 37L))
+    var clean = Seq.empty[org.apache.spark.sql.DataFrame]
+    assert(jobsDuring { clean = frames() } == 0,
+      "a DV-free snapshot read must plan without launching a job")
+    assert(clean.map(_.count()) == Seq(400L, 400L, 11L, 1L))
+    val (_, n, _) = SnapshotTable.deleteWhereDV(spark, root,
+      col("k") % 10 === 3L)
+    assert(n == 40L)
+    var dv = Seq.empty[org.apache.spark.sql.DataFrame]
+    assert(jobsDuring { dv = frames() } == 0,
+      "a DV'd snapshot read must plan without launching a job")
+    // k = 13 is tombstoned; k = 37 is not
+    assert(dv.map(_.count()) == Seq(360L, 400L, 10L, 1L))
+  }
+
+  test("scan's schema is spark.read.parquet's over the same files, " +
+      "nullability included: plain, live DV, evolved, size-less entries") {
+    def same(root: String, entries: Seq[String]): Unit = {
+      val got = SnapshotTable.scan(spark, new Path(root), entries).schema
+      val want = spark.read.parquet(pathsOf(root, entries): _*).schema
+      assert(got == want, s"scan schema\n$got\n!= spark.read.parquet\n$want")
+    }
+    // non-nullable writer columns (range ids, arrays, maps, structs)
+    // exercise the nested asNullable
+    val root = freshRoot()
+    SnapshotTable.commit(spark, root,
+      spark.range(0L, 200L).selectExpr("id as k", "cast(id as int) as i",
+          "concat('v', id) as v", "array(id, id + 1) as arr",
+          "map('a', id) as m", "named_struct('x', id, 'y', 'z') as st")
+        .repartition(3),
+      statsCols = Seq("k"))
+    val plain = manifest(root, tip(root))
+    same(root, plain)
+    // a live DV: both the data side and the tombstone side
+    SnapshotTable.deleteWhereDV(spark, root, col("k") < 5L)
+    val withDv = manifest(root, tip(root))
+    val (dvE, dataE) = withDv.partition(_.startsWith("_dv/"))
+    assert(dvE.nonEmpty)
+    same(root, dataE)
+    same(root, dvE)
+    // widened by evolveAddColumns (a nullable and a non-null literal)
+    SnapshotTable.evolveAddColumns(spark, root,
+      Seq("tag" -> lit("t"), "score" -> lit(null).cast("double")))
+    val evolved = manifest(root, tip(root))
+    assert(SnapshotTable.scan(spark, new Path(root), evolved).columns
+      .toSeq.takeRight(2) == Seq("tag", "score"))
+    same(root, evolved)
+    // entries with no `!bytes` section (pre-size manifests): sizes come
+    // from the filesystem, the schema is the same; published by hand so
+    // the public read goes through them too
+    val bare = plain.map(_.split('\t').head)
+    same(root, bare)
+    val v = tip(root) + 1
+    Files.write(java.nio.file.Paths.get(f"$root/_manifests/v$v%09d.manifest"),
+      bare.mkString("", "\n", "\n").getBytes("UTF-8"))
+    assert(SnapshotTable.read(spark, root).schema ==
+      spark.read.parquet(pathsOf(root, bare): _*).schema)
+    assert(SnapshotTable.read(spark, root).count() == 200L)
+  }
+
+  test("deleteWhereDV's count is the tombstones it wrote") {
+    val root = freshRoot()
+    SnapshotTable.commit(spark, root,
+      spark.range(0L, 300L).selectExpr("id as k", "id % 7 as g")
+        .repartition(3))
+    val (v, n, files) = SnapshotTable.deleteWhereDV(spark, root,
+      col("g") === 2L)
+    val dvE = manifest(root, v).filter(_.startsWith("_dv/"))
+    assert(files == dvE.size && files > 0)
+    assert(n == spark.read.parquet(pathsOf(root, dvE): _*).count())
+    assert(n == 43L && SnapshotTable.read(spark, root).count() == 257L)
+    // nothing matched: no commit, zero count
+    assert(SnapshotTable.deleteWhereDV(spark, root, col("g") === 99L) ==
+      ((v, 0L, 0)))
   }
 }

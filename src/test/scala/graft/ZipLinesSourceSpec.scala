@@ -90,4 +90,36 @@ class ZipLinesSourceSpec extends SparkSpec {
     spark.read.format("ziplines").load(p).createOrReplaceTempView("zl")
     assert(spark.sql("SELECT value FROM zl").collect().head.getString(0) == "sql row")
   }
+
+  test("ziplines: an EOCD whose directory size overruns the file falls " +
+      "back to streaming instead of sizing a buffer from it") {
+    val dir = Files.createTempDirectory("graft_zl7")
+    val p = writeZip(dir, "e.zip",
+      (1 to 3).map(i => s"e$i.txt" -> s"first $i\nsecond $i\n"),
+      StandardCharsets.UTF_8)
+    val path = new org.apache.hadoop.fs.Path(p)
+    val conf = spark.sessionState.newHadoopConf()
+    val want = spark.read.format("ziplines").load(p)
+      .collect().map(r => (r.getString(0), r.getString(2))).sorted.toSeq
+    assert(want.size == 6)
+    assert(graft.sources.v2.CentralDirectory.entries(path, conf)
+      .exists(_.size == 3))
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(p))
+    // no archive comment: the EOCD is the final 22 bytes; cdSize is
+    // the little-endian u32 at EOCD + 12
+    val cdSizeAt = bytes.length - 22 + 12
+    for (corrupt <- Seq(0x7FFFFFF0L, 0x80000010L)) {
+      val b = bytes.clone()
+      (0 until 4).foreach(j => b(cdSizeAt + j) = ((corrupt >>> (8 * j)) & 0xFF).toByte)
+      val f = dir.resolve(f"corrupt_$corrupt%x.zip")
+      Files.write(f, b)
+      assert(graft.sources.v2.CentralDirectory.entries(
+        new org.apache.hadoop.fs.Path(f.toString), conf).isEmpty,
+        f"cdSize 0x$corrupt%x must not be trusted")
+      val df = spark.read.format("ziplines").load(f.toString)
+      assert(df.rdd.getNumPartitions == 1, "whole-archive streaming fallback")
+      assert(df.collect().map(r => (r.getString(0), r.getString(2)))
+        .sorted.toSeq == want)
+    }
+  }
 }

@@ -2,7 +2,9 @@
 """Local replica of the driver's correctness gate: run each oracle SQL in
 DuckDB over the fixture parquet and compare against the Spark parquet
 dumps produced by graft.Verify. Columns sorted by name, rows sorted, then
-exact equality per cell (with a diagnostic float-tolerance fallback)."""
+exact equality per cell (with a diagnostic float-tolerance fallback).
+Exits 1 when any row is FAIL (including NO_SPARK_OUTPUT and
+ORACLE_SQL_ERROR), 0 otherwise."""
 import json, sys, glob, os
 import duckdb
 import pandas as pd
@@ -76,6 +78,12 @@ for name in sorted(all_queries - set(oracle)):
     results[name] = f"NO_ORACLE ({n} rows)"
 
 ok = sum(1 for v in results.values() if v.startswith("OK"))
+failed = 0
 for k, v in sorted(results.items()):
-    print(f"{'PASS' if v.startswith('OK') else 'INFO' if v.startswith('NO_ORACLE') else 'FAIL':5} {k}: {v}")
+    verdict = 'PASS' if v.startswith('OK') else 'INFO' if v.startswith('NO_ORACLE') else 'FAIL'
+    failed += verdict == 'FAIL'
+    print(f"{verdict:5} {k}: {v}")
 print(f"\n{ok}/{len(oracle)} oracle-checked queries pass")
+# a gate, not a report: any FAIL row (mismatch, NO_SPARK_OUTPUT,
+# ORACLE_SQL_ERROR) fails the run
+sys.exit(1 if failed else 0)

@@ -1,6 +1,9 @@
 #!/usr/bin/env bash
 # Full round gate, in one command: unit tests, oracle differential at two
 # scale factors, and the sf0.1 bench. Run before declaring a round done.
+# Any failing step stops the gate with a non-zero exit: a Verify that
+# exits non-zero, or an oracle sweep with a FAIL row (oracle_check.py
+# exits 1 on FAIL, NO_SPARK_OUTPUT and ORACLE_SQL_ERROR).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -34,13 +37,13 @@ echo "ok: ${n_t} tests (README matches)"
 
 echo "== oracle @ sf0.01 (the driver's gate) =="
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} \
-  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_sf001" >/dev/null 2>&1 || true
-python3 tools/oracle_check.py /root/testdata/sf0.01 /tmp/verify_sf001 | tail -1
+  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_sf001" >/dev/null 2>&1
+python3 tools/oracle_check.py /root/testdata/sf0.01 /tmp/verify_sf001 | grep -v '^PASS'
 
 echo "== oracle @ sf0.1 (scale-dependent float-boundary sweep) =="
 SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g} SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-  sbt -batch "runMain graft.Verify /root/testdata/sf0.1 /tmp/verify_sf01" >/dev/null 2>&1 || true
-python3 tools/oracle_check.py /root/testdata/sf0.1 /tmp/verify_sf01 | tail -1
+  sbt -batch "runMain graft.Verify /root/testdata/sf0.1 /tmp/verify_sf01" >/dev/null 2>&1
+python3 tools/oracle_check.py /root/testdata/sf0.1 /tmp/verify_sf01 | grep -v '^PASS'
 
 echo "== bench @ sf0.1 =="
 SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g} SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
