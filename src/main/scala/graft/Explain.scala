@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: run one suite query by name, print its formatted
   * physical plan and wall time. `runMain graft.Explain <query> [sfDir]`. */
 object Explain {

@@ -30,7 +30,6 @@ object KernelBench {
     // DataFrame-path repro at the soak's exact shape: 250k rows of two
     // 98-element sorted string arrays, kernel filter + count
     val spark = core.Session.local("graft-kernel-bench")
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     val words = (0 until 120).map(i => f"w$i%04d")
     val df = spark.range(250000).select(col("id"),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -622,10 +622,11 @@ object Queries {
     "q_ingest_tar" -> ((
       (s: SparkSession, dir: String) => {
         graft.sources.TarFixture.ensure()
-        val lines = graft.sources.TarSource.lines(s,
-          Seq(graft.sources.TarFixture.tarGzPath),
-          java.nio.charset.Charset.forName("UTF-16"))
-        graft.sources.RawTable.parseLines(s, lines,
+        val paths = Seq(graft.sources.TarFixture.tarGzPath)
+        val utf16 = java.nio.charset.Charset.forName("UTF-16")
+        graft.sources.RawTable.parseLines(s,
+            graft.sources.TarSource.lines(s, paths, utf16),
+            graft.sources.TarSource.header(s, paths, utf16),
             graft.sources.SourceSpec(encoding = "UTF-16", repair = true))
           .select(col("county_id"), col("last_name"), col("note"))
       },

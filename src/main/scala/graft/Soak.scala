@@ -463,7 +463,6 @@ object Soak {
         // hash are scan-stage; the banded pigeonhole join ships only
         // (id, band, slice) rows, so the shuffle_mb column IS the
         // image-bytes-never-shuffle proof
-        import org.apache.spark.sql.functions.col
         val spark2 = docs10.sparkSession
         import spark2.implicits._
         val blobs = spark2.range(2000).repartition(32)

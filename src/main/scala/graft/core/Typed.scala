@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Typed component layer: `Dataset[T]` views over the untyped all-string
   * component tables (SURVEY §1.3 — DataFrame-first for the dynamic text

@@ -82,7 +82,6 @@ object Bpe {
   def trainMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds=$rounds out of range")
     val spark = docs.sparkSession
-    import spark.implicits._
     val words0 = wordTable(docs, textCol).persist()
     try spark.createDataFrame(mergeRounds(words0, 1, rounds))
       .toDF("round", "pair", "merged", "n")
@@ -140,7 +139,6 @@ object Bpe {
       existing: Seq[(String, String)], rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds=$rounds out of range")
     val spark = docs.sparkSession
-    import spark.implicits._
     val words0 = wordTable(docs, textCol)
       .withColumn("sym", existing.foldLeft(
         trim(regexp_replace(col("w"), "(.)", "$1 "))) {

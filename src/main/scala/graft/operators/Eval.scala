@@ -426,8 +426,6 @@ object Eval {
       // so this is Σ s over the positives; round-9 at birth like s²)
       sum(round(col("score") * col("lbl"), 9).cast("decimal(28,9)"))
         .as("sy_sum"))
-    val conf = col("conf_sum").cast("double") / col("n").cast("double")
-    val acc = col("n_pos").cast("double") / col("n").cast("double")
     val folded = perBin
       .groupBy(lit(0).as("__k")).agg(
         sum("n").as("n_tot"), sum("n_pos").as("pos_tot"),

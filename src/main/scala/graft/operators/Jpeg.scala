@@ -223,7 +223,7 @@ object Jpeg {
     def nextBit(): Int = {
       if (cnt == 0) {
         if (pos >= limit) throw new IllegalStateException("truncated scan")
-        var v = b(pos) & 0xFF; pos += 1
+        val v = b(pos) & 0xFF; pos += 1
         if (v == 0xFF) {
           if (pos >= limit) throw new IllegalStateException("truncated scan")
           if ((b(pos) & 0xFF) != 0x00)

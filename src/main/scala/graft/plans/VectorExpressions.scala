@@ -274,7 +274,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object SetExpressions {
   import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
   import org.apache.spark.sql.catalyst.util.ArrayData
-  import org.apache.spark.unsafe.types.UTF8String
 
   case class SortedArrayJaccard(left: Expression, right: Expression)
       extends BinaryExpression {
@@ -507,7 +506,7 @@ object SketchExpressions {
   import org.apache.spark.sql.catalyst.expressions.UnaryExpression
   import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
   import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-  import org.apache.spark.sql.types.{LongType, StringType}
+  import org.apache.spark.sql.types.LongType
 
   private val Prime = 4294967311L // smallest prime > 2^32
 

@@ -2,7 +2,12 @@ package graft.sources
 
 import java.nio.charset.Charset
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.functions.{col, from_csv}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import scala.util.matching.Regex
 
@@ -14,9 +19,11 @@ import scala.util.matching.Regex
   *
   * Ordering constraint (SURVEY.md §7.4): repair must run on decoded
   * lines *before* CSV parsing, so the dirty-source path is
-  * bytes → charset decode → lines → repair → `spark.read.csv(Dataset[String])`.
+  * bytes → charset decode → lines → repair → `from_csv` ([[parseLines]]).
   * Clean sources skip the line detour and use the one-shot
   * `spark.read.csv(path)` so Catalyst keeps pushdown on the scan.
+  * Either way the header is read on the driver and the schema built
+  * from it ([[headerSchema]]), so loading a file plans without a job.
   *
   * All columns load as StringType (`inferSchema=false`) reproducing the
   * reference's all-TEXT semantics; typing happens downstream in
@@ -73,26 +80,56 @@ object RawTable {
     (if (dot >= 0) base.substring(0, dot) else base).toLowerCase
   }
 
+  /** Parser options shared by the header tokenizer, `from_csv` and the
+    * clean-path reader. */
+  private def csvOptions(spec: SourceSpec): Map[String, String] = Map(
+    "sep" -> spec.sep,
+    "mode" -> "PERMISSIVE",
+    // empty quote char = quote-blind parse (sqlite .mode tabs fidelity)
+    "quote" -> (if (spec.quoted) "\"" else ""))
+
+  /** The all-string schema Spark's CSV reader infers from a header line
+    * with `inferSchema=false`, built on the driver without a job: the
+    * line tokenized with the spec's parser settings, then named by
+    * `CSVUtils.makeSafeHeader` (an empty name becomes `_c<i>`, a
+    * duplicate gets its position appended). */
+  private def headerSchema(spark: SparkSession, header: String, spec: SourceSpec): StructType = {
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(csvOptions(spec) + ("header" -> "true"),
+      true, conf.sessionLocalTimeZone)
+    Option(new CsvParser(options.asParserSettings).parseLine(header)).fold(new StructType()) {
+      tokens => StructType(CSVUtils.makeSafeHeader(tokens, conf.caseSensitiveAnalysis, options)
+        .map(StructField(_, StringType)).toIndexedSeq)
+    }
+  }
+
   /** Parse header-first delimited lines into an all-string DataFrame,
     * optionally repairing each line first. Used for the dirty path where
-    * parsing can't be a one-shot file scan. */
-  def parseLines(spark: SparkSession, lines: Dataset[String],
-                 spec: SourceSpec): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val repaired: Dataset[String] =
-      if (spec.repair) {
-        import spark.implicits._
-        lines.select(TextRepair.repairLine(col("value")).as("value")).as[String]
-      } else lines
-    val parsed = spark.read
-      .option("header", "true")
-      .option("sep", spec.sep)
-      .option("inferSchema", "false")
-      .option("mode", "PERMISSIVE")
-      // empty quote char = quote-blind parse (sqlite .mode tabs fidelity)
-      .option("quote", if (spec.quoted) "\"" else "")
-      .csv(repaired)
-    TextRepair.normalizeHeader(parsed)
+    * parsing can't be a one-shot file scan. `header` is the first
+    * non-blank line of `lines` as read on the driver (e.g.
+    * [[ZipSource.header]]); None means `lines` holds no non-blank line.
+    *
+    * Same rows as `spark.read.option("header", "true").csv(lines)`,
+    * without its jobs: the header is repaired like every line, lines
+    * that are blank by Java `trim` (as `CSVUtils.filterCommentAndEmpty`
+    * drops them in a file scan) or equal to the header are dropped, and
+    * the rest go through `from_csv` with the header's schema. The drop
+    * is a typed filter: a column filter would be pushed below the repair
+    * projection and re-evaluate the repair chain per reference. */
+  def parseLines(spark: SparkSession, lines: Dataset[String], header: Option[String],
+                 spec: SourceSpec): DataFrame = header match {
+    case None => spark.emptyDataFrame
+    case Some(raw) =>
+      import spark.implicits._
+      val h = if (spec.repair) TextRepair.repairString(raw) else raw
+      val repaired: Dataset[String] =
+        if (spec.repair) lines.select(TextRepair.repairLine(col("value")).as("value")).as[String]
+        else lines
+      val data = repaired.filter((l: String) => PathTasks.nonBlank(l) && l != h)
+      val parsed = data
+        .select(from_csv(col("value"), headerSchema(spark, h, spec), csvOptions(spec)).as("row"))
+        .select("row.*")
+      TextRepair.normalizeHeader(parsed)
   }
 
   /** Clean-path read with explicit malformed-row capture (the O4
@@ -100,50 +137,53 @@ object RawTable {
     * parse land whole in `_corrupt_line` instead of being silently
     * nulled or aborting the job — auditable bad-row sink at scale. */
   def readCleanAudited(spark: SparkSession, path: String, spec: SourceSpec,
-                       schema: org.apache.spark.sql.types.StructType): DataFrame =
+                       schema: StructType): DataFrame =
     spark.read
+      .options(csvOptions(spec))
       .option("header", "true")
-      .option("sep", spec.sep)
       .option("encoding", spec.encoding)
-      .option("mode", "PERMISSIVE")
-      .option("quote", if (spec.quoted) "\"" else "")
       .option("columnNameOfCorruptRecord", "_corrupt_line")
       .schema(schema.add("_corrupt_line", "string"))
       .csv(path)
 
   /** Clean-path read: one-shot file scan with reader options (keeps the
-    * scan a single FileSourceScanExec with pushdown). */
-  def readClean(spark: SparkSession, path: String, spec: SourceSpec): DataFrame = {
-    val parsed = spark.read
-      .option("header", "true")
-      .option("sep", spec.sep)
-      .option("encoding", spec.encoding)
-      .option("inferSchema", "false")
-      .option("mode", "PERMISSIVE")
-      .option("quote", if (spec.quoted) "\"" else "")
-      .csv(path)
-    TextRepair.normalizeHeader(parsed)
+    * scan a single FileSourceScanExec with pushdown) and the schema of
+    * `header`, the file's first non-blank line read on the driver
+    * ([[ZipSource.textHeader]]), so the reader infers nothing. */
+  def readClean(spark: SparkSession, path: String, header: Option[String],
+                spec: SourceSpec): DataFrame = header match {
+    case None => spark.emptyDataFrame
+    case Some(h) =>
+      val parsed = spark.read
+        .options(csvOptions(spec))
+        .option("header", "true")
+        .option("encoding", spec.encoding)
+        .schema(headerSchema(spark, h, spec))
+        .csv(path)
+      TextRepair.normalizeHeader(parsed)
   }
 
   /** Full per-file load honoring the dispatch spec: zip/charset/repair
     * path for dirty or compressed sources, one-shot scan otherwise, plus
     * load-time extra null columns (reference D1 `ALTER TABLE … ADD
-    * COLUMN email`). Returns (tableName, all-string DataFrame). */
+    * COLUMN email`). Returns (tableName, all-string DataFrame). Every
+    * branch reads its header on the driver and launches no job. */
   def load(spark: SparkSession, path: String,
            registry: Seq[(Regex, SourceSpec)] = referenceDispatch): (String, DataFrame) = {
     val fileName = path.substring(path.lastIndexOf('/') + 1)
     val spec = dispatch(fileName, registry)
+    val charset = Charset.forName(spec.encoding)
+    val paths = Seq(path)
     val base =
-      if (spec.zipped) {
-        val lines = ZipSource.lines(spark, Seq(path), Charset.forName(spec.encoding))
-        parseLines(spark, lines, spec)
-      } else if (spec.repair) {
+      if (spec.zipped)
+        parseLines(spark, ZipSource.lines(spark, paths, charset),
+          ZipSource.header(spark, paths, charset), spec)
+      else if (spec.repair)
         // NOT spark.read.text: the text source is UTF-8 only (it
         // ignores encoding options), and repair must see decoded lines.
-        val lines = ZipSource.textLines(spark, Seq(path),
-          Charset.forName(spec.encoding))
-        parseLines(spark, lines, spec)
-      } else readClean(spark, path, spec)
+        parseLines(spark, ZipSource.textLines(spark, paths, charset),
+          ZipSource.textHeader(spark, paths, charset), spec)
+      else readClean(spark, path, ZipSource.textHeader(spark, paths, charset), spec)
     val withExtras = spec.extraNullColumns.foldLeft(base) { (df, c) =>
       graft.operators.Components.withNullColumn(df, c)
     }

@@ -6,7 +6,7 @@ import java.util.zip.GZIPInputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** POSIX ustar (tar) ingestion — the archive format crawl dumps and
   * dataset distributions actually ship in (WebDataset shards, raw
@@ -14,7 +14,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * path. Same design points: tar is not splittable, so one task owns
   * one archive and streams
   * `FSDataInputStream → (GZIPInputStream) → header walk → lines` at
-  * constant memory; callers repartition after parse.
+  * constant memory, each archive its own partition with no shuffle
+  * ([[PathTasks]]); callers repartition after parse.
   *
   * The header walk is hand-written from the ustar layout (IEEE 1003.1:
   * 512-byte blocks; name at 0..99 NUL-terminated, size as octal at
@@ -37,7 +38,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * by the JDK inflater.
   *
   * Stream lifetime: the archive input stream closes at EOF on the
-  * happy path, and a task-completion listener closes it regardless —
+  * happy path, and a task-completion listener
+  * ([[PathTasks.closeOnTaskEnd]]) closes it regardless —
   * a downstream `limit`/take that abandons the iterator mid-archive
   * must not leak the FSDataInputStream for the executor's lifetime
   * (the Deflater-cleanup precedent in TextAnalysis.compressionRatios;
@@ -53,32 +55,24 @@ object TarSource {
 
   def lines(spark: SparkSession, paths: Seq[String], charset: Charset)
       : Dataset[String] = {
-    import spark.implicits._
-    val serConf = spark.sparkContext.broadcast {
-      val it = spark.sparkContext.hadoopConfiguration.iterator()
-      val m = scala.collection.mutable.Map[String, String]()
-      while (it.hasNext) { val e = it.next(); m(e.getKey) = e.getValue }
-      m.toMap
-    }
-    val charsetName = charset.name()
-    spark.createDataset(paths)
-      .repartition(paths.size)
-      .mapPartitions { pathIt =>
-        val cs = Charset.forName(charsetName)
-        val conf = new Configuration(false)
-        serConf.value.foreach { case (k, v) => conf.set(k, v) }
-        pathIt.flatMap { p =>
-          val hPath = new Path(p)
-          val fs = hPath.getFileSystem(conf)
-          val raw: InputStream = ArchiveStreamAudit.wrap(
-            if (p.endsWith(".gz") || p.endsWith(".tgz"))
-              new GZIPInputStream(fs.open(hPath))
-            else fs.open(hPath))
-          closeOnTaskEnd(raw)
-          memberLines(raw, cs, p)
-        }
-      }
+    val charsetName = charset.name() // Charset itself is not serializable
+    spark.createDataset(PathTasks.flatMap(spark, paths) { (p, conf) =>
+      val raw = open(p, conf)
+      PathTasks.closeOnTaskEnd(raw)
+      memberLines(raw, Charset.forName(charsetName), p)
+    })(Encoders.STRING)
   }
+
+  /** The first non-blank line [[lines]] yields for these archives, read
+    * on the driver from the same member walk: the header of the table
+    * they hold. */
+  def header(spark: SparkSession, paths: Seq[String], charset: Charset)
+      : Option[String] =
+    PathTasks.firstLine(spark, paths) { (p, conf) =>
+      val raw = open(p, conf)
+      try memberLines(raw, charset, p) -> raw
+      catch { case e: Throwable => raw.close(); throw e }
+    }
 
   /** Binary members of each archive as (archive, name, content) rows —
     * the WebDataset shape (image/audio/text files tar'd into shards)
@@ -98,43 +92,22 @@ object TarSource {
     require(maxMemberBytes <= Int.MaxValue,
       s"maxMemberBytes $maxMemberBytes exceeds Int.MaxValue — a tar " +
         "member materializes as one JVM byte array, which is int-indexed")
-    val serConf = spark.sparkContext.broadcast {
-      val it = spark.sparkContext.hadoopConfiguration.iterator()
-      val m = scala.collection.mutable.Map[String, String]()
-      while (it.hasNext) { val e = it.next(); m(e.getKey) = e.getValue }
-      m.toMap
-    }
-    spark.createDataset(paths)
-      .repartition(paths.size)
-      .mapPartitions { pathIt =>
-        val conf = new Configuration(false)
-        serConf.value.foreach { case (k, v) => conf.set(k, v) }
-        pathIt.flatMap { p =>
-          val hPath = new Path(p)
-          val fs = hPath.getFileSystem(conf)
-          val raw: InputStream = ArchiveStreamAudit.wrap(
-            if (p.endsWith(".gz") || p.endsWith(".tgz"))
-              new GZIPInputStream(fs.open(hPath))
-            else fs.open(hPath))
-          closeOnTaskEnd(raw)
-          memberBytes(raw, p, maxMemberBytes).map { case (n, b) =>
-            (p, n, b)
-          }
-        }
-      }
-      .toDF("archive", "name", "content")
+    spark.createDataset(PathTasks.flatMap(spark, paths) { (p, conf) =>
+      val raw = open(p, conf)
+      PathTasks.closeOnTaskEnd(raw)
+      memberBytes(raw, p, maxMemberBytes).map { case (n, b) => (p, n, b) }
+    }).toDF("archive", "name", "content")
   }
 
-  /** Close the archive stream when the TASK completes, not only at
-    * EOF: a downstream limit/take may abandon the member iterator
-    * mid-archive, and the EOF-close alone would then leak the open
-    * FSDataInputStream until executor shutdown. close() is idempotent
-    * so the happy-path EOF close composes safely. */
-  private def closeOnTaskEnd(in: InputStream): Unit =
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit] { _ =>
-        try in.close() catch { case _: java.io.IOException => () }
-      })
+  /** An archive's byte stream, gunzipped when the extension says so. */
+  private def open(p: String, conf: Configuration): InputStream = {
+    val hPath = new Path(p)
+    val fs = hPath.getFileSystem(conf)
+    ArchiveStreamAudit.wrap(
+      if (p.endsWith(".gz") || p.endsWith(".tgz"))
+        new GZIPInputStream(fs.open(hPath))
+      else fs.open(hPath))
+  }
 
   /** Iterator over (name, content) of all regular members. The framing
     * walk mirrors [[memberLines]]; kept separate because this path

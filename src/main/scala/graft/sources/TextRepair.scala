@@ -27,19 +27,28 @@ import org.apache.spark.sql.functions._
   * bytes → charset → lines → repair → parse ordering.
   */
 object TextRepair {
+  private val U1 = """ ("[^",]*)"""" -> " \"$1\"\""
+  private val U2 = """([A-Z])"([A-Z])""" -> "$1'$2"
+
   /** U1: double a stray interior closing quote — and, faithfully to the
     * reference sed (whose group captures the opening quote and whose
     * replacement re-adds one), the opening quote as well. */
   def escapeInteriorQuote(line: Column): Column =
-    regexp_replace(line, """ ("[^",]*)"""", " \"$1\"\"")
+    regexp_replace(line, U1._1, U1._2)
 
   /** U2: quote between capitals is an apostrophe-typo; fix it. */
   def quoteBetweenCapitals(line: Column): Column =
-    regexp_replace(line, """([A-Z])"([A-Z])""", "$1'$2")
+    regexp_replace(line, U2._1, U2._2)
 
   /** Full quotequote repair, in sed order. */
   def repairLine(line: Column): Column =
     quoteBetweenCapitals(escapeInteriorQuote(line))
+
+  /** [[repairLine]] on one driver-side string, e.g. a header line:
+    * `regexp_replace` is `java.util.regex` `replaceAll` with the same
+    * patterns and replacements. */
+  def repairString(line: String): String =
+    Seq(U1, U2).foldLeft(line) { case (l, (re, rep)) => l.replaceAll(re, rep) }
 
   /** U3+U4 header normalization for a single column name. */
   def normalizeName(name: String): String =

@@ -1,12 +1,12 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.{BufferedReader, Closeable, InputStreamReader}
 import java.nio.charset.Charset
 import java.util.zip.ZipInputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Zip ingestion (reference S4: `unzip -p $file` piped into `.import`,
   * `bin/fetcher.bash:96,120`).
@@ -22,25 +22,14 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    line — the Spark analog of the reference's
   *    `unzip -p | iconv | …` Unix pipe, with the charset decode fused
   *    into the reader.
-  *  - **Repartition after decode**: downstream parallelism must not be
-  *    limited by archive count, so callers should `repartition` the
-  *    parsed result before wide ops (the parse in [[RawTable.parseLines]]
-  *    redistributes naturally on first shuffle).
+  *  - **No job to plan**: `parallelize(paths, paths.size)` gives each
+  *    archive its own partition without a shuffle, and the header the
+  *    parse needs is read on the driver ([[header]], [[textHeader]])
+  *    from the same line iterator the tasks stream, so building a
+  *    loaded frame runs nothing. Downstream parallelism is one task per
+  *    archive until the first shuffle of the parsed result.
   */
 object ZipSource {
-
-  /** Close the underlying stream when the TASK completes, not only at
-    * EOF: a downstream limit/take can abandon the line iterator before
-    * exhaustion, and the on-exhaustion close alone would then leak the
-    * open FSDataInputStream (and the zip inflater's native buffer) for
-    * the executor's lifetime — the Deflater-cleanup precedent in
-    * TextAnalysis.compressionRatios. close() is idempotent, so the
-    * happy-path EOF close composes safely. */
-  private def closeOnTaskEnd(c: java.io.Closeable): Unit =
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit] { _ =>
-        try c.close() catch { case _: java.io.IOException => () }
-      })
 
   /** All text lines of every entry of each archive, decoded with the
     * given charset. One input partition per archive (zip is not
@@ -58,68 +47,69 @@ object ZipSource {
   def textLines(spark: SparkSession, paths: Seq[String], charset: Charset): Dataset[String] =
     charsetLines(spark, paths, charset, zipped = false)
 
+  /** The first non-blank line [[lines]] yields for these archives, read
+    * on the driver: the header of the table they hold. */
+  def header(spark: SparkSession, paths: Seq[String], charset: Charset): Option[String] =
+    PathTasks.firstLine(spark, paths)(open(_, _, charset, zipped = true))
+
+  /** The first non-blank line [[textLines]] yields, read on the driver. */
+  def textHeader(spark: SparkSession, paths: Seq[String], charset: Charset): Option[String] =
+    PathTasks.firstLine(spark, paths)(open(_, _, charset, zipped = false))
+
   private def charsetLines(spark: SparkSession, paths: Seq[String],
                            charset: Charset, zipped: Boolean): Dataset[String] = {
-    import spark.implicits._
-    val serConf = spark.sparkContext.broadcast(
-      spark.sparkContext.hadoopConfiguration.iterator() match {
-        case it =>
-          val m = scala.collection.mutable.Map[String, String]()
-          while (it.hasNext) { val e = it.next(); m(e.getKey) = e.getValue }
-          m.toMap
-      })
     val charsetName = charset.name() // Charset itself is not serializable
-    spark.createDataset(paths)
-      .repartition(paths.size)
-      .mapPartitions { pathIt =>
-        val cs = Charset.forName(charsetName)
-        val conf = new Configuration(false)
-        serConf.value.foreach { case (k, v) => conf.set(k, v) }
-        pathIt.flatMap { p =>
-          val hPath = new Path(p)
-          val fs = hPath.getFileSystem(conf)
-          if (!zipped) {
-            val reader = new BufferedReader(new InputStreamReader(
-              ArchiveStreamAudit.wrap(fs.open(hPath)), cs))
-            closeOnTaskEnd(reader)
-            new Iterator[String] {
-              private var nextLine: String = reader.readLine()
-              def hasNext: Boolean = nextLine != null
-              def next(): String = {
-                val l = nextLine
-                nextLine = reader.readLine()
-                if (nextLine == null) reader.close()
-                l
-              }
-            }
-          } else {
-          val zin = new ZipInputStream(ArchiveStreamAudit.wrap(fs.open(hPath)))
-          closeOnTaskEnd(zin)
-          // Iterator over all lines of all entries, streaming.
-          new Iterator[String] {
-            private var reader: BufferedReader = _
-            private var nextLine: String = advance()
-            private def advance(): String = {
-              while (true) {
-                if (reader != null) {
-                  val l = reader.readLine()
-                  if (l != null) return l
-                  reader = null
-                }
-                val entry = zin.getNextEntry
-                if (entry == null) { zin.close(); return null }
-                if (!entry.isDirectory)
-                  reader = new BufferedReader(new InputStreamReader(zin, cs))
-              }
-              null
-            }
-            def hasNext: Boolean = nextLine != null
-            def next(): String = {
-              val l = nextLine; nextLine = advance(); l
-            }
-          }
-          }
+    spark.createDataset(PathTasks.flatMap(spark, paths) { (p, conf) =>
+      val (lines, stream) = open(p, conf, Charset.forName(charsetName), zipped)
+      PathTasks.closeOnTaskEnd(stream)
+      lines
+    })(Encoders.STRING)
+  }
+
+  /** One path's decoded lines, streaming, and the stream to close. The
+    * iterator closes it at EOF; a reader that stops early closes it, and
+    * a failure to read the first line closes it here. */
+  private def open(p: String, conf: Configuration, cs: Charset,
+                   zipped: Boolean): (Iterator[String], Closeable) = {
+    val hPath = new Path(p)
+    val in = ArchiveStreamAudit.wrap(hPath.getFileSystem(conf).open(hPath))
+    try if (!zipped) {
+      val reader = new BufferedReader(new InputStreamReader(in, cs))
+      new Iterator[String] {
+        private var nextLine: String = reader.readLine()
+        def hasNext: Boolean = nextLine != null
+        def next(): String = {
+          val l = nextLine
+          nextLine = reader.readLine()
+          if (nextLine == null) reader.close()
+          l
         }
-      }
+      } -> reader
+    } else {
+      val zin = new ZipInputStream(in)
+      // Iterator over all lines of all entries, streaming.
+      new Iterator[String] {
+        private var reader: BufferedReader = _
+        private var nextLine: String = advance()
+        private def advance(): String = {
+          while (true) {
+            if (reader != null) {
+              val l = reader.readLine()
+              if (l != null) return l
+              reader = null
+            }
+            val entry = zin.getNextEntry
+            if (entry == null) { zin.close(); return null }
+            if (!entry.isDirectory)
+              reader = new BufferedReader(new InputStreamReader(zin, cs))
+          }
+          null
+        }
+        def hasNext: Boolean = nextLine != null
+        def next(): String = {
+          val l = nextLine; nextLine = advance(); l
+        }
+      } -> zin
+    } catch { case e: Throwable => in.close(); throw e }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 class Bm25Spec extends SparkSpec {
   import spark.implicits._
 

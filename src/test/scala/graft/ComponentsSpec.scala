@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.col
 import graft.operators.Components
 
 class ComponentsSpec extends SparkSpec {

@@ -83,7 +83,6 @@ class DenoiseSpec extends SparkSpec {
   }
 
   test("mlmMask: labels recover originals, unselected positions untouched, 80/10/10 holds") {
-    import spark.implicits._
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val merges = Bpe.trainMerges(docs, "text", rounds = 3)
       .orderBy("round").collect()

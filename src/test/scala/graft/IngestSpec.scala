@@ -304,4 +304,214 @@ class IngestSpec extends SparkSpec {
     val dClose = graft.sources.ArchiveStreamAudit.closed.get() - c0
     assert(dOpen >= 2 && dClose == dOpen, s"opened $dOpen closed $dClose")
   }
+
+  /** A zip of (entry name, bytes) entries, in order. */
+  private def writeZipEntries(dir: Path, name: String,
+                              entries: Seq[(String, Array[Byte])]): String = {
+    val f = dir.resolve(name).toFile
+    val zos = new ZipOutputStream(new FileOutputStream(f))
+    entries.foreach { case (e, b) =>
+      zos.putNextEntry(new ZipEntry(e)); zos.write(b); zos.closeEntry()
+    }
+    zos.close()
+    f.getAbsolutePath
+  }
+
+  test("building RawTable.load for a zipped, a repaired plain and a clean " +
+      "file, and the tar parse, launches no Spark job") {
+    val dir = Files.createTempDirectory("graft_nojob")
+    val zipped = writeZip(dir, "VR_Snapshot_20240101.zip",
+      "County ID\tLast Name\n32\tO\"BRIEN\n11\tSMITH\n", StandardCharsets.UTF_16)
+    val plain = dir.resolve("Candidate_Listing_2024.csv")
+    Files.write(plain, "Name,Office\nO\"HARA,Judge\n"
+      .getBytes(StandardCharsets.ISO_8859_1))
+    val clean = dir.resolve("clean.tsv")
+    Files.write(clean, "Id\tCity Name\n1\tRaleigh\n".getBytes(StandardCharsets.UTF_8))
+    graft.sources.TarFixture.ensure()
+    val tar = Seq(graft.sources.TarFixture.tarGzPath)
+    val utf16 = Charset.forName("UTF-16")
+    var frames = Seq.empty[org.apache.spark.sql.DataFrame]
+    val jobs = jobsDuring {
+      frames = Seq(zipped, plain.toString, clean.toString)
+        .map(RawTable.load(spark, _)._2) :+
+        RawTable.parseLines(spark, graft.sources.TarSource.lines(spark, tar, utf16),
+          graft.sources.TarSource.header(spark, tar, utf16),
+          graft.sources.SourceSpec(encoding = "UTF-16", repair = true))
+    }
+    assert(jobs == 0, s"building the frames launched $jobs jobs")
+    assert(frames.map(_.columns.toSeq) == Seq(Seq("county_id", "last_name"),
+      Seq("name", "office", "email"), Seq("id", "city_name"),
+      Seq("county_id", "last_name", "note")))
+    assert(frames.map(_.count()) == Seq(2L, 1L, 1L, 4L))
+  }
+
+  test("ZipSource and TarSource read each path in its own partition, in " +
+      "path order, with no exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val dir = Files.createTempDirectory("graft_spread")
+    val zips = (0 until 3).map(i => writeZip(dir, s"z$i.zip", s"h\nzip$i\n",
+      StandardCharsets.UTF_8))
+    val tars = (0 until 3).map { i =>
+      val out = new ByteArrayOutputStream()
+      out.write(graft.sources.TarFixture.member(s"m$i.txt",
+        s"h\ntar$i\n".getBytes(StandardCharsets.UTF_8)))
+      out.write(new Array[Byte](1024))
+      val p = dir.resolve(s"t$i.tar"); Files.write(p, out.toByteArray); p.toString
+    }
+    val frames = Seq(
+      ZipSource.lines(spark, zips, StandardCharsets.UTF_8).toDF("value"),
+      graft.sources.TarSource.lines(spark, tars, StandardCharsets.UTF_8).toDF("value"),
+      graft.sources.TarSource.members(spark, tars).select(col("archive").as("value")))
+    frames.zip(Seq("zip", "tar", "t")).foreach { case (df, tag) =>
+      assert(df.queryExecution.executedPlan.collect {
+        case e: ShuffleExchangeExec => e }.isEmpty, df.queryExecution.executedPlan)
+      val byPart = df.select(spark_partition_id(), col("value")).collect()
+        .filter(_.getString(1).contains(tag))
+        .map(r => r.getInt(0) -> r.getString(1)).toSeq
+      assert(byPart.map(_._1) == Seq(0, 1, 2), byPart)
+      assert(byPart.map(_._2).zipWithIndex.forall { case (v, i) => v.contains(s"$tag$i") },
+        byPart)
+    }
+  }
+
+  /** The load path this change replaced, kept only as the reference:
+    * header discovery and parse by `DataFrameReader.csv(Dataset[String])`
+    * over the same decoded lines. */
+  private def referenceLoad(path: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val spec = RawTable.dispatch(path.substring(path.lastIndexOf('/') + 1))
+    val cs = Charset.forName(spec.encoding)
+    val lines =
+      if (spec.zipped) ZipSource.lines(spark, Seq(path), cs)
+      else if (spec.repair) ZipSource.textLines(spark, Seq(path), cs)
+      else null
+    val parsed =
+      if (lines == null)
+        spark.read.option("header", "true").option("sep", spec.sep)
+          .option("encoding", spec.encoding).option("inferSchema", "false")
+          .option("mode", "PERMISSIVE").option("quote", if (spec.quoted) "\"" else "")
+          .csv(path)
+      else {
+        val repaired =
+          if (spec.repair)
+            lines.select(graft.sources.TextRepair.repairLine(col("value")).as("value")).as[String]
+          else lines
+        referenceParse(repaired, spec)
+      }
+    spec.extraNullColumns.foldLeft(graft.sources.TextRepair.normalizeHeader(parsed)) {
+      (df, c) => graft.operators.Components.withNullColumn(df, c)
+    }
+  }
+
+  private def referenceParse(lines: org.apache.spark.sql.Dataset[String],
+                             spec: graft.sources.SourceSpec) =
+    spark.read.option("header", "true").option("sep", spec.sep)
+      .option("inferSchema", "false").option("mode", "PERMISSIVE")
+      .option("quote", if (spec.quoted) "\"" else "")
+      .csv(lines)
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Option[Any]]] =
+    df.collect().toSeq.map(_.toSeq.map(Option(_))).sortBy(_.toString)
+
+  test("differential: RawTable.load equals the DataFrameReader.csv(Dataset) " +
+      "parse on blank lines, repeated headers, odd header names, ragged " +
+      "rows, quoted separators, BOMs, header-only and empty archives") {
+    val dir = Files.createTempDirectory("graft_diff")
+    val u16 = StandardCharsets.UTF_16
+    val l1 = StandardCharsets.ISO_8859_1
+    def utf16le(s: String): Array[Byte] =
+      Array(0xFF.toByte, 0xFE.toByte) ++ s.getBytes(StandardCharsets.UTF_16LE)
+    val header = "County ID\tLast Name\tNote"
+    val cases: Seq[(String, String)] = Seq(
+      "blank lines" -> writeZip(dir, "VR_Snapshot_20240101.zip",
+        s"\n\n$header\n\n1\tO\"BRIEN\tx\n   \n\n2\tSMITH\the is \"5' 10\" tall\n\n", u16),
+      "header repeated mid-file and in a second entry" ->
+        writeZipEntries(dir, "VR_Snapshot_20240102.zip", Seq(
+          "a.txt" -> s"$header\n1\tA\tx\n$header\n2\tB\ty\n".getBytes(u16),
+          "b.txt" -> s"$header\n3\tC\tz\n".getBytes(u16))),
+      "UTF-16LE BOM per entry, directory entry between" ->
+        writeZipEntries(dir, "VR_Snapshot_20240103.zip", Seq(
+          "a.txt" -> utf16le(s"$header\n1\tMÜLLER\tcafé\n"),
+          "d/" -> Array.emptyByteArray,
+          "b.txt" -> utf16le("2\tJONES\tsecond\n"))),
+      "duplicate and empty header names" -> writeZip(dir,
+        "VR_Snapshot_20240104.zip",
+        "Name\tname\t\tB b\tb_b\tName\n1\t2\t3\t4\t5\t6\n", u16),
+      "short and long rows" -> writeZip(dir, "VR_Snapshot_20240105.zip",
+        s"$header\n1\n2\tB\n3\tC\tz\textra\tmore\n", u16),
+      "header-only file" -> writeZip(dir, "VR_Snapshot_20240106.zip",
+        s"$header\n", u16),
+      "empty archive" -> writeZipEntries(dir, "VR_Snapshot_20240107.zip", Nil),
+      "blank-only entry" -> writeZip(dir, "VR_Snapshot_20240108.zip",
+        "\n  \n\n", u16),
+      "LATIN1 clean zip, quote-blind" -> writeZip(dir, "ncvoter_Statewide.zip",
+        "Voter Id\tNote\n1\t\"quoted, kept\"\n2\tJOSÉ\n", l1),
+      "quoted CSV with embedded separators, repaired plain file" -> {
+        val f = dir.resolve("Candidate_Listing_2024.csv")
+        Files.write(f, ("\"Name\",\"Office\",Note\n\"SMITH, JOHN\",\"Judge, Dist 2\"," +
+          "O\"HARA\n\n\"SHORT\"\n\"A\",\"B\",\"C\",\"D\"\n\"Name\",\"Office\",Note\n")
+          .getBytes(l1))
+        f.toString
+      },
+      "clean plain file" -> {
+        val f = dir.resolve("clean.tsv")
+        Files.write(f, s"\n$header\n1\tA\n\n2\tB\tz\tw\n   \n"
+          .getBytes(StandardCharsets.UTF_8))
+        f.toString
+      })
+    cases.foreach { case (name, path) =>
+      val (_, got) = RawTable.load(spark, path)
+      val want = referenceLoad(path)
+      assert(got.schema == want.schema, s"$name: ${got.schema} != ${want.schema}")
+      assert(rowsOf(got) == rowsOf(want), s"$name")
+    }
+    // the cases are not vacuous
+    assert(RawTable.load(spark, cases(1)._2)._2.count() == 3L)
+    assert(RawTable.load(spark, cases(3)._2)._2.columns.toSeq ==
+      Seq("name0", "name1", "_c2", "b_b", "b_b", "name5"))
+    assert(RawTable.load(spark, cases(6)._2)._2.columns.isEmpty)
+  }
+
+  test("differential: a tab-only line is blank by Java trim, as a file " +
+      "scan drops it; the Dataset reader's SQL trim kept it as a null row") {
+    import spark.implicits._
+    val text = "a\tb\n1\t2\n\t\n \t \n3\t4\n"
+    val dir = Files.createTempDirectory("graft_tabs")
+    val zipped = writeZip(dir, "VR_Snapshot_20240101.zip", text, StandardCharsets.UTF_16)
+    val clean = dir.resolve("clean.tsv")
+    Files.write(clean, text.getBytes(StandardCharsets.UTF_8))
+    val want = Seq(Seq(Some("1"), Some("2")), Seq(Some("3"), Some("4")))
+    assert(rowsOf(RawTable.load(spark, zipped)._2) == want)
+    assert(rowsOf(spark.read.option("header", "true").option("sep", "\t")
+      .csv(clean.toString)) == want)
+    val lines = text.split("\n", -1).toSeq.init
+    val spec = graft.sources.SourceSpec()
+    assert(rowsOf(referenceParse(lines.toDS(), spec)) ==
+      (want :+ Seq(None, None) :+ Seq(Some(" "), Some(" "))).sortBy(_.toString))
+    assert(rowsOf(referenceParse(lines.filter(_.trim.nonEmpty).toDS(), spec)) == want)
+  }
+
+  test("a component table's optimized and physical plans evaluate the " +
+      "repair chain once per line") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    val bucket = graft.sources.PipelineFixture.ensure()
+    val r = graft.operators.Pipeline.run(spark,
+      graft.core.Config.parse(graft.sources.PipelineFixture.configYaml),
+      "cycle_t", Map("bucket1" -> bucket))
+    def count(plan: org.apache.spark.sql.catalyst.plans.QueryPlan[_]): Int =
+      plan.collect { case n: org.apache.spark.sql.catalyst.plans.QueryPlan[_] =>
+        n.expressions.map(_.collect { case e: RegExpReplace => e }.size).sum
+      }.sum
+    // one repaired source (the VR snapshot), two regexp_replace per chain
+    val vr = r.tables("vr_snapshot_20240601")
+    assert(count(vr.queryExecution.optimizedPlan) == 2, vr.queryExecution.optimizedPlan)
+    assert(r.components.nonEmpty)
+    r.components.foreach { case (c, df) =>
+      val qe = df.queryExecution
+      assert(count(qe.optimizedPlan) == 2, s"$c\n${qe.optimizedPlan}")
+      assert(count(qe.sparkPlan) == 2, s"$c\n${qe.sparkPlan}")
+    }
+  }
 }

@@ -8,8 +8,6 @@ import graft.core.Catalog
   * skipping), and token shards must land within one document of the
   * budget. */
 class LayoutWriterSpec extends SparkSpec {
-  import spark.implicits._
-
   test("writeZOrdered: every file is a narrow rectangle of both dimensions") {
     val dir = java.nio.file.Files.createTempDirectory("zorder").toString
     val n = 1 << 14

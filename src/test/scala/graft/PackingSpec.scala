@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.col
 import graft.operators.Packing
 
 class PackingSpec extends SparkSpec {
@@ -39,7 +38,6 @@ class PackingSpec extends SparkSpec {
   }
 
   test("contextWindows: straddlers split, windows fill to budget, docs tile fully") {
-    import org.apache.spark.sql.functions._
     // one shard: offsets 0,300,600,900 over a 950-token corpus; budget
     // 512 → doc 2 straddles windows 0/1 at offset 512 (in-doc token
     // 212); window 1 is the ragged tail [512, 950)

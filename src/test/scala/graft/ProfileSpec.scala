@@ -50,7 +50,6 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("distributionDrift: zero PSI on identical data, positive on a shift, one-sided groups dropped") {
-    import org.apache.spark.sql.functions._
     val ref = (1 to 1000).map(i => ("web", (i % 100) / 100.0)) ++
       (1 to 500).map(i => ("code", (i % 50) / 50.0)) ++
       (1 to 100).map(i => ("refonly", i / 100.0))
@@ -87,7 +86,6 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("zipfFit: exact power law recovers its slope; degenerate input NULLs") {
-    import org.apache.spark.sql.functions._
     // freq(w_r) = 2^(10-r) for r = 1..8: ln f = 10 ln2 - r ln2, and
     // ln r vs r is not linear, so the fit is approximate - but a
     // STEEP monotone slope must come out strongly negative, and the
@@ -107,7 +105,6 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("heapsFit: recovers the exponent of an exactly power-law vocabulary") {
-    import org.apache.spark.sql.functions._
     // 100 docs; doc d contributes 10 tokens and introduces new words
     // so that after prefix p the vocab is ~C*(10p)^0.5: new words per
     // doc chosen as the integer increment of 4*sqrt(10*(d+1))
@@ -136,7 +133,6 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("lexicalDiversity: hand-computed panel on a tiny corpus") {
-    import org.apache.spark.sql.functions._
     // tokens: a a a b b c  -> N=6, V=3, f1={c}=1, f2={b}=1,
     // rep = 3·2 + 2·1 + 0 = 8 -> simpson 8/30 = 0.266667,
     // ttr 0.5, chao1 = 3 + 1·0/(2·2) = 3, gt = 1/6 = 0.166667
@@ -152,7 +148,6 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("wordDispersion: hand-computed DP; one-source burst scores high") {
-    import org.apache.spark.sql.functions._
     // A: "x x y y", B: "y y y y" — T=8, t_A=t_B=4.
     // x: num = |2·8−4·2| + |0·8−4·2| = 16, den = 2·2·8 → DP 0.5
     // y: num = |2·8−4·6| + |4·8−4·6| = 16, den = 2·6·8 → DP 1/6
@@ -169,7 +164,6 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("giniIndex: perfect equality 0, max concentration (n-1)/n, NULL guards") {
-    import org.apache.spark.sql.functions._
     val eq = (1L to 4L).map(i => (i, 7L)).toDF("id", "x")
     val a = operators.Profile.giniIndex(eq, "x", "id").collect().head
     assert(a.getLong(0) == 4 && a.getLong(1) == 28 && a.getDouble(2) == 0.0)

@@ -18,7 +18,7 @@ class PropertiesSpec extends SparkSpec {
   private val text = Gen.listOfN(8, word).map(_.mkString(" "))
   private val rows = Gen.listOfN(12, text)
 
-  private def samples[A](g: Gen[A], n: Int = 12): Seq[A] =
+  private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g(Gen.Parameters.default, Seed(i.toLong)))
 
   test("distinct is idempotent: distinct(distinct(x)) == distinct(x)") {

@@ -119,26 +119,6 @@ class SnapshotFileIndexSpec extends SparkSpec {
   private def pathsOf(root: String, entries: Seq[String]): Seq[String] =
     entries.map(e => s"$root/${e.split('\t').head}")
 
-  /** Jobs launched while `body` runs, counted by a listener between two
-    * listener-bus drains (so no earlier job leaks in and no job of
-    * `body`'s is still queued when the count is read). */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graftbridge.ListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.graftbridge.ListenerBus.drain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(l)
-  }
-
   test("building read, readVersion, scanPruned and scanPrunedBloom " +
       "frames launches no Spark job, with or without a live DV") {
     val root = freshRoot()

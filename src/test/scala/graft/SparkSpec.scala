@@ -26,4 +26,24 @@ object TestSession {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** Jobs launched while `body` runs, counted by a listener between two
+    * listener-bus drains (so no earlier job leaks in and no job of
+    * `body`'s is still queued when the count is read). */
+  protected def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.col
 import graft.functions.Subst
 
 class SubstSpec extends SparkSpec {

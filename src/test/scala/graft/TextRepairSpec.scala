@@ -37,4 +37,14 @@ class TextRepairSpec extends SparkSpec {
     val df = Seq(("1", "2")).toDF("County ID", "NCID")
     assert(TextRepair.normalizeHeader(df).columns.toSeq == Seq("county_id", "ncid"))
   }
+
+  test("repairString on the driver equals repairLine in a query") {
+    val lines = Seq("""name, "5' 10" tall",more""", """O"BRIEN""",
+      """x,O"NEAL, "6" exactly",y""", """a,"b,c",d""", """ "a" "b" A"B"C""",
+      "County ID\tLast Name", "", "  ", "\\1 $1 \"$\" Z\"Z")
+    val inQuery = lines.toDF("value")
+      .select(TextRepair.repairLine(col("value")).as("v"))
+      .collect().map(_.getString(0)).toSeq
+    assert(lines.map(TextRepair.repairString) == inQuery)
+  }
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Skew-guard property tests over synthetic hub-heavy / mega-cluster
