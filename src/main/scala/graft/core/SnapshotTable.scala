@@ -169,7 +169,7 @@ object SnapshotTable {
     * superset contract), because a saturated Bloom keeps everything
     * anyway and only bloats the manifest. */
   val DefaultBloomBits = 2048
-  private val BloomK = 4
+  private[graft] val BloomK = 4
 
   private def fsOf(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
@@ -361,7 +361,7 @@ object SnapshotTable {
   /** The k deterministic bit positions of `value` in an m-bit Bloom —
     * double hashing over the md5 halves, identical on writer and
     * prober by construction (no JVM hash seeds involved). */
-  private def bloomBitsOf(value: String, m: Int, k: Int): Seq[Int] = {
+  private[graft] def bloomBitsOf(value: String, m: Int, k: Int): Seq[Int] = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val bb = java.nio.ByteBuffer.wrap(d)
@@ -430,14 +430,18 @@ object SnapshotTable {
   def table(spark: SparkSession, root: String): DataFrame = read(spark, root)
 
   /** Write `df`'s parquet files under a fresh unreferenced data
-    * directory and return their manifest entries (root-relative path,
-    * plus recorded per-file min/max when `statsCols` is non-empty —
-    * ONE extra aggregation job over the just-written files, new data
-    * only, never the table). Stats are LONG-typed (`cast("long")`):
-    * ids, counts, epoch timestamps — the range-pruning cases; a
-    * non-castable column records null bounds and the file is simply
-    * never pruned on it. The nonce keeps concurrent committers (and a
-    * crash-then-retry) from colliding on a directory name. */
+    * directory and return their manifest entries: root-relative path,
+    * the recorded sections of `statsCols` (per-file long min/max),
+    * `categoryCols` (value sets) and `bloomCols` (Blooms of
+    * `bloomBits`), and the file size. Every section is gathered by a
+    * [[SectionStatsTracker]] in the ONE job that writes the files, so
+    * building them launches no job after the write. Stats are
+    * LONG-typed (`try_cast(c AS BIGINT)`): ids, counts, epoch
+    * timestamps — the range-pruning cases; a value that does not cast,
+    * or a column whose type `try_cast` cannot take to BIGINT (DATE),
+    * records null bounds and the file is simply never pruned on it. The
+    * nonce keeps concurrent committers (and a crash-then-retry) from
+    * colliding on a directory name. */
   private def writeDataFiles(spark: SparkSession, fs: FileSystem,
                              rootP: Path, df: DataFrame,
                              statsCols: Seq[String],
@@ -446,148 +450,76 @@ object SnapshotTable {
                              bloomBits: Int = DefaultBloomBits): Seq[String] = {
     require(bloomBits >= 64 && bloomBits % 8 == 0,
       s"bloomBits must be a multiple of 8 >= 64, got $bloomBits")
+    // the stats suffix is a text format (TAB, ',', '=', ':', '#', '~'
+    // and '|' are structural) — refuse names that would corrupt it
+    // rather than write an unparseable manifest; category VALUES are
+    // URL-encoded and bloom bits are base64-without-padding, so they
+    // carry anything
+    (statsCols ++ categoryCols ++ bloomCols).foreach(c => require(
+      c.matches("[A-Za-z0-9_]+"),
+      s"SnapshotTable stats/category/bloom column name '$c' is not " +
+        "[A-Za-z0-9_]+ — rename or alias before recording stats"))
+    val bloomCap = bloomBits / 8
+    val setCols = (categoryCols ++ bloomCols).distinct
     val nonce = java.util.UUID.randomUUID().toString.take(12)
     val staging = new Path(new Path(rootP, StagingDir), nonce)
-    val writer = bloomCols.foldLeft(
-      df.write.mode("overwrite").option("compression", "zstd")) {
-      // also enable parquet's OWN bloom filters inside the files: the
-      // manifest bloom prunes FILES before any scan, parquet's prunes
-      // row groups inside the kept ones — the same two-layer compose
-      // as scanPruned's manifest ranges + PushedFilters
-      (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
+    // also enable parquet's OWN bloom filters inside the files: the
+    // manifest bloom prunes FILES before any scan, parquet's prunes row
+    // groups inside the kept ones — the same two-layer compose as
+    // scanPruned's manifest ranges + PushedFilters
+    val options = Map("compression" -> "zstd") ++
+      bloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
+    val trackers = org.apache.spark.sql.graftbridge.FileWrites.parquet(
+        df, staging.toString, options) { output =>
+      if (statsCols.isEmpty && setCols.isEmpty) Nil
+      else {
+        val maxCap = math.max(if (categoryCols.nonEmpty) CategoryCap else 0,
+          if (bloomCols.nonEmpty) bloomCap else 0)
+        Seq(SectionStatsTracker(output, statsCols, setCols, maxCap,
+          spark.sessionState.conf))
+      }
     }
-    writer.parquet(staging.toString)
     val dataHome = new Path(new Path(rootP, DataDir), nonce)
     fs.mkdirs(dataHome.getParent)
     if (!fs.rename(staging, dataHome))
       sys.error(s"SnapshotTable: could not move staged data $staging " +
         s"into place at $dataHome")
-    val lenByRel: Map[String, Long] = fs.listStatus(dataHome)
+    // the size section is free (this listing returns every length) and
+    // always recorded — compaction planning and history's byte
+    // accounting then never sweep the filesystem
+    val lenByName: Map[String, Long] = fs.listStatus(dataHome)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => s"$DataDir/$nonce/${st.getPath.getName}" -> st.getLen)
+      .map(st => st.getPath.getName -> st.getLen)
       .toMap
-    val rels = lenByRel.keys.toSeq.sorted
-    // the size section is free (the listing above already returned
-    // every length) and always recorded — compaction planning and
-    // history's byte accounting then never sweep the filesystem
-    def sized(rel: String, sections: Seq[String]): String =
-      s"$rel\t${(sections :+ s"!${lenByRel(rel)}").mkString(",")}"
-    if (statsCols.isEmpty && categoryCols.isEmpty && bloomCols.isEmpty)
-      rels.map(sized(_, Nil))
-    else {
-      // the stats suffix is a text format (TAB, ',', '=', ':', '#',
-      // '~' and '|' are structural) — refuse names that would corrupt
-      // it rather than write an unparseable manifest; category VALUES
-      // are URL-encoded and bloom bits are base64-without-padding, so
-      // they carry anything
-      (statsCols ++ categoryCols ++ bloomCols).foreach(c => require(
-        c.matches("[A-Za-z0-9_]+"),
-        s"SnapshotTable stats/category/bloom column name '$c' is not " +
-          "[A-Za-z0-9_]+ — rename or alias before recording stats"))
-      import org.apache.spark.sql.functions._
-      val bloomCap = bloomBits / 8
-      val written = scan(spark, rootP, rels.map(sized(_, Nil)))
-      // job 1: per-file long min/max — constant-size aggregation
-      // state. try_cast, not cast: under ANSI (Spark's default) a
-      // malformed value in a statsCol would otherwise FAIL the whole
-      // commit, where the documented contract is "a non-castable
-      // column records null bounds and is simply never pruned"
-      val rangeByBase =
-        if (statsCols.isEmpty) Map.empty[String, org.apache.spark.sql.Row]
-        else {
-          val aggs = statsCols.flatMap(c => Seq(
-            min(expr(s"try_cast($c AS BIGINT)")).as(s"__mn_$c"),
-            max(expr(s"try_cast($c AS BIGINT)")).as(s"__mx_$c")))
-          written.groupBy(input_file_name().as("__f"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect()
-            .map(r => new Path(r.getString(0)).getName -> r).toMap
+    val stats = trackers.flatMap(_.byFile).toMap
+    lenByName.keys.toSeq.sorted.map { name =>
+      // a zero-row part file gets no sections: never pruned
+      // (superset contract)
+      val sections = stats.get(name).filter(_.rows > 0).toSeq.flatMap { f =>
+        val ranges = statsCols.zip(f.bounds).map { case (c, (mn, mx)) =>
+          s"$c=${mn.fold("")(_.toString)}:${mx.fold("")(_.toString)}"
         }
-      // job 2: per-(file, column) distinct VALUE SETS for category and
-      // bloom sections, EXECUTOR-BOUNDED: unpivot → distinct → rank →
-      // cap happens BEFORE any collect_set, so a genuinely high-
-      // cardinality column spills through the hash-distinct and the
-      // rank sort instead of accumulating its full per-file set in one
-      // aggregation buffer (a pre-round-15 slice() bounded only the
-      // driver transfer, not the executor-side accumulation — an
-      // ADVICE-flagged OOM risk). collect_set then sees at most
-      // maxCap+2 rows per group.
-      val setColNames = (categoryCols ++ bloomCols).distinct
-      val maxCap = math.max(if (categoryCols.nonEmpty) CategoryCap else 0,
-        if (bloomCols.nonEmpty) bloomCap else 0)
-      val setsByKey =
-        if (setColNames.isEmpty) Map.empty[(String, String), Seq[String]]
-        else {
-          // ONE scan, unpivoted in-row: a union of per-column selects
-          // would re-read the freshly written files once per recorded
-          // column (k scans for k category/bloom columns) — the
-          // explode emits the same (file, column, value) rows from a
-          // single pass
-          val pairs = written.select(
-              input_file_name().as("__f"),
-              explode(array(setColNames.map(c =>
-                struct(lit(c).as("__c"),
-                  col(c).cast("string").as("__v"))): _*)).as("__e"))
-            .select(col("__f"), col("__e.__c").as("__c"),
-              col("__e.__v").as("__v"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("__f", "__c").orderBy(col("__v").asc_nulls_first)
-          // cap+2 ranked distinct values suffice to DETECT saturation
-          // for every per-kind cap k ≤ maxCap, even when one kept slot
-          // is the null marker: non-null distinct ≤ k keeps the whole
-          // set (≤ k+1 rows incl. null survive the filter); non-null
-          // distinct > k keeps ≥ k+1 non-null values, tripping the
-          // size check below either way
-          pairs.distinct()
-            .withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") <= maxCap + 2)
-            .groupBy("__f", "__c")
-            .agg(sort_array(collect_set(col("__v"))).as("__vs"))
-            .collect()
-            .map(r => (new Path(r.getString(0)).getName, r.getString(1)) ->
-              r.getSeq[String](2)).toMap
-        }
-      rels.map { rel =>
-        // a zero-row part file appears in NO group of either job: no
-        // stats sections, never pruned (superset contract)
-        val base = rel.split('/').last
-        val ranges = rangeByBase.get(base).toSeq.flatMap { r =>
-          statsCols.zipWithIndex.map { case (c, i) =>
-            val mn = if (r.isNullAt(1 + 2 * i)) "" else r.getLong(1 + 2 * i).toString
-            val mx = if (r.isNullAt(2 + 2 * i)) "" else r.getLong(2 + 2 * i).toString
-            s"$c=$mn:$mx"
-          }
-        }
-        val cats = categoryCols.flatMap { c =>
-          setsByKey.get((base, c)).flatMap { vs =>
-            // over-cap: record nothing — the file is never pruned on
-            // this column (superset contract); an EMPTY set (all-null
-            // file) records `c#`, which equality-prunes everything —
-            // a null never equals the probe value
-            if (vs.size > CategoryCap) None
-            else Some(s"$c#" + vs.map(
-              java.net.URLEncoder.encode(_, "UTF-8")).mkString("|"))
-          }
-        }
-        val blooms = bloomCols.flatMap { c =>
-          setsByKey.get((base, c)).flatMap { vs =>
-            // saturation: a bloom past bits/8 distinct values keeps
-            // ~everything anyway — record nothing (superset contract)
-            // instead of bloating the manifest; an all-null file's
-            // empty bloom prunes every probe, like the category case
-            if (vs.size > bloomCap) None
-            else {
-              val bs = new java.util.BitSet(bloomBits)
-              vs.foreach(v => bloomBitsOf(v, bloomBits, BloomK)
-                .foreach(bs.set))
-              Some(s"$c~$bloomBits:$BloomK:" +
-                java.util.Base64.getEncoder.withoutPadding
-                  .encodeToString(bs.toByteArray))
-            }
-          }
-        }
-        sized(rel, ranges ++ cats ++ blooms)
+        val sets = setCols.zip(f.sets).toMap
+        // over-cap or saturated: record nothing — the file is never
+        // pruned on this column (superset contract); an EMPTY set
+        // (all-null file) records `c#`, which equality-prunes
+        // everything — a null never equals the probe value
+        val cats = categoryCols.flatMap(c =>
+          sets(c).filter(_.size <= CategoryCap).map(vs => s"$c#" +
+            vs.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString("|")))
+        // a bloom past bits/8 distinct values keeps ~everything anyway
+        // — record nothing instead of bloating the manifest; an
+        // all-null file's empty bloom prunes every probe
+        val blooms = bloomCols.flatMap(c =>
+          sets(c).filter(_.size <= bloomCap).map { vs =>
+            val bs = new java.util.BitSet(bloomBits)
+            vs.foreach(v => bloomBitsOf(v, bloomBits, BloomK).foreach(bs.set))
+            s"$c~$bloomBits:$BloomK:" + java.util.Base64.getEncoder
+              .withoutPadding.encodeToString(bs.toByteArray)
+          })
+        ranges ++ cats ++ blooms
       }
+      s"$DataDir/$nonce/$name\t${(sections :+ s"!${lenByName(name)}").mkString(",")}"
     }
   }
 
@@ -1116,9 +1048,13 @@ object SnapshotTable {
     // batch (say "500" and "legacy-1") must not prune on the castable
     // keys' range alone, or the files holding the non-castable key
     // would escape hit detection and the key would silently duplicate
-    // instead of replacing
+    // instead of replacing. A key type try_cast cannot take to BIGINT
+    // (DATE) has no ranges to prune on: its sections record null bounds
     val rangeCands =
-      if (!entries.exists(e => entryStats(e).contains(keyCol))) entries
+      if (!entries.exists(e => entryStats(e).contains(keyCol)) ||
+          !org.apache.spark.sql.catalyst.expressions.Cast.canTryCast(
+            batchKeys.select(keyCol).schema.head.dataType,
+            org.apache.spark.sql.types.LongType)) entries
       else {
         // try_cast: ANSI cast would fail the cycle on the first
         // non-numeric key instead of skipping the prune
@@ -1212,7 +1148,10 @@ object SnapshotTable {
           keys.map(col(_).isNull).reduce(_ || _)).limit(1).isEmpty,
         s"upsertTargeted: batch carries NULL in a merge key " +
           s"(${keys.mkString(",")}) — keyed tables require non-null keys")
-      val batchKeys = resolved.select(keys.map(col): _*).distinct()
+      // already distinct: mergeFirstWriterWins keeps one row per key
+      // tuple, and the guard above rules out null keys — a distinct()
+      // here would add a shuffle to every plan that reads batchKeys
+      val batchKeys = resolved.select(keys.map(col): _*)
     val (nv, out) =
       rebaseLoop[(Long, Int, Int, () => DataFrame)](fs, rootP) {
         case None =>
@@ -1840,7 +1779,10 @@ object SnapshotTable {
     * dominates scans. `statsCols` records pruning stats for the
     * rewritten files (merged files span wider ranges — re-recording
     * keeps [[scanPruned]] honest; untouched files keep the stats they
-    * had). On a TRACKED table pass `changeKeys` so the published
+    * had). Every category and Bloom column recorded on a folded file is
+    * recorded again on the rewritten files (Blooms at the widest width
+    * recorded there), so [[scanPrunedEq]] and [[scanPrunedBloom]] keep
+    * pruning them. On a TRACKED table pass `changeKeys` so the published
     * commit records an EMPTY feed step (compaction changes no rows)
     * instead of an absent one — an absent step is a chain GAP that
     * fails CDC consumers loudly by design. Returns
@@ -1895,7 +1837,14 @@ object SnapshotTable {
           small.map(_._2).sum.toDouble / targetFileBytes).toInt)
         val folded = readEntriesWithDv(spark, rootP, touched, dvE)
           .coalesce(want)
-        val newEntries = writeDataFiles(spark, fs, rootP, folded, statsCols)
+        // the folded files' category and Bloom columns carry over, so
+        // equality and point lookups still prune the compacted files;
+        // Blooms keep the widest width recorded on them
+        val cats = touched.flatMap(entryCategories(_).keys).distinct.sorted
+        val blooms = touched.flatMap(entryBlooms(_).toSeq)
+        val newEntries = writeDataFiles(spark, fs, rootP, folded, statsCols,
+          cats, blooms.map(_._1).distinct.sorted,
+          if (blooms.isEmpty) DefaultBloomBits else blooms.map(_._2._1).max)
         Right((untouched ++ newEntries, (touched.size, untouched.size)))
       }
     }

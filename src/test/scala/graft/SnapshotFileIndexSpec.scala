@@ -207,4 +207,195 @@ class SnapshotFileIndexSpec extends SparkSpec {
     assert(SnapshotTable.deleteWhereDV(spark, root, col("g") === 99L) ==
       ((v, 0L, 0)))
   }
+
+  /** The manifest entries `entries` of `root` as the two re-scan jobs
+    * built them before the writer gathered sections itself: a
+    * per-file `try_cast` min/max aggregation grouped by
+    * `input_file_name`, then per-(file, column) distinct value sets
+    * (unpivot, distinct, rank, cap, `collect_set`). Kept only as the
+    * reference the write-time sections are compared against. */
+  private def rescanEntries(root: String, entries: Seq[String],
+                            statsCols: Seq[String],
+                            categoryCols: Seq[String],
+                            bloomCols: Seq[String],
+                            bloomBits: Int): Seq[String] = {
+    val rels = entries.map(_.split('\t').head)
+    val written = spark.read.parquet(pathsOf(root, entries): _*)
+    val bloomCap = bloomBits / 8
+    val rangeByBase =
+      if (statsCols.isEmpty) Map.empty[String, org.apache.spark.sql.Row]
+      else {
+        val aggs = statsCols.flatMap(c => Seq(
+          min(expr(s"try_cast($c AS BIGINT)")).as(s"__mn_$c"),
+          max(expr(s"try_cast($c AS BIGINT)")).as(s"__mx_$c")))
+        written.groupBy(input_file_name().as("__f"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect()
+          .map(r => new Path(r.getString(0)).getName -> r).toMap
+      }
+    val setColNames = (categoryCols ++ bloomCols).distinct
+    val maxCap = math.max(if (categoryCols.nonEmpty) SnapshotTable.CategoryCap else 0,
+      if (bloomCols.nonEmpty) bloomCap else 0)
+    val setsByKey =
+      if (setColNames.isEmpty) Map.empty[(String, String), Seq[String]]
+      else {
+        val pairs = written.select(
+            input_file_name().as("__f"),
+            explode(array(setColNames.map(c =>
+              struct(lit(c).as("__c"),
+                col(c).cast("string").as("__v"))): _*)).as("__e"))
+          .select(col("__f"), col("__e.__c").as("__c"),
+            col("__e.__v").as("__v"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("__f", "__c").orderBy(col("__v").asc_nulls_first)
+        pairs.distinct()
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") <= maxCap + 2)
+          .groupBy("__f", "__c")
+          .agg(sort_array(collect_set(col("__v"))).as("__vs"))
+          .collect()
+          .map(r => (new Path(r.getString(0)).getName, r.getString(1)) ->
+            r.getSeq[String](2)).toMap
+      }
+    rels.map { rel =>
+      val base = rel.split('/').last
+      val ranges = rangeByBase.get(base).toSeq.flatMap { r =>
+        statsCols.zipWithIndex.map { case (c, i) =>
+          val mn = if (r.isNullAt(1 + 2 * i)) "" else r.getLong(1 + 2 * i).toString
+          val mx = if (r.isNullAt(2 + 2 * i)) "" else r.getLong(2 + 2 * i).toString
+          s"$c=$mn:$mx"
+        }
+      }
+      val cats = categoryCols.flatMap { c =>
+        setsByKey.get((base, c)).flatMap { vs =>
+          if (vs.size > SnapshotTable.CategoryCap) None
+          else Some(s"$c#" + vs.map(
+            java.net.URLEncoder.encode(_, "UTF-8")).mkString("|"))
+        }
+      }
+      val blooms = bloomCols.flatMap { c =>
+        setsByKey.get((base, c)).flatMap { vs =>
+          if (vs.size > bloomCap) None
+          else {
+            val bs = new java.util.BitSet(bloomBits)
+            vs.foreach(v => SnapshotTable.bloomBitsOf(v, bloomBits,
+              SnapshotTable.BloomK).foreach(bs.set))
+            Some(s"$c~$bloomBits:${SnapshotTable.BloomK}:" +
+              java.util.Base64.getEncoder.withoutPadding
+                .encodeToString(bs.toByteArray))
+          }
+        }
+      }
+      val len = new java.io.File(s"$root/$rel").length
+      s"$rel\t${(ranges ++ cats ++ blooms :+ s"!$len").mkString(",")}"
+    }
+  }
+
+  private def rowsIn(root: String, entry: String): Long =
+    spark.read.parquet(pathsOf(root, Seq(entry)): _*).count()
+
+  test("write-time manifest sections equal the two re-scan jobs' " +
+      "sections line for line: zero-row files, all-null, over-cap and " +
+      "saturated columns, typed category values, non-BMP and fullwidth " +
+      "strings, maxRecordsPerFile splits") {
+    val root = freshRoot()
+    val statsCols = Seq("k", "s", "n", "dbl", "dec", "bool", "ts")
+    val categoryCols = Seq("n", "big", "dbl", "flt", "dec", "bool", "ts",
+      "dt", "u")
+    val bloomCols = Seq("g", "big", "n", "u")
+    val bloomBits = 64 // saturates past 8 distinct values per file
+    def pick(vs: org.apache.spark.sql.Column*) =
+      element_at(array(vs: _*), (col("id") % vs.size + 1).cast("int"))
+    val df = spark.range(0L, 120L).select(
+        col("id").as("k"),
+        when(col("id") % 5 === 0, lit("legacy-1"))
+          .otherwise(col("id").cast("string")).as("s"),
+        lit(null).cast("string").as("n"),
+        concat(lit("x"), col("id")).as("big"),
+        (col("id") % 3).as("g"),
+        pick(lit(0.25), lit(1e20), lit(-0.0), lit(Double.NaN), lit(-1.5))
+          .as("dbl"),
+        (col("id") % 3 / 8).cast("float").as("flt"),
+        (col("id") % 3 / 7).cast("decimal(10,3)").as("dec"),
+        (col("id") % 2 === 0).as("bool"),
+        timestamp_seconds(col("id") % 3 * 86400 + 1).as("ts"),
+        date_add(lit("2024-02-27").cast("date"),
+          (col("id") % 4).cast("int")).as("dt"),
+        pick(lit("\ud83d\ude00"), lit("\uff21"), lit("a"), lit("\u00e9"),
+          lit(null).cast("string")).as("u"))
+      .repartitionByRange(4, col("k"))
+    def same(v: Long, sc: Seq[String], cc: Seq[String], bc: Seq[String],
+             bits: Int): Seq[String] = {
+      val got = manifest(root, v)
+      assert(got == rescanEntries(root, got, sc, cc, bc, bits))
+      got
+    }
+    val v1 = SnapshotTable.commit(spark, root, df, statsCols, categoryCols,
+      bloomCols = bloomCols, bloomBits = bloomBits)
+    val files = same(v1, statsCols, categoryCols, bloomCols, bloomBits)
+    assert(files.size == 4)
+    files.foreach { e =>
+      assert(e.contains("\tk=") && e.contains(",s=") && e.contains(",n=:,"))
+      assert(e.contains(",n#,") && e.contains(",n~64:4:,"), e)
+      assert(!e.contains(",big#") && !e.contains(",big~"), e)
+      assert(e.contains(",g~64:4:") && e.contains(",dt#2024-"), e)
+    }
+    // binary UTF8String order: fullwidth A (EF BC A1) before the emoji
+    // (F0 9F 98 80), which a UTF-16 sort reverses
+    assert(files.exists(_.contains(",u#" +
+      Seq("a", "\u00e9", "\uff21", "\ud83d\ude00").map(
+        java.net.URLEncoder.encode(_, "UTF-8")).mkString("|") + ",")))
+    // one task split into several files
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "7")
+    val v2 =
+      try SnapshotTable.commit(spark, root, df, statsCols, categoryCols,
+        bloomCols = bloomCols, bloomBits = bloomBits)
+      finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert(same(v2, statsCols, categoryCols, bloomCols, bloomBits).size > 8)
+    // 3 rows over 6 partitions: partition 0 writes a zero-row file
+    import spark.implicits._
+    val v3 = SnapshotTable.commit(spark, root,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").repartition(6),
+      statsCols = Seq("k"), categoryCols = Seq("v"), bloomCols = Seq("k"))
+    val small = same(v3, Seq("k"), Seq("v"), Seq("k"),
+      SnapshotTable.DefaultBloomBits)
+    val empty = small.filter(rowsIn(root, _) == 0L)
+    assert(empty.nonEmpty && empty.forall(!_.contains("=")), small)
+  }
+
+  test("a commit recording range, category and Bloom sections " +
+      "launches exactly the jobs of the same commit without them") {
+    val df = spark.range(0L, 400L)
+      .selectExpr("id as k", "concat('g', id % 4) as g")
+      .repartition(4, col("g"))
+    val bare = jobsDuring(SnapshotTable.commit(spark, freshRoot(), df))
+    val sectioned = jobsDuring(SnapshotTable.commit(spark, freshRoot(), df,
+      statsCols = Seq("k"), categoryCols = Seq("g"), bloomCols = Seq("k")))
+    assert(sectioned == bare, s"$sectioned jobs with sections, $bare without")
+  }
+
+  test("data files carry the Spark row metadata df.write.parquet writes " +
+      "for the same frame, nullability included") {
+    val key = "org.apache.spark.sql.parquet.row.metadata"
+    def metadataOf(paths: Seq[String]): Set[String] = paths.map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p),
+          spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getFileMetaData.getKeyValueMetaData.get(key)
+      finally r.close()
+    }.toSet
+    val df = spark.range(0L, 60L)
+      .selectExpr("id as k", "concat('v', id) as v",
+        "cast(null as string) as n", "array(id, id + 1) as arr",
+        "named_struct('x', id, 'y', 'z') as st", "coalesce(null, id) as c")
+      .repartition(3)
+    val ref = Files.createTempDirectory("graft_snapidx_ref").toString + "/p"
+    df.write.parquet(ref)
+    val want = metadataOf(new java.io.File(ref).listFiles.map(_.getPath)
+      .filter(_.endsWith(".parquet")).toSeq)
+    val root = freshRoot()
+    SnapshotTable.commit(spark, root, df, statsCols = Seq("k"))
+    val got = metadataOf(pathsOf(root, manifest(root, tip(root))))
+    assert(want.size == 1 && got == want, s"$got\n!= df.write.parquet's\n$want")
+  }
 }

@@ -1463,4 +1463,61 @@ class SnapshotTableSpec extends SparkSpec {
       stagingGraceMs = 0L)
     assert(!fs.exists(dvHome) || fs.listStatus(dvHome).isEmpty)
   }
+
+  /** The tip manifest's lines, read fs-level. */
+  private def tipManifest(root: String): Seq[String] = {
+    val v = SnapshotTable.versions(spark, root).last
+    new String(Files.readAllBytes(java.nio.file.Paths.get(
+      f"$root/_manifests/v$v%09d.manifest")), "UTF-8")
+      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
+  test("compactSnapshot carries every folded file's category and Bloom " +
+      "columns over, at the recorded Bloom width: equality and point " +
+      "lookups still prune the compacted file") {
+    val root = freshRoot()
+    SnapshotTable.commit(spark, root,
+      spark.range(0L, 64L).select(col("id").as("k"),
+          concat(lit("c"), col("id") % 2).as("c"),
+          concat(lit("p"), col("id")).as("p"))
+        .repartition(4),
+      categoryCols = Seq("c"), bloomCols = Seq("p"), bloomBits = 1024)
+    val Some((_, rewritten, kept)) = SnapshotTable.compactSnapshot(spark,
+      root, targetFileBytes = 1L << 26)
+    assert(rewritten == 4 && kept == 0)
+    val Seq(entry) = tipManifest(root)
+    assert(entry.contains("\tc#c0|c1,p~1024:4:"), entry)
+    assert(SnapshotTable.pruneCountsEq(spark, root, "c", "c9") == ((1, 0)))
+    assert(SnapshotTable.pruneCountsBloom(spark, root, "p", "p99") ==
+      ((1, 0)))
+    assert(SnapshotTable.scanPrunedEq(spark, root, "c", "c1")
+      .filter(col("c") === "c1").count() == 32L)
+    assert(SnapshotTable.scanPrunedBloom(spark, root, "p", "p7")
+      .filter(col("p") === "p7").select("k").as[Long].collect().toSeq ==
+      Seq(7L))
+  }
+
+  test("a DATE stats column records null bounds instead of failing the " +
+      "commit, and a DATE merge key upserts with no range pre-prune") {
+    val root = freshRoot()
+    def day(s: String) = lit(s).cast("date")
+    SnapshotTable.commit(spark, root,
+      spark.range(0L, 20L).select(
+          date_add(day("2024-01-01"), col("id").cast("int")).as("d"),
+          concat(lit("v"), col("id")).as("v"))
+        .repartition(2),
+      statsCols = Seq("d"))
+    val entries = tipManifest(root)
+    assert(entries.size == 2 && entries.forall(_.contains("\td=:,")), entries)
+    val (_, rewritten, _) = SnapshotTable.upsertTargeted(
+      Seq(("2024-01-03", "new"), ("2024-03-01", "ins")).toDF("d", "v")
+        .select(col("d").cast("date").as("d"), col("v")),
+      root, Seq("d"), statsCols = Seq("d"))
+    assert(rewritten == 1)
+    val got = SnapshotTable.read(spark, root)
+      .select(col("d").cast("string"), col("v")).as[(String, String)]
+      .collect().toMap
+    assert(got.size == 21 && got("2024-01-03") == "new" &&
+      got("2024-03-01") == "ins" && got("2024-01-04") == "v3")
+  }
 }
