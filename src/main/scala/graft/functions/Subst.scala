@@ -22,7 +22,11 @@ object Subst {
   /** Compile one output column: the subst expression if present, else the
     * identity reference — always aliased to the component column name. */
   def column(name: String, subst: Map[String, String]): Column =
-    F.expr(subst.getOrElse(name, s"`$name`")).as(name)
+    expression(name, subst).as(name)
+
+  /** The unaliased expression behind [[column]]. */
+  def expression(name: String, subst: Map[String, String]): Column =
+    F.expr(subst.getOrElse(name, s"`$name`"))
 
   /** Compile a full component projection. */
   def compile(columns: Seq[String], subst: Map[String, String] = Map.empty): Seq[Column] =

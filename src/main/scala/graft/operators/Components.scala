@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SharedScans
+import org.apache.spark.sql.types.DataType
 
 import graft.functions.Subst
 
@@ -45,6 +47,90 @@ object Components {
     * INSERT OR IGNORE loop when the key is all columns. */
   def merge(conformed: Seq[DataFrame]): DataFrame =
     conformed.reduce(_ unionByName _).distinct()
+
+  /** One (component, source) conformance of a compress cycle: the
+    * source's rows projected onto the component's columns by `subst`. */
+  final case class Conformance(component: String, source: String,
+                               subst: Map[String, String])
+
+  /** Every component's [[merge]] of its conformances, from one scan of
+    * each source and one shuffle for all components.
+    *
+    * Per source, one projection evaluates every conformance that reads
+    * it, and `inline` turns them into tagged rows: a component index
+    * plus one slot per column of every component (keyed by position,
+    * so a column name two components share cannot collide), the other
+    * components' slots null. The tagged rows of all sources are
+    * unioned and deduplicated once; the tag is part of the row, so
+    * duplicates collapse only within a component. Each component is
+    * its tag's rows projected back to its own column names, each
+    * column cast to the type a `unionByName` of its conformed sources
+    * resolves (nullability may widen).
+    *
+    * The one shuffle sends component i's rows to partitions
+    * `[i*k, (i+1)*k)` (k = the default parallelism), hashed on its
+    * slots, and the deduplication runs after it. The result is read
+    * through [[SharedScans.relations]], one frame per component over its
+    * own partitions: nothing is persisted, the map stage runs once, and
+    * each component's job reads and deduplicates only its own rows. With
+    * adaptive execution on, the map stage runs here, as one job in the
+    * SQL execution named `name`; with it off, the first component
+    * action runs it and later ones skip it. `columns` gives each
+    * component's column list; no conformance means no component and no
+    * job. */
+  def mergeShared(sources: Map[String, DataFrame], columns: Map[String, Seq[String]],
+                  conformances: Seq[Conformance], name: String): Map[String, DataFrame] =
+    if (conformances.isEmpty) Map.empty
+    else {
+      val order = conformances.map(_.component).distinct
+      val offsets = order.scanLeft(0)(_ + columns(_).size)
+      // per source: every conformance reading it, evaluated in one projection
+      val projected = conformances.map(_.source).distinct.map { s =>
+        val reads = conformances.filter(_.source == s)
+        reads -> sources(s).select(reads.zipWithIndex.flatMap { case (k, m) =>
+          columns(k.component).indices.map(j =>
+            Subst.expression(columns(k.component)(j), k.subst).as(s"c${m}_$j"))
+        }: _*)
+      }
+      val slotTypes: IndexedSeq[DataType] = order.flatMap { c =>
+        columns(c).indices.map { j =>
+          val types = for {
+            (reads, df) <- projected
+            (k, m) <- reads.zipWithIndex if k.component == c
+          } yield df.schema(s"c${m}_$j").dataType
+          SharedScans.unionType(types).getOrElse(throw new IllegalArgumentException(
+            s"component $c column ${columns(c)(j)}: no common type for " +
+              types.map(_.simpleString).mkString(", ")))
+        }
+      }.toIndexedSeq
+      val tagged = projected.map { case (reads, df) =>
+        df.select(inline(array(reads.zipWithIndex.map { case (k, m) =>
+          val i = order.indexOf(k.component)
+          struct(lit(i).as("tag") +: slotTypes.indices.map { n =>
+            val own = n >= offsets(i) && n < offsets(i + 1)
+            (if (own) col(s"c${m}_${n - offsets(i)}") else lit(null))
+              .cast(slotTypes(n)).as(s"s$n")
+          }: _*)
+        }: _*)))
+      }.reduce(_ union _)
+      // component i's rows go to partitions [i*parts, (i+1)*parts), hashed
+      // on its slots; `part` is a function of the row, so it changes no
+      // distinct row. `parts` is the default parallelism, not the shuffle
+      // partitions (200 unless set): AQE never coalesces an explicit width
+      val parts = tagged.sparkSession.sparkContext.defaultParallelism
+      val slots = slotTypes.indices.map(n => col(s"s$n"))
+      val merged = tagged
+        .withColumn("part", col("tag") * parts + pmod(hash(slots: _*), lit(parts)))
+        .repartitionById(order.size * parts, col("part"))
+        .distinct()
+      val shared = SharedScans.relations(merged, name,
+        order.indices.map(i => i * parts until (i + 1) * parts))
+      order.zipWithIndex.map { case (c, i) =>
+        c -> shared(i).filter(col("tag") === i).select(columns(c).zipWithIndex.map {
+          case (column, j) => col(s"s${offsets(i) + j}").as(column)
+        }: _*)
+      }.toMap
+    }
 
   /** Subset-key merge with SQLite's first-writer-wins semantics made
     * explicit: earlier sources win, and within a source ties are broken

@@ -11,9 +11,14 @@ import graft.sources.{Listing, RawTable}
   *
   * Key architectural inversion: the reference *generates a script* (the
   * sqlite dot-command program is its physical plan) and executes it
-  * sequentially file-by-file; here each stage just composes lazy
-  * DataFrames and Catalyst compiles the physical plan. Nothing is
-  * materialized driver-side; each `saveAsTable` is one distributed job.
+  * sequentially file-by-file; here each stage composes DataFrames and
+  * Catalyst compiles the physical plan. Nothing row-shaped passes
+  * through the driver and nothing is persisted. The one eager step is
+  * the compress stage's shared map stage (below): like the reference,
+  * which decodes each file once into the cycle's database and runs
+  * every component's `SELECT DISTINCT` over the loaded tables
+  * (`bin/fetcher.bash:58-89,124-169`), a cycle reads and parses each
+  * source once, however many components it feeds.
   *
   *  - Fetch/Sync collapse into driver-side file planning
   *    ([[Listing.planFiles]]): we read objects in place rather than
@@ -22,9 +27,17 @@ import graft.sources.{Listing, RawTable}
   *  - SqlLoad becomes per-file [[RawTable.load]] → per-cycle database
   *    tables (parquet via `saveAsTable`, SaveMode.Overwrite = the
   *    reference's drop-and-recreate-DB semantics, D2).
-  *  - Compress becomes [[Components.conform]] + [[Components.merge]]
-  *    per (compressor, component) over the tables matching the
-  *    compressor's include regexes (F4).
+  *  - Compress becomes one [[Components.mergeShared]] over every
+  *    (compressor, component, table) conformance, the tables being
+  *    those matching the compressor's include regexes (F4): one
+  *    projection per table, one union, one shuffle, one `distinct()`,
+  *    and each component its own partitions of the result. The
+  *    component frames share that shuffle. With adaptive execution on (as
+  *    [[graft.core.Session.local]] sets it) its map stage runs inside
+  *    `run`, as one job; with it off, the first component action runs
+  *    it and the others skip it. Either way each component write is
+  *    one job that reads its part of the shuffle output, not the
+  *    sources.
   *
   * Stage-skip flags mirror O3 (`FETCHER_SKIP_*`); the reference ships
   * with Compress hardcoded off (`bin/fetcher.bash:12`) but we treat it
@@ -45,9 +58,10 @@ object Pipeline {
 
   /** Run a group's pipeline: plan files per bucket (include regexes
     * applied pre-scan), load each file as an all-string table, then
-    * build deduplicated component tables per compressor. When
-    * `persist` is set, tables land in a per-group database (the
-    * reference's one-SQLite-DB-per-group). */
+    * build deduplicated component tables over one shared scan of the
+    * tables. When `persist` is set, tables land in a per-group database
+    * (the reference's one-SQLite-DB-per-group) and the components are
+    * built from the saved tables, so each source is decoded once. */
   def run(spark: SparkSession, spec: PipelineSpec, group: String,
           bucketRoots: Map[String, String], stages: Stages = Stages(),
           persist: Boolean = false): Result = {
@@ -79,29 +93,31 @@ object Pipeline {
     // compressors (one per source shape, like the reference's
     // a_vr_snapshot vs a_ncvoter) feed the SAME component table — the
     // reference's per-statement INSERT OR IGNORE loop becomes one
-    // merge over every conformed source of that component.
+    // shared merge over every conformed source of every component.
     val components: Map[String, DataFrame] =
       if (!stages.compress) Map.empty
       else {
-        val conformed: Seq[(String, DataFrame)] = spec.compressOrder.flatMap { cName =>
+        val conformances = spec.compressOrder.flatMap { cName =>
           val compressor = spec.compress(cName)
           val sourceNames = tables.keys.toSeq.sorted
             .filter(t => compressor.include.exists(_.r.findFirstIn(t).isDefined))
           for {
             component <- compressor.componentOrder
-            columns = spec.components.getOrElse(component, Nil)
-            if columns.nonEmpty
-            subst = compressor.components.getOrElse(component, Map.empty)
+            if spec.components.getOrElse(component, Nil).nonEmpty
             t <- sourceNames
-          } yield component -> Components.conform(tables(t), columns, subst)
+          } yield Components.Conformance(component, t,
+            compressor.components.getOrElse(component, Map.empty))
         }
-        val order = conformed.map(_._1).distinct
-        order.map { component =>
-          val merged = Components.merge(conformed.filter(_._1 == component).map(_._2))
-          if (persist)
-            merged.write.mode(SaveMode.Overwrite).saveAsTable(s"$db.$component")
-          component -> merged
-        }.toMap
+        // a persisted cycle conforms its saved tables, not the archives
+        val sources =
+          if (persist) tables.map { case (t, _) => t -> spark.table(s"$db.$t") }
+          else tables
+        val merged = Components.mergeShared(sources, spec.components, conformances,
+          s"compress $db")
+        if (persist) merged.toSeq.sortBy(_._1).foreach { case (component, df) =>
+          df.write.mode(SaveMode.Overwrite).saveAsTable(s"$db.$component")
+        }
+        merged
       }
 
     Result(group, db, tables, components)

@@ -46,18 +46,24 @@ object Listing {
 
   /** Driver-side file planning: list a directory tree (any
     * Hadoop-compatible FS) and keep paths whose name matches any
-    * pattern. Returned paths feed readers directly — pre-scan pruning. */
+    * pattern. Returned paths feed readers directly — pre-scan pruning.
+    *
+    * The walk uses `listStatus`, not `listFiles(root, true)`: that one
+    * builds a `LocatedFileStatus` per entry, copying owner and
+    * permission, which Hadoop's local FS without native IO loads by
+    * forking `ls -ld` once per file. Only names and the directory flag
+    * are read here. */
   def planFiles(spark: SparkSession, root: String, patterns: Seq[Regex]): Seq[String] = {
     val hPath = new org.apache.hadoop.fs.Path(root)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(hPath, true)
     val out = scala.collection.mutable.ArrayBuffer[String]()
-    while (it.hasNext) {
-      val status = it.next()
-      val p = status.getPath.toString
-      if (patterns.isEmpty || patterns.exists(_.findFirstIn(p).isDefined))
-        out += p
+    def walk(dir: org.apache.hadoop.fs.Path): Unit = fs.listStatus(dir).foreach { status =>
+      val p = status.getPath
+      if (status.isDirectory) walk(p)
+      else if (patterns.isEmpty || patterns.exists(_.findFirstIn(p.toString).isDefined))
+        out += p.toString
     }
+    walk(hPath)
     out.toSeq.sorted
   }
 

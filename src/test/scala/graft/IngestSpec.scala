@@ -493,25 +493,70 @@ class IngestSpec extends SparkSpec {
     assert(rowsOf(referenceParse(lines.filter(_.trim.nonEmpty).toDS(), spec)) == want)
   }
 
-  test("a component table's optimized and physical plans evaluate the " +
-      "repair chain once per line") {
-    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+  test("the shared compress scan's optimized and physical plans evaluate " +
+      "each source's repair chain and CSV parse once per line") {
+    import org.apache.spark.sql.catalyst.expressions.{CsvToStructs, Expression, RegExpReplace}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.QueryExecution
     val bucket = graft.sources.PipelineFixture.ensure()
-    val r = graft.operators.Pipeline.run(spark,
-      graft.core.Config.parse(graft.sources.PipelineFixture.configYaml),
-      "cycle_t", Map("bucket1" -> bucket))
-    def count(plan: org.apache.spark.sql.catalyst.plans.QueryPlan[_]): Int =
-      plan.collect { case n: org.apache.spark.sql.catalyst.plans.QueryPlan[_] =>
-        n.expressions.map(_.collect { case e: RegExpReplace => e }.size).sum
-      }.sum
+    // the bridge runs the shared scan as one SQL execution named
+    // "compress <database>"; its QueryExecution reaches this listener
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "compress cycle_t") scans.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val r = try {
+      val r = graft.operators.Pipeline.run(spark,
+        graft.core.Config.parse(graft.sources.PipelineFixture.configYaml),
+        "cycle_t", Map("bucket1" -> bucket))
+      org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    def count(plan: QueryPlan[_])(pf: PartialFunction[Expression, Expression]): Int =
+      plan.collect { case n: QueryPlan[_] => n.expressions.map(_.collect(pf).size).sum }.sum
     // one repaired source (the VR snapshot), two regexp_replace per chain
-    val vr = r.tables("vr_snapshot_20240601")
-    assert(count(vr.queryExecution.optimizedPlan) == 2, vr.queryExecution.optimizedPlan)
-    assert(r.components.nonEmpty)
+    val vr = r.tables("vr_snapshot_20240601").queryExecution.optimizedPlan
+    assert(count(vr) { case e: RegExpReplace => e } == 2, vr)
+    assert(scans.size == 1, s"${scans.size} shared scans")
+    val qe = scans.peek()
+    // both archives are parsed from lines; the VR snapshot alone is repaired
+    Seq(qe.optimizedPlan, qe.sparkPlan).foreach { plan =>
+      assert(count(plan) { case e: RegExpReplace => e } == 2, plan)
+      assert(count(plan) { case e: CsvToStructs => e } == 2, plan)
+    }
+    // the components read the shared result, not the sources
+    assert(r.components.size == 2)
     r.components.foreach { case (c, df) =>
-      val qe = df.queryExecution
-      assert(count(qe.optimizedPlan) == 2, s"$c\n${qe.optimizedPlan}")
-      assert(count(qe.sparkPlan) == 2, s"$c\n${qe.sparkPlan}")
+      val plan = df.queryExecution.optimizedPlan
+      assert(count(plan) { case e: RegExpReplace => e } == 0, s"$c\n$plan")
+      assert(count(plan) { case e: CsvToStructs => e } == 0, s"$c\n$plan")
+    }
+  }
+
+  test("planFiles walks nested directories with listStatus: files only, " +
+      "patterns over the whole path, sorted, no located listing") {
+    val root = Files.createTempDirectory("graft_walk")
+    Seq("a/b/c", "empty", "x_Statewide.zip").foreach(d => Files.createDirectories(root.resolve(d)))
+    val kept = Seq("z_Statewide.zip", "a/ncvoter_Statewide.zip", "a/b/c/VR_Snapshot_2024.zip")
+    // decoys: non-matching names, a matching directory and a file under it
+    val decoys = Seq("a/readme.txt", "a/b/VR_Snapshot_2024.zip.sha256", "x_Statewide.zip/inner.txt")
+    (kept ++ decoys).foreach(f => Files.write(root.resolve(f), Array[Byte](1)))
+    val patterns = Seq("_Statewide\\.zip$".r, "VR_Snapshot_.*\\.zip$".r)
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.nolocated.impl", classOf[graft.sources.NoLocatedStatusFs].getName)
+    val want = kept.map(f => s"file:${root.resolve(f)}").sorted
+    assert(Listing.planFiles(spark, root.toString, patterns) == want)
+    assert(Listing.planFiles(spark, s"nolocated:$root", patterns) ==
+      want.map(_.replaceFirst("^file:", "nolocated:")))
+    assert(Listing.planFiles(spark, s"nolocated:$root", Nil).size == kept.size + decoys.size)
+    // the file system refuses located listings, so a walk through
+    // listFiles cannot pass the assertions above
+    val fs = new org.apache.hadoop.fs.Path(s"nolocated:$root").getFileSystem(conf)
+    intercept[UnsupportedOperationException] {
+      fs.listFiles(new org.apache.hadoop.fs.Path(s"nolocated:$root"), true).hasNext
     }
   }
 }

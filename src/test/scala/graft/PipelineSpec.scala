@@ -5,8 +5,12 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StringType}
+
 import graft.core.Config
-import graft.operators.Pipeline
+import graft.operators.{Components, Pipeline}
 
 /** End-to-end pipeline test over a synthetic mini-bucket: two
   * differently-shaped zip sources conformed onto shared components via
@@ -102,8 +106,13 @@ class PipelineSpec extends SparkSpec {
       StandardCharsets.ISO_8859_1)
     val spec = Config.parse(configYaml)
     graft.core.Catalog.resetDatabase(spark, "cycle_t")
-    Pipeline.run(spark, spec, "cycle_t", Map("bucket1" -> bucket.toString),
-      persist = true)
+    // one driver header read and one executor read by the table's save:
+    // the components are built from the saved table, not the archive
+    val opened = archivesOpenedDuring {
+      Pipeline.run(spark, spec, "cycle_t", Map("bucket1" -> bucket.toString),
+        persist = true)
+    }
+    assert(opened == 2, s"a persisting cycle opened the one archive $opened times")
     val tables = graft.core.Catalog.listUserTables(spark, "cycle_t")
     assert(tables.contains("ncvoter_statewide"))
     assert(tables.contains("c_person"))
@@ -232,11 +241,258 @@ class PipelineSpec extends SparkSpec {
     writeZip(bucket, "VR_Snapshot_20240101.zip",
       "A\tB\n1\t2\n", StandardCharsets.UTF_16)
     val spec = Config.parse(configYaml)
-    val r = Pipeline.run(spark, spec, "cycle_t", Map("bucket1" -> bucket.toString),
-      stages = Pipeline.Stages(load = true, compress = false))
+    var r: Pipeline.Result = null
+    val jobs = jobsDuring {
+      r = Pipeline.run(spark, spec, "cycle_t", Map("bucket1" -> bucket.toString),
+        stages = Pipeline.Stages(load = true, compress = false))
+    }
     assert(r.tables.nonEmpty && r.components.isEmpty)
+    assert(jobs == 0, s"a load-only cycle launched $jobs jobs")
     val r2 = Pipeline.run(spark, spec, "cycle_t", Map("bucket1" -> bucket.toString),
       stages = Pipeline.Stages(load = false, compress = true))
     assert(r2.tables.isEmpty && r2.components.isEmpty)
+  }
+
+  /** The compress stage `Pipeline.run` had before the shared scan, kept
+    * only as the reference: per compressor and component, each included
+    * table conformed on its own, then one `Components.merge` per
+    * component. */
+  private def referenceComponents(spec: Config.PipelineSpec,
+      tables: Map[String, DataFrame]): Map[String, DataFrame] = {
+    val conformed: Seq[(String, DataFrame)] = spec.compressOrder.flatMap { cName =>
+      val compressor = spec.compress(cName)
+      val sourceNames = tables.keys.toSeq.sorted
+        .filter(t => compressor.include.exists(_.r.findFirstIn(t).isDefined))
+      for {
+        component <- compressor.componentOrder
+        columns = spec.components.getOrElse(component, Nil)
+        if columns.nonEmpty
+        subst = compressor.components.getOrElse(component, Map.empty)
+        t <- sourceNames
+      } yield component -> Components.conform(tables(t), columns, subst)
+    }
+    conformed.map(_._1).distinct.map { component =>
+      component -> Components.merge(conformed.filter(_._1 == component).map(_._2))
+    }.toMap
+  }
+
+  private def rowsOf(df: DataFrame): Seq[Seq[Option[Any]]] =
+    df.collect().toSeq.map(_.toSeq.map(Option(_))).sortBy(_.toString)
+
+  /** Each component equals the reference's as a multiset of rows, with
+    * the same column names and types; nullability may only widen. */
+  private def assertMatchesReference(spec: Config.PipelineSpec, r: Pipeline.Result): Unit = {
+    val want = referenceComponents(spec, r.tables)
+    assert(r.components.keySet == want.keySet)
+    want.foreach { case (c, w) =>
+      val got = r.components(c)
+      assert(got.schema.map(f => f.name -> f.dataType) == w.schema.map(f => f.name -> f.dataType),
+        s"$c: ${got.schema.simpleString} != ${w.schema.simpleString}")
+      got.schema.zip(w.schema).foreach { case (g, f) =>
+        assert(g.nullable || !f.nullable, s"$c.${f.name} narrowed to non-null")
+      }
+      assert(rowsOf(got) == rowsOf(w), c)
+    }
+  }
+
+  test("differential: the shared compress scan equals the per-component " +
+      "merge on the fixture bucket") {
+    val spec = Config.parse(graft.sources.PipelineFixture.configYaml)
+    val r = Pipeline.run(spark, spec, "cycle_t",
+      Map("bucket1" -> graft.sources.PipelineFixture.ensure()))
+    assertMatchesReference(spec, r)
+  }
+
+  test("differential: the shared compress scan equals the per-component " +
+      "merge on widened types, partial and empty compressors, shared column " +
+      "names, nulls and duplicates across sources and compressors") {
+    val bucket = Files.createTempDirectory("graft_bucket_diff")
+    val vrHeader = "Last Name\tMidl Name\tAge\tCity\n"
+    // the shared row SMITH/B/40 repeats across both snapshots
+    writeZip(bucket, "VR_Snapshot_20240101.zip", vrHeader +
+      "O\"BRIEN\tA\t31\tCARY\n" + "SMITH\tB\t40\tAPEX\n" + "SMITH\tB\t40\tAPEX\n",
+      StandardCharsets.UTF_16)
+    writeZip(bucket, "VR_Snapshot_20240102.zip", vrHeader +
+      "SMITH\tB\t40\tAPEX\n" + "LEE\t\t22\tDURHAM\n",
+      StandardCharsets.UTF_16)
+    // GARCIA has no middle name (an empty field parses to null); SMITH/B
+    // duplicates the snapshots' c_person row
+    writeZip(bucket, "ncvoter_Statewide.zip",
+      "Last Name\tMiddle Name\tFull Phone\tAge\n" +
+        "SMITH\tB\t7045550199\t40\n" + "GARCIA\t\t3365550142\t55\n",
+      StandardCharsets.ISO_8859_1)
+    // gains a null email column at load
+    Files.write(bucket.resolve("Candidate_Listing_2024.csv"),
+      "\"Last Name\",\"Phone\"\n\"SMITH\",\"7045550199\"\n\"O\"HARA\",\"9195550000\"\n"
+        .getBytes(StandardCharsets.ISO_8859_1))
+    // a clean TSV whose score is a string, one of them empty
+    Files.write(bucket.resolve("extra.tsv"),
+      "Last Name\tScore\nSMITH\t7\nNOBODY\t\n".getBytes(StandardCharsets.UTF_8))
+    val yaml =
+      """fetch:
+        |  cycle_d:
+        |    b:
+        |      include:
+        |        - '\.zip$'
+        |        - '\.tsv$'
+        |        - 'Candidate_Listing_.*\.csv$'
+        |compress:
+        |  pack_vr:
+        |    include:
+        |      - '^vr_snapshot'
+        |    components:
+        |      c_person:
+        |        subst:
+        |          middle_name: midl_name
+        |      c_score:
+        |        subst:
+        |          score: CAST(age AS INT)
+        |          tag: "'vr'"
+        |  pack_vr_first:
+        |    include:
+        |      - '^vr_snapshot_20240101$'
+        |    components:
+        |      c_person:
+        |        subst:
+        |          middle_name: midl_name
+        |  pack_none:
+        |    include:
+        |      - '^no_such_table$'
+        |    components:
+        |      c_person: 1
+        |      c_contact: 1
+        |  pack_ncv:
+        |    include:
+        |      - '^ncvoter_statewide$'
+        |    components:
+        |      c_person: 1
+        |      c_contact:
+        |        subst:
+        |          email: "NULL"
+        |      c_score:
+        |        subst:
+        |          score: CAST(age AS BIGINT)
+        |          tag: "NULL"
+        |  pack_cand:
+        |    include:
+        |      - '^candidate_listing'
+        |    components:
+        |      c_contact:
+        |        subst:
+        |          full_phone: phone
+        |  pack_extra:
+        |    include:
+        |      - '^extra$'
+        |    components:
+        |      c_score:
+        |        subst:
+        |          tag: "'x'"
+        |components:
+        |  c_person:
+        |    - last_name
+        |    - middle_name
+        |  c_contact:
+        |    - last_name
+        |    - full_phone
+        |    - email
+        |  c_score:
+        |    - last_name
+        |    - score
+        |    - tag
+        |""".stripMargin
+    val spec = Config.parse(yaml)
+    val r = Pipeline.run(spark, spec, "cycle_d", Map("b" -> bucket.toString))
+    assert(r.tables.keySet == Set("vr_snapshot_20240101", "vr_snapshot_20240102",
+      "ncvoter_statewide", "candidate_listing_2024", "extra"))
+    assertMatchesReference(spec, r)
+    // the cases are not vacuous: int, bigint and string scores widen
+    // (ANSI: a string beside integers resolves to bigint), duplicates
+    // collapse, nulls survive
+    assert(r.components("c_score").schema.map(_.dataType) ==
+      Seq(StringType, LongType, StringType))
+    assert(r.components("c_person").count() == 4L)
+    assert(r.components("c_contact").count() == 3L)
+    assert(r.components("c_contact").filter(col("email").isNull).count() == 3L)
+    assert(r.components("c_score").filter(col("score").isNull).count() == 1L)
+  }
+
+  test("a cycle opens each planned archive twice: one driver header read " +
+      "and one executor read, however many components it writes") {
+    val spec = Config.parse(graft.sources.PipelineFixture.configYaml)
+    val bucket = graft.sources.PipelineFixture.ensure()
+    val out = Files.createTempDirectory("graft_components_out")
+    var written = 0
+    val opened = archivesOpenedDuring {
+      val r = Pipeline.run(spark, spec, "cycle_t", Map("bucket1" -> bucket))
+      r.components.foreach { case (c, df) =>
+        df.write.mode("overwrite").parquet(out.resolve(c).toString); written += 1
+      }
+    }
+    val archives = graft.sources.Listing.planFiles(spark, bucket,
+      spec.fetch("cycle_t")("bucket1").include.map(_.r))
+    assert(written == 2 && archives.size == 2)
+    assert(opened == 2L * archives.size, s"opened $opened times")
+  }
+
+  test("a cycle launches one job for the shared map stage and one per " +
+      "component write, and persists nothing") {
+    val spec = Config.parse(graft.sources.PipelineFixture.configYaml)
+    val bucket = graft.sources.PipelineFixture.ensure()
+    val out = Files.createTempDirectory("graft_components_jobs")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    var r: Pipeline.Result = null
+    // adaptive execution (on in this session) runs the map stage in run
+    val runJobs = jobsDuring {
+      r = Pipeline.run(spark, spec, "cycle_t", Map("bucket1" -> bucket))
+    }
+    val writeJobs = jobsDuring {
+      r.components.foreach { case (c, df) =>
+        df.write.mode("overwrite").parquet(out.resolve(c).toString)
+      }
+    }
+    assert(r.components.size == 2)
+    assert(runJobs == 1 && writeJobs == r.components.size,
+      s"run $runJobs jobs, writes $writeJobs jobs")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+  }
+
+  test("with adaptive execution off, run launches no job and the first " +
+      "component write runs the shared map stage for every component") {
+    val spec = Config.parse(graft.sources.PipelineFixture.configYaml)
+    val bucket = graft.sources.PipelineFixture.ensure()
+    val out = Files.createTempDirectory("graft_components_noaqe")
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      var r: Pipeline.Result = null
+      val runJobs = jobsDuring {
+        r = Pipeline.run(spark, spec, "cycle_t", Map("bucket1" -> bucket))
+      }
+      var writeJobs = 0
+      val opened = archivesOpenedDuring {
+        writeJobs = jobsDuring {
+          r.components.foreach { case (c, df) =>
+            df.write.mode("overwrite").parquet(out.resolve(c).toString)
+          }
+        }
+      }
+      assert(runJobs == 0 && writeJobs == r.components.size,
+        s"run $runJobs jobs, writes $writeJobs jobs")
+      // each of the two archives is read once, by the first write's map stage
+      assert(opened == 2L, s"the writes opened $opened archives")
+    } finally spark.conf.set(key, before)
+  }
+
+  test("SharedScans.relations: each frame reads its slice of partitions; " +
+      "slices that miss a partition give every frame the whole result") {
+    import org.apache.spark.sql.graftbridge.SharedScans
+    val df = spark.range(0, 40).withColumn("p", (col("id") % 4).cast("int"))
+      .repartitionById(4, col("p"))
+    val frames = SharedScans.relations(df, "slices", Seq(0 until 1, 1 until 4))
+    assert(frames.map(_.collect().map(_.getInt(1)).toSet) == Seq(Set(0), Set(1, 2, 3)))
+    assert(frames.map(_.count()) == Seq(10L, 30L))
+    val whole = SharedScans.relations(df, "slices", Seq(0 until 2))
+    assert(whole.map(_.count()) == Seq(40L))
   }
 }

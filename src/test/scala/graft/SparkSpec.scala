@@ -46,4 +46,14 @@ abstract class SparkSpec extends AnyFunSuite {
       jobs.get
     } finally sc.removeSparkListener(l)
   }
+
+  /** Archive streams opened (on the driver or in tasks, both in this
+    * JVM) while `body` runs: the [[graft.sources.ArchiveStreamAudit]]
+    * count, which every zip, tar and charset-decoded plain-file read
+    * bumps once per opened file. */
+  protected def archivesOpenedDuring(body: => Unit): Long = {
+    val before = graft.sources.ArchiveStreamAudit.opened.get()
+    body
+    graft.sources.ArchiveStreamAudit.opened.get() - before
+  }
 }
