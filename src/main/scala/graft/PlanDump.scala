@@ -7,8 +7,9 @@ import scala.collection.mutable.ArrayBuffer
   * ONE session, writing each query's formatted physical plan to
   * `<outDir>/<name><suffix>.txt` and printing a per-stage wall/shuffle
   * profile — `runMain graft.PlanDump <regex> <outDir> [suffix] [sfDir]`.
-  * One JVM for N queries: the per-query Explain main pays ~40 s of
-  * session+warmup each, which swamps the plans being measured. */
+  * One JVM for N queries: a JVM per query pays ~40 s of
+  * session+warmup each, which swamps the plans being measured; a
+  * `'^name$'` regex audits one query. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val re = args(0).r

@@ -8994,7 +8994,8 @@ object Queries {
     // twin of q_snapshot_prune, and the single most common 100 TB
     // slice ("read only source=X"): documents commit clustered on
     // source with per-file category sets recorded, then a source probe
-    // resolves the file list before any Spark scan. The in-query
+    // skips, in the planned scan's file index, every file whose category
+    // set lacks the value. The in-query
     // require proves files were skipped; the oracle proves the
     // superset contract composed with the row filter loses nothing.
     "q_snapshot_prune_eq" -> ((
@@ -9022,7 +9023,8 @@ object Queries {
     // third of the stats family (ranges need a clustered layout,
     // category sets cap at 16 distinct): an UNCLUSTERED-by-key events
     // slice commits with a per-file Bloom over event_id, then a point
-    // probe resolves the file list before any Spark scan. The in-query
+    // probe skips, in the planned scan's file index, every file whose
+    // Bloom rules the key out. The in-query
     // require proves files were skipped; the oracle proves the
     // superset contract composed with the row filter loses nothing —
     // a wrong hash on either side drops the row and hash-mismatches.
@@ -9308,10 +9310,9 @@ object Queries {
 
     // TRANSPARENT DATA SKIPPING under the hard gate — the
     // manifest-backed FileIndex (SnapshotFileIndex): a PLAIN
-    // `.filter(...)` on SnapshotTable.table reaches the index through
+    // `.filter(...)` on SnapshotTable.read reaches the index through
     // Spark's pushed-down data filters and opens only the files whose
-    // recorded range sections admit the predicate — no scanPruned*
-    // call anywhere. The in-query require reads the EXECUTED scan's
+    // recorded range sections admit the predicate. The in-query require reads the EXECUTED scan's
     // numFiles metric (row counts cannot distinguish file skipping
     // from parquet row-group pruning) and demands a strict subset;
     // the oracle recomputes the same filter in SQL, so pruning that
@@ -9329,7 +9330,7 @@ object Queries {
           statsCols = Seq("doc_id"))
         val mx = base.agg(max(col("doc_id"))).head().getLong(0)
         val k = mx / 8L
-        val probe = graft.core.SnapshotTable.table(s, root)
+        val probe = graft.core.SnapshotTable.read(s, root)
           .filter(col("doc_id") <= k)
         probe.collect()
         val n = probe.queryExecution.executedPlan.collect {
@@ -9337,7 +9338,7 @@ object Queries {
         }.map(_.metrics("numFiles").value).sum
         require(n >= 1 && n < 8,
           s"transparent pruning opened $n of 8 files")
-        graft.core.SnapshotTable.table(s, root)
+        graft.core.SnapshotTable.read(s, root)
           .filter(col("doc_id") <= k)
       },
       Some("""SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars
@@ -9569,10 +9570,12 @@ object Queries {
     // Manifest-level FILE PRUNING under the hard gate — the snapshot
     // format's scan-planning half: an events slice commits
     // range-partitioned on user_id with per-file min/max recorded in
-    // the manifest (statsCols), then a key-range read resolves the
-    // file list BEFORE any Spark scan. The in-query require proves
-    // files were actually skipped (kept < total); the oracle proves
-    // the superset contract composed with the row filter loses
+    // the manifest (statsCols), then a key-range read skips, in the
+    // planned scan's file index, every file whose range cannot
+    // intersect (the int column's widening cast unwraps to a bare
+    // attribute, so the long bounds still prune). The in-query
+    // require proves files were actually skipped (kept < total); the
+    // oracle proves pruning composed with the row filter loses
     // nothing — a wrong min/max or an off-by-one bound drops rows and
     // hash-mismatches.
     "q_snapshot_prune" -> ((

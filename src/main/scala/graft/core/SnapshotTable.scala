@@ -41,15 +41,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per-file `getFileStatus` sweep is 400k NameNode/S3 HEAD calls,
   * where the writer knew every length at commit time for free.
   * Entries without it (older manifests, hand-built DV lines) fall
-  * back to the filesystem. [[scanPruned]]
-  * keeps only the files whose recorded range intersects the
-  * predicate's — at 100 TB with range-clustered commits (writers
-  * `repartitionByRange` on the stats column; [[Catalog.writeZOrdered]]
-  * for two), a key-range query plans against the handful of files
-  * that can match instead of the whole snapshot, before Spark even
-  * plans the scan. Entries without stats (older manifests, columns
-  * not recorded) are always kept — pruning is strictly a superset
-  * guarantee, never a correctness gate.
+  * back to the filesystem. A filtered [[read]] opens only the files
+  * whose recorded sections admit the filter Spark pushes down — at
+  * 100 TB with range-clustered commits (writers `repartitionByRange`
+  * on the stats column; [[Catalog.writeZOrdered]] for two), a
+  * key-range query scans the handful of files that can match instead
+  * of the whole snapshot. Entries without stats (older manifests,
+  * columns not recorded) are always kept — pruning is strictly a
+  * superset guarantee, never a correctness gate.
   *
   * THE COMMIT PROTOCOL — why a reader can never see a torn table:
   *  1. data files are written to a fresh nonce'd directory under
@@ -75,35 +74,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reader. [[readVersion]] is the same pin at an explicit version
   * (time travel across the retained window).
   *
-  * READ PLANNING: every snapshot read — [[read]], [[readVersion]], the
-  * `scanPruned*` family, both sides of a deletion-vector read, and the
-  * commit paths' read-backs — is planned from the manifest through one
-  * constructor ([[scan]]) over [[graft.sources.SnapshotFileIndex]]: no
-  * per-file status calls, no Parquet schema-inference job (the schema
-  * is one driver-side footer read), and pushed-down filters skip files
-  * by their recorded sections. [[table]] is therefore just [[read]].
+  * READ PLANNING: every snapshot read — [[read]], [[readVersion]],
+  * both sides of a deletion-vector read, and the commit paths'
+  * read-backs — is planned from the manifest through one constructor
+  * ([[scan]]) over [[graft.sources.SnapshotFileIndex]]: no per-file
+  * status calls, no Parquet schema-inference job (the schema is one
+  * driver-side footer read), and pushed-down filters skip files by
+  * their recorded sections. That index is the ONLY place a read skips
+  * files: the `scanPruned*` / `pruneCounts*` methods are thin
+  * wrappers over `read(...).filter(...)`, and [[entryMayMatch]] is
+  * the one predicate deciding whether an entry can match.
   *
   * CONCURRENCY: version numbers linearize committers through an
   * EXCLUSIVE CLAIM — before renaming, a committer creates
-  * `v<N>.lock` with `FileSystem.create(overwrite = false)`, atomic-
-  * exclusive where the filesystem provides it (HDFS
-  * CreateFlag.CREATE; POSIX O_CREAT|O_EXCL). Two committers
-  * therefore can never rename onto the same version there: the
-  * loser's claim fails and it retries at the NEXT number (claimed
-  * numbers are skipped, so a crashed claim leaves a harmless HOLE in
-  * the version sequence, reclaimed by [[vacuum]], never a blocked
-  * table). Hadoop's LOCAL filesystem is weaker — RawLocal/
-  * ChecksumFileSystem implement create(overwrite=false) as a
-  * non-atomic exists-then-create — so there the claim is best-effort
-  * and the defense is the PUBLISH step: a same-number racer's rename
-  * is refused (the target exists) or its read-back shows foreign
-  * content; the loser retries at a later version. Honest limit: on a
-  * store that both lacks atomic claims AND replaces on rename, two
-  * racers could in principle each read back their own content before
-  * the other's rename lands (a TOCTOU window) — local FS is a
-  * convenience tier, not the contract; production tables belong on a
-  * claim-atomic store (see FILESYSTEM CONTRACT). On claim-atomic
-  * stores the read-back is belt-and-braces only.
+  * `v<N>.lock` atomically-exclusively: `FileSystem.create(overwrite =
+  * false)` on HDFS (CreateFlag.CREATE), and on `file:` paths
+  * `java.nio.file.Files.createFile` (POSIX O_CREAT|O_EXCL), because
+  * Hadoop's local create(overwrite=false) is a non-atomic
+  * exists-then-create. Two committers therefore can never rename
+  * onto the same version: the loser's claim fails and it retries at
+  * the NEXT number (claimed numbers are skipped, so a crashed claim
+  * leaves a harmless HOLE in the version sequence, reclaimed by
+  * [[vacuum]], never a blocked table). The PUBLISH step still reads
+  * the manifest back: on a store whose create is not exclusive (see
+  * FILESYSTEM CONTRACT) a same-number racer's rename is refused (the
+  * target exists) or its read-back shows foreign content, and the
+  * loser retries at a later version. On claim-atomic stores the
+  * read-back is belt-and-braces only.
   * Claims linearize version NUMBERS; read-merge-commit CYCLES are
   * additionally VALIDATED: [[upsertCycle]], [[upsertTargeted]],
   * [[compactSnapshot]], [[deleteWhere]] and [[applyChangesCycle]]
@@ -122,8 +119,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * hole silently is exactly the lost update validation exists to
   * prevent.
   *
-  * FILESYSTEM CONTRACT, named: the protocol needs (a) atomic-exclusive
-  * `create(overwrite = false)` for the claim and (b) same-directory
+  * FILESYSTEM CONTRACT, named: the protocol needs (a) an atomic-
+  * exclusive create for the claim and (b) same-directory
   * `rename` that either moves the temp manifest or fails — HDFS and
   * POSIX local filesystems give both. S3A gives NEITHER natively
   * (create is a PUT that last-writer-wins unless the store supports
@@ -179,26 +176,11 @@ object SnapshotTable {
   private def manifestPath(root: Path, v: Long): Path =
     new Path(new Path(root, ManifestDir), f"v$v%09d.manifest")
 
-  /** Highest committed snapshot version, or None for an empty/new
-    * table. Temp manifests (un-renamed) never match the pattern, so a
-    * crash mid-commit is invisible here by construction. */
-  def currentVersion(fs: FileSystem, root: Path): Option[Long] = {
+  /** Committed versions under `root`, ascending. Temp manifests
+    * (un-renamed) never match the pattern, so a crash mid-commit is
+    * invisible here by construction. */
+  private def listVersions(fs: FileSystem, root: Path): Seq[Long] = {
     val md = new Path(root, ManifestDir)
-    if (!fs.exists(md)) return None
-    val vs = fs.listStatus(md).iterator.flatMap { st =>
-      st.getPath.getName match {
-        case ManifestRe(d) => Some(d.toLong)
-        case _ => None
-      }
-    }.toSeq
-    if (vs.isEmpty) None else Some(vs.max)
-  }
-
-  /** All committed versions, ascending — the retained time-travel
-    * window (vacuum trims the front). */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val (fs, rootP) = fsOf(spark, root)
-    val md = new Path(rootP, ManifestDir)
     if (!fs.exists(md)) return Nil
     fs.listStatus(md).iterator.flatMap { st =>
       st.getPath.getName match {
@@ -206,6 +188,18 @@ object SnapshotTable {
         case _ => None
       }
     }.toSeq.sorted
+  }
+
+  /** Highest committed snapshot version, or None for an empty/new
+    * table. */
+  def currentVersion(fs: FileSystem, root: Path): Option[Long] =
+    listVersions(fs, root).lastOption
+
+  /** All committed versions, ascending — the retained time-travel
+    * window (vacuum trims the front). */
+  def versions(spark: SparkSession, root: String): Seq[Long] = {
+    val (fs, rootP) = fsOf(spark, root)
+    listVersions(fs, rootP)
   }
 
   /** (name, type) schema signature for compatibility checks — a
@@ -219,7 +213,7 @@ object SnapshotTable {
 
   /** A manifest entry's root-relative file path (the part before the
     * optional TAB-separated stats). */
-  private def entryPath(line: String): String = {
+  private[graft] def entryPath(line: String): String = {
     val t = line.indexOf('\t')
     if (t < 0) line else line.substring(0, t)
   }
@@ -230,7 +224,10 @@ object SnapshotTable {
     * data, but applied as tombstones at read time instead of scanned
     * as rows (see [[deleteWhereDV]]). */
   private def splitEntries(entries: Seq[String]): (Seq[String], Seq[String]) =
-    entries.partition(e => !entryPath(e).startsWith(s"$DvDir/"))
+    entries.partition(e => !isDvEntry(e))
+
+  private def isDvEntry(entry: String): Boolean =
+    entryPath(entry).startsWith(s"$DvDir/")
 
   /** Scan manifest `entries` planned from the manifest alone — THE
     * constructor behind every snapshot read: a [[org.apache.spark.sql
@@ -295,7 +292,7 @@ object SnapshotTable {
     * empty for entries written without `statsCols`. An empty bound
     * (all-null column in that file) parses as None = unbounded.
     * Category sections (`col#…`) are skipped here. */
-  private[core] def entryStats(line: String)
+  private[graft] def entryStats(line: String)
       : Map[String, (Option[Long], Option[Long])] = {
     val t = line.indexOf('\t')
     if (t < 0) return Map.empty
@@ -325,7 +322,7 @@ object SnapshotTable {
     * values URL-encoded at write) — the categorical twin of
     * [[entryStats]], recorded when the committer passed
     * `categoryCols` and the file's distinct count fit the cap. */
-  private[core] def entryCategories(line: String): Map[String, Set[String]] = {
+  private[graft] def entryCategories(line: String): Map[String, Set[String]] = {
     val t = line.indexOf('\t')
     if (t < 0) return Map.empty
     line.substring(t + 1).split(',').iterator
@@ -343,7 +340,7 @@ object SnapshotTable {
     * delimiter) — the point-lookup twin of [[entryStats]], recorded
     * when the committer passed `bloomCols` and the file's distinct
     * count stayed under the saturation cap. */
-  private[core] def entryBlooms(line: String)
+  private[graft] def entryBlooms(line: String)
       : Map[String, (Int, Int, java.util.BitSet)] = {
     val t = line.indexOf('\t')
     if (t < 0) return Map.empty
@@ -388,7 +385,15 @@ object SnapshotTable {
   /** The current snapshot, file list PINNED at call time — later
     * commits do not change what this DataFrame reads. Loud on an
     * uncommitted table (an empty read would silently launder a
-    * mid-commit crash into "no data"). */
+    * mid-commit crash into "no data").
+    *
+    * This is also THE pruned read: the scan sits over
+    * [[graft.sources.SnapshotFileIndex]], so a filter Spark pushes
+    * down skips the files whose recorded range/category/Bloom
+    * sections cannot match — `read(...).filter(col("k") === 42)` opens
+    * only the files that may hold 42. With live deletion vectors the
+    * filter still lands on the data-side scan, below the tombstone
+    * anti-join, and prunes the same files. */
   def read(spark: SparkSession, root: String): DataFrame = {
     val (fs, rootP) = fsOf(spark, root)
     val v = currentVersion(fs, rootP).getOrElse(throw new IllegalStateException(
@@ -415,19 +420,6 @@ object SnapshotTable {
         s"SnapshotTable at $root: manifest v$v lists no data files")
     readEntriesWithDv(spark, rootP, dataE, dvE)
   }
-
-  /** The current snapshot — the same relation as [[read]], kept as
-    * the name for reading with TRANSPARENT file pruning: every
-    * snapshot scan is built over the manifest-backed
-    * [[graft.sources.SnapshotFileIndex]] (see [[scan]]), so a filter
-    * Spark pushes down skips the files whose recorded
-    * range/category/Bloom sections cannot match — `table(...).filter
-    * (col("k") === 42)` plans the same file set as an explicit
-    * [[scanPrunedBloom]] probe. With LIVE deletion vectors the scan
-    * sits under the merge-on-read anti-join, and Spark does not push
-    * filters through the join's probe side: compact first, or accept
-    * unpruned scans until then (the documented MOR read price). */
-  def table(spark: SparkSession, root: String): DataFrame = read(spark, root)
 
   /** Write `df`'s parquet files under a fresh unreferenced data
     * directory and return their manifest entries: root-relative path,
@@ -464,9 +456,9 @@ object SnapshotTable {
     val nonce = java.util.UUID.randomUUID().toString.take(12)
     val staging = new Path(new Path(rootP, StagingDir), nonce)
     // also enable parquet's OWN bloom filters inside the files: the
-    // manifest bloom prunes FILES before any scan, parquet's prunes row
-    // groups inside the kept ones — the same two-layer compose as
-    // scanPruned's manifest ranges + PushedFilters
+    // manifest bloom skips FILES, parquet's prunes row groups inside
+    // the kept ones — the same two-layer compose as the manifest
+    // ranges + PushedFilters
     val options = Map("compression" -> "zstd") ++
       bloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
     val trackers = org.apache.spark.sql.graftbridge.FileWrites.parquet(
@@ -526,16 +518,26 @@ object SnapshotTable {
   private def lockPath(root: Path, v: Long): Path =
     new Path(new Path(root, ManifestDir), f"v$v%09d.lock")
 
-  /** Atomically claim version `v` — `create(overwrite = false)` is
-    * exclusive on HDFS and POSIX-backed stores (see the FILESYSTEM
-    * CONTRACT note). False means another committer holds (or held)
-    * the number — CONTENTION, distinguished from environment faults
-    * (permissions, transient FS errors), which are RETHROWN: swallowing
-    * them as "claimed" would burn retry attempts on version-number
-    * holes and misreport a broken filesystem as a concurrent writer. */
-  private def claimVersion(fs: FileSystem, rootP: Path, v: Long): Boolean =
-    try { fs.create(lockPath(rootP, v), false).close(); true }
-    catch {
+  /** Atomically claim version `v`. On `file:` paths the lock is
+    * created with `Files.createFile` (O_CREAT|O_EXCL): Hadoop's local
+    * `create(overwrite = false)` is an exists-then-create, so two
+    * committers could both claim one number. Every other filesystem
+    * uses `create(overwrite = false)`, exclusive on HDFS (see the
+    * FILESYSTEM CONTRACT note). False means another committer holds
+    * (or held) the number — CONTENTION, distinguished from environment
+    * faults (permissions, transient FS errors), which are RETHROWN:
+    * swallowing them as "claimed" would burn retry attempts on
+    * version-number holes and misreport a broken filesystem as a
+    * concurrent writer. */
+  private[graft] def claimVersion(fs: FileSystem, rootP: Path, v: Long)
+      : Boolean =
+    try {
+      val lock = fs.makeQualified(lockPath(rootP, v))
+      if (lock.toUri.getScheme == "file")
+        java.nio.file.Files.createFile(java.nio.file.Paths.get(lock.toUri))
+      else fs.create(lock, false).close()
+      true
+    } catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
       case _: java.nio.file.FileAlreadyExistsException => false
       case e: java.io.IOException =>
@@ -546,11 +548,10 @@ object SnapshotTable {
 
   /** Write `lines` to a temp manifest and atomically rename it onto
     * version `v` (which the caller must have claimed); returns
-    * whether OUR content is what got published. On HDFS/POSIX the
-    * claim rules out a collision, so this is always true. On a
-    * filesystem whose create(overwrite=false) is a non-atomic
-    * exists-then-create (Hadoop's RawLocal/ChecksumFileSystem), two
-    * committers can both "claim" the same number — depending on the
+    * whether OUR content is what got published. On HDFS and `file:`
+    * paths the claim rules out a collision, so this is always true.
+    * On a filesystem whose create is not exclusive, two committers
+    * can both "claim" the same number — depending on the
     * store's rename semantics the loser either fails the rename
     * (target already exists) or replaces-and-is-replaced; both
     * surface here as `false` (rename-refused with an existing target,
@@ -852,137 +853,86 @@ object SnapshotTable {
     commit(spark, root, widened, statsCols, categoryCols)
   }
 
-  /** The current snapshot restricted to files whose recorded
-    * `[min, max]` for `colName` intersects `[lo, hi]` (both
-    * inclusive) — manifest-level file pruning, resolved BEFORE Spark
-    * plans any scan. Strictly a SUPERSET of the matching rows:
-    * entries without stats for the column are always kept, so callers
-    * still apply the real row filter; what pruning buys is never
-    * opening the files that cannot match. Use [[pruneCounts]] for the
-    * (total, kept) file accounting, and [[scanPrunedEq]] for the
-    * categorical (equality) twin. */
+  /** The current snapshot filtered to `colName` in `[lo, hi]` (both
+    * inclusive): `read(...).filter(col(colName).between(lo, hi))`.
+    * [[graft.sources.SnapshotFileIndex]] skips every file whose
+    * recorded range cannot intersect, so only the files that can match
+    * are opened, and the frame holds exactly the matching rows (a
+    * caller's own row filter on top is harmless). Use [[pruneCounts]]
+    * for the (total, kept) file accounting, and [[scanPrunedEq]] for
+    * the categorical (equality) twin. */
   def scanPruned(spark: SparkSession, root: String, colName: String,
-                 lo: Long, hi: Long): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = currentVersion(fs, rootP).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable at $root has no committed snapshot"))
-    val (dataE, dvE) = splitEntries(readManifest(fs, rootP, v))
-    val kept = prunedEntries(dataE, colName, lo, hi)
-    if (kept.isEmpty)
-      // all files pruned: an empty result with the right schema —
-      // read one file's schema via the full version, filtered to false
-      return readVersion(spark, root, v).limit(0)
-    readEntriesWithDv(spark, rootP, kept, dvE)
-  }
+                 lo: Long, hi: Long): DataFrame =
+    read(spark, root).filter(
+      org.apache.spark.sql.functions.col(colName).between(lo, hi))
 
-  /** (total files, files kept) for a [[scanPruned]] predicate on the
-    * current snapshot — the observability half of pruning. */
+  /** (total data files, data files kept) for the [[scanPruned]] frame
+    * of the same predicate on the current snapshot — the observability
+    * half of pruning. */
   def pruneCounts(spark: SparkSession, root: String, colName: String,
-                  lo: Long, hi: Long): (Int, Int) = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = currentVersion(fs, rootP).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable at $root has no committed snapshot"))
-    val all = splitEntries(readManifest(fs, rootP, v))._1
-    (all.size, prunedEntries(all, colName, lo, hi).size)
-  }
+                  lo: Long, hi: Long): (Int, Int) =
+    keptCounts(spark, root, scanPruned(spark, root, colName, lo, hi))
 
-  private def prunedEntries(entries: Seq[String], colName: String,
-                            lo: Long, hi: Long): Seq[String] =
-    entries.filter { e =>
-      entryStats(e).get(colName) match {
-        // intersect with missing bounds treated as unbounded (an
-        // all-null file keeps conservatively; its rows cannot satisfy
-        // a range predicate, so the caller's filter drops them)
-        case Some((mn, mx)) => mx.forall(_ >= lo) && mn.forall(_ <= hi)
-        case None => true // no stats recorded: never prune
-      }
-    }
-
-  /** The current snapshot restricted to files whose recorded CATEGORY
-    * set for `colName` contains `value` — equality pruning for
-    * low-cardinality slice columns (lang, source, split), the single
-    * most common 100 TB access pattern ("read only lang=en"). Same
-    * superset contract as [[scanPruned]]: entries without a category
-    * section for the column are always kept, callers still apply the
-    * row filter. Record the sections by committing with
-    * `categoryCols` after clustering on the column (`repartition` on
-    * it puts each value wholly in a few files). */
+  /** The current snapshot filtered to `colName = value`, the literal
+    * coerced to the column's type by Catalyst. Built for
+    * low-cardinality slice columns (lang, source, split) — the single
+    * most common 100 TB access pattern ("read only lang=en"): files
+    * whose recorded CATEGORY set lacks the value are skipped. Record
+    * the sections by committing with `categoryCols` after clustering
+    * on the column (`repartition` on it puts each value wholly in a
+    * few files); entries without a section are always kept. */
   def scanPrunedEq(spark: SparkSession, root: String, colName: String,
                    value: String): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = currentVersion(fs, rootP).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable at $root has no committed snapshot"))
-    val (dataE, dvE) = splitEntries(readManifest(fs, rootP, v))
-    val kept = prunedEntriesEq(dataE, colName, value)
-    if (kept.isEmpty) return readVersion(spark, root, v).limit(0)
-    readEntriesWithDv(spark, rootP, kept, dvE)
+    import org.apache.spark.sql.functions.{col, lit}
+    // a bare attribute = literal: the shape entryMayMatch translates
+    read(spark, root).filter(col(colName) === lit(value))
   }
 
-  /** (total files, files kept) for a [[scanPrunedEq]] probe. */
+  /** (total data files, data files kept) for a [[scanPrunedEq]] probe. */
   def pruneCountsEq(spark: SparkSession, root: String, colName: String,
-                    value: String): (Int, Int) = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = currentVersion(fs, rootP).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable at $root has no committed snapshot"))
-    val all = splitEntries(readManifest(fs, rootP, v))._1
-    (all.size, prunedEntriesEq(all, colName, value).size)
-  }
+                    value: String): (Int, Int) =
+    keptCounts(spark, root, scanPrunedEq(spark, root, colName, value))
 
-  private def prunedEntriesEq(entries: Seq[String], colName: String,
-                              value: String): Seq[String] =
-    entries.filter { e =>
-      entryCategories(e).get(colName) match {
-        case Some(vs) => vs.contains(value)
-        case None => true // no category recorded: never prune
-      }
-    }
-
-  /** The current snapshot restricted to files whose recorded BLOOM for
-    * `colName` may contain `value` — POINT-LOOKUP pruning for the
-    * cardinality band the other two stats kinds don't cover: category
-    * sets are exact but cap at [[CategoryCap]] distinct values per
-    * file, min/max ranges need a range-clustered layout; a Bloom
-    * prunes equality probes on an UNCLUSTERED commit up to bits/8
-    * distinct values per file. Past that the section is omitted
-    * (saturation) and the file is always kept — the same superset
-    * contract as the other scans, so callers still apply the row
-    * filter; false positives only cost an extra file open, never a
-    * wrong row. For genuinely unique keys at 100 TB (millions of
+  /** The current snapshot filtered to `colName = value`, like
+    * [[scanPrunedEq]] — the POINT-LOOKUP probe for the cardinality
+    * band the other two section kinds don't cover: category sets are
+    * exact but cap at [[CategoryCap]] distinct values per file,
+    * min/max ranges need a range-clustered layout; a Bloom skips files
+    * on an UNCLUSTERED commit up to bits/8 distinct values per file.
+    * Past that the section is omitted (saturation) and the file is
+    * always kept; false positives only cost an extra file open, never
+    * a wrong row. For genuinely unique keys at 100 TB (millions of
     * distinct values per file) a manifest-resident Bloom cannot be
     * both small and useful — range-cluster the key and use
     * [[scanPruned]]; the parquet-native bloom written alongside
-    * (row-group level) still helps inside kept files. `value` is
-    * compared in the same `cast("string")` form the writer hashed. */
+    * (row-group level) still helps inside kept files. The probe hashes
+    * the coerced literal's `cast("string")` form, as the writer did. */
   def scanPrunedBloom(spark: SparkSession, root: String, colName: String,
-                      value: String): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = currentVersion(fs, rootP).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable at $root has no committed snapshot"))
-    val (dataE, dvE) = splitEntries(readManifest(fs, rootP, v))
-    val kept = prunedEntriesBloom(dataE, colName, value)
-    if (kept.isEmpty) return readVersion(spark, root, v).limit(0)
-    readEntriesWithDv(spark, rootP, kept, dvE)
-  }
+                      value: String): DataFrame =
+    scanPrunedEq(spark, root, colName, value)
 
-  /** (total files, files kept) for a [[scanPrunedBloom]] probe. */
+  /** (total data files, data files kept) for a [[scanPrunedBloom]] probe. */
   def pruneCountsBloom(spark: SparkSession, root: String, colName: String,
-                       value: String): (Int, Int) = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = currentVersion(fs, rootP).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable at $root has no committed snapshot"))
-    val all = splitEntries(readManifest(fs, rootP, v))._1
-    (all.size, prunedEntriesBloom(all, colName, value).size)
-  }
+                       value: String): (Int, Int) =
+    keptCounts(spark, root, scanPrunedBloom(spark, root, colName, value))
 
-  private def prunedEntriesBloom(entries: Seq[String], colName: String,
-                                 value: String): Seq[String] =
-    entries.filter { e =>
-      entryBlooms(e).get(colName) match {
-        case Some((m, k, bits)) =>
-          bloomBitsOf(value, m, k).forall(bits.get)
-        case None => true // no bloom recorded (or saturated): never prune
-      }
-    }
+  /** (data files, data files kept) for a filtered [[read]]: what the
+    * data-side [[graft.sources.SnapshotFileIndex]] keeps for the
+    * filters Spark pushed to its scan, i.e. the files the frame opens
+    * when it runs. Planning only, no Spark job. A plan without a data
+    * scan (the optimizer proved the filter false) opens no file. */
+  private def keptCounts(spark: SparkSession, root: String,
+                         pruned: DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import graft.sources.SnapshotFileIndex
+    pruned.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => (s.relation.location, s.dataFilters)
+    }.collectFirst {
+      case (index: SnapshotFileIndex, filters)
+          if !index.entries.exists(isDvEntry) =>
+        (index.entries.size, index.kept(filters).size)
+    }.getOrElse((dataFiles(spark, root).size, 0))
+  }
 
   /** One incremental upsert cycle against the snapshot table —
     * [[graft.streaming.EventStreams.upsertBatch]]'s semantics
@@ -1042,6 +992,9 @@ object SnapshotTable {
                             keys: Seq[String], batchKeys: DataFrame)
       : (Seq[String], Seq[String]) = {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.expressions.{And,
+      AttributeReference, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.types.{LongType, StringType}
     val keyCol = keys.head
     // manifest pre-prune on the FIRST key: recorded ranges bound
     // candidates ONLY when EVERY batch key casts to long — a mixed
@@ -1063,7 +1016,12 @@ object SnapshotTable {
           count(col(keyCol)), count(kc)).head()
         if (r.isNullAt(0) || r.isNullAt(1) ||
             r.getLong(2) != r.getLong(3)) entries
-        else prunedEntries(entries, keyCol, r.getLong(0), r.getLong(1))
+        else {
+          val k = AttributeReference(keyCol, LongType)()
+          val inRange = And(GreaterThanOrEqual(k, Literal(r.getLong(0))),
+            LessThanOrEqual(k, Literal(r.getLong(1))))
+          entries.filter(entryMayMatch(_, inRange))
+        }
       }
     // ...and recorded Blooms prune point-wise for small batches
     val cands =
@@ -1075,12 +1033,11 @@ object SnapshotTable {
           .distinct().limit(BloomProbeMaxKeys + 1)
           .collect().map(_.getString(0))
         if (probe.length > BloomProbeMaxKeys) rangeCands
-        else rangeCands.filter { e =>
-          entryBlooms(e).get(keyCol) match {
-            case Some((m, k, bits)) =>
-              probe.exists(v => bloomBitsOf(v, m, k).forall(bits.get))
-            case None => true
-          }
+        else {
+          // string literals in the writer's cast("string") hash form
+          val anyKey = In(AttributeReference(keyCol, StringType)(),
+            probe.toSeq.map(v => Literal(v)))
+          rangeCands.filter(entryMayMatch(_, anyKey))
         }
       }
     // hit detection: which candidate files actually HOLD a batch key
@@ -1865,27 +1822,35 @@ object SnapshotTable {
     v.map(ver => (ver, out._1, out._2))
   }
 
-  /** Can a file possibly hold rows matching `filter`? — the
-    * Catalyst-filter twin of the scanPruned* family, evaluated against
-    * ONE manifest entry's recorded sections, used by
-    * [[graft.sources.SnapshotFileIndex]] to turn Spark's pushed-down
-    * data filters into file skipping with no explicit scanPruned call.
+  /** Can a file possibly hold rows matching `filter`? — THE pruning
+    * predicate, evaluated against ONE manifest entry's recorded
+    * sections. Every file skip goes through it:
+    * [[graft.sources.SnapshotFileIndex]] applies it to Spark's
+    * pushed-down data filters on every [[read]] (so the `scanPruned*`
+    * wrappers and `pruneCounts*` too), and [[detectTouched]]'s
+    * pre-prunes build their range and key-set predicates for it.
     * Strictly a SUPERSET decision (`true` = keep): untranslatable
     * shapes, columns without sections, and non-integral literals all
     * keep the file — Spark still applies the row filter on top, so a
-    * kept-too-much file costs a file open, never a wrong row.
+    * kept-too-much file costs a file open, never a wrong row. The
+    * entry's sections are parsed at most once per call, however many
+    * literals the filter holds.
     *
-    * Translated shapes: `=`/`<=>` (range ∩ category ∩ bloom — the
-    * category/bloom probe uses the literal's `cast("string")` form,
-    * matching what the writer hashed), `<`,`<=`,`>`,`>=` on integral
-    * literals (recorded long ranges), `IN` (any value may match),
-    * `AND` (both sides must keep), `OR` (either side keeps). `NOT`
-    * and everything else keep unconditionally. */
+    * Translated shapes, on a bare attribute: `=`/`<=>` (range ∩
+    * category ∩ bloom — the category/bloom probe uses the literal's
+    * `cast("string")` form, matching what the writer hashed),
+    * `<`,`<=`,`>`,`>=` on integral literals (recorded long ranges),
+    * `IN` (any value may match), `AND` (both sides must keep), `OR`
+    * (either side keeps). `NOT` and everything else keep
+    * unconditionally. */
   private[graft] def entryMayMatch(entry: String,
       filter: org.apache.spark.sql.catalyst.expressions.Expression)
       : Boolean = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types._
+    lazy val stats = entryStats(entry)
+    lazy val categories = entryCategories(entry)
+    lazy val blooms = entryBlooms(entry)
     // the literal's long value when exact (integral types only — a
     // double's truncation under try_cast is sound for equality but
     // subtle for open ranges; keep is always safe, so keep)
@@ -1908,42 +1873,25 @@ object SnapshotTable {
         Option(l.value).map(_.toString)
       case _ => None
     }
-    def eqKeep(name: String, l: Literal): Boolean = {
-      if (l.value == null) return true // null-safe-eq-null: stats blind
-      val rangeKeep = asLong(l) match {
-        case Some(v) => entryStats(entry).get(name) match {
-          case Some((mn, mx)) => mx.forall(_ >= v) && mn.forall(_ <= v)
-          case None => true
-        }
-        case None => true
-      }
-      val catKeep = asString(l) match {
-        case Some(s) => entryCategories(entry).get(name) match {
-          case Some(vs) => vs.contains(s)
-          case None => true
-        }
-        case None => true
-      }
-      val bloomKeep = asString(l) match {
-        case Some(s) => entryBlooms(entry).get(name) match {
-          case Some((m, k, bits)) => bloomBitsOf(s, m, k).forall(bits.get)
-          case None => true
-        }
-        case None => true
-      }
-      rangeKeep && catKeep && bloomKeep
-    }
     def rangeKeep(name: String, lo: Option[Long], hi: Option[Long])
         : Boolean =
-      entryStats(entry).get(name) match {
+      stats.get(name) match {
         case Some((mn, mx)) =>
           lo.forall(l => mx.forall(_ >= l)) &&
             hi.forall(h => mn.forall(_ <= h))
         case None => true
       }
-    filter match {
-      case And(l, r) => entryMayMatch(entry, l) && entryMayMatch(entry, r)
-      case Or(l, r) => entryMayMatch(entry, l) || entryMayMatch(entry, r)
+    def eqKeep(name: String, l: Literal): Boolean =
+      l.value == null || // null-safe-eq-null: stats blind
+        asLong(l).forall(v => rangeKeep(name, Some(v), Some(v))) &&
+          asString(l).forall { s =>
+            categories.get(name).forall(_.contains(s)) &&
+              blooms.get(name).forall { case (m, k, bits) =>
+                bloomBitsOf(s, m, k).forall(bits.get) }
+          }
+    def keep(f: Expression): Boolean = f match {
+      case And(l, r) => keep(l) && keep(r)
+      case Or(l, r) => keep(l) || keep(r)
       case EqualTo(a: AttributeReference, l: Literal) => eqKeep(a.name, l)
       case EqualTo(l: Literal, a: AttributeReference) => eqKeep(a.name, l)
       case EqualNullSafe(a: AttributeReference, l: Literal) => eqKeep(a.name, l)
@@ -1976,6 +1924,7 @@ object SnapshotTable {
           hset.exists(v => eqKeep(a.name, Literal(v, a.dataType)))
       case _ => true
     }
+    keep(filter)
   }
 
   /** Root-relative DATA-file paths of the current snapshot's manifest

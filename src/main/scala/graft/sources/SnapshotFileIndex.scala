@@ -9,7 +9,7 @@ import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
@@ -18,25 +18,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.core.SnapshotTable
 
 /** Manifest-backed [[FileIndex]] for a [[graft.core.SnapshotTable]]
-  * snapshot — the integration that makes stats pruning TRANSPARENT:
-  * Spark's planner hands every file-source scan's pushed-down data
-  * filters to `listFiles`, and this index answers from the manifest's
-  * recorded sections (`col=min:max` ranges, `col#...` categories,
-  * `col~...` Blooms) instead of listing a filesystem — the same
-  * data-skipping hook Delta's TahoeFileIndex and Iceberg's planning
-  * use. A plain `.filter(col("k") === 42)` on
-  * [[graft.core.SnapshotTable.table]] then opens only the files whose
-  * sections admit 42, with no explicit `scanPruned*` call, and the
-  * scan itself stays Spark's native vectorized parquet reader (the
-  * pruning composes with parquet's own row-group stats and Bloom
-  * filters inside each kept file — three layers, one declarative
-  * filter).
+  * snapshot — the ONE place a snapshot read skips files. Spark's
+  * planner hands every file-source scan's pushed-down data filters to
+  * `listFiles`, and this index answers from the manifest's recorded
+  * sections (`col=min:max` ranges, `col#...` categories, `col~...`
+  * Blooms) through [[SnapshotTable.entryMayMatch]] instead of listing
+  * a filesystem — the same data-skipping hook Delta's TahoeFileIndex
+  * and Iceberg's planning use. A plain `.filter(col("k") === 42)` on
+  * [[graft.core.SnapshotTable.read]] opens only the files whose
+  * sections admit 42, with a live deletion vector too (the filter
+  * lands on the data-side scan, below the tombstone anti-join). The
+  * `scanPruned*` methods are that filtered read, and `pruneCounts*`
+  * report [[kept]] for the filters of the same plan. The scan itself
+  * stays Spark's native vectorized parquet reader (the pruning
+  * composes with parquet's own row-group stats and Bloom filters
+  * inside each kept file — three layers, one declarative filter).
   *
-  * Every snapshot read plans through this index, not only
-  * [[graft.core.SnapshotTable.table]] (which is now just
-  * [[graft.core.SnapshotTable.read]]): reads, time travel, the
-  * `scanPruned*` family, the deletion-vector side of merge-on-read,
-  * and the commit paths' read-backs of the files they just wrote.
+  * Every snapshot read plans through this index: reads, time travel,
+  * the deletion-vector side of merge-on-read, and the commit paths'
+  * read-backs of the files they just wrote.
   * The file list and sizes come from the MANIFEST (entries pin the
   * snapshot; `!bytes` sections carry lengths), so constructing and
   * scanning this index performs no per-file filesystem calls at all —
@@ -51,7 +51,7 @@ import graft.core.SnapshotTable
   * Spark re-applies every filter row-level — pruning can only skip
   * files that cannot match, never change a result. */
 final class SnapshotFileIndex(spark: SparkSession, rootP: Path,
-                              entries: Seq[String],
+                              val entries: Seq[String],
                               statuses: Map[String, FileStatus])
     extends FileIndex {
 
@@ -59,17 +59,21 @@ final class SnapshotFileIndex(spark: SparkSession, rootP: Path,
 
   override def partitionSchema: StructType = StructType(Nil)
 
+  /** The entries that may hold rows matching every one of
+    * `dataFilters` — the file-skipping decision of [[listFiles]], one
+    * [[SnapshotTable.entryMayMatch]] call per entry. */
+  def kept(dataFilters: Seq[Expression]): Seq[String] =
+    dataFilters.reduceOption(And(_, _)).fold(entries)(f =>
+      entries.filter(SnapshotTable.entryMayMatch(_, f)))
+
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression])
-      : Seq[PartitionDirectory] = {
-    val kept = dataFilters.foldLeft(entries)((es, f) =>
-      es.filter(e => SnapshotTable.entryMayMatch(e, f)))
-    Seq(PartitionDirectory(InternalRow.empty,
-      kept.map(e => statuses(SnapshotFileIndex.entryPathOf(e))).toArray))
-  }
+      : Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, kept(dataFilters)
+      .map(e => statuses(SnapshotTable.entryPath(e))).toArray))
 
   override def inputFiles: Array[String] =
-    entries.map(e => statuses(SnapshotFileIndex.entryPathOf(e))
+    entries.map(e => statuses(SnapshotTable.entryPath(e))
       .getPath.toString).toArray
 
   override def refresh(): Unit = ()
@@ -80,7 +84,7 @@ final class SnapshotFileIndex(spark: SparkSession, rootP: Path,
                      filter: ParquetMetadataConverter.MetadataFilter)
       : ParquetMetadata =
     ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(
-      statuses(SnapshotFileIndex.entryPathOf(entry)),
+      statuses(SnapshotTable.entryPath(entry)),
       spark.sessionState.newHadoopConf()), filter)
 
   /** The indexed files' schema as `spark.read.parquet` over the same
@@ -93,7 +97,7 @@ final class SnapshotFileIndex(spark: SparkSession, rootP: Path,
   def dataSchema: StructType = {
     val first = entries.head
     val schema = ParquetFileFormat.readSchemaFromFooter(
-      new Footer(statuses(SnapshotFileIndex.entryPathOf(first)).getPath,
+      new Footer(statuses(SnapshotTable.entryPath(first)).getPath,
         footer(first, ParquetMetadataConverter.SKIP_ROW_GROUPS)),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     SnapshotFileIndex.asNullable(schema).asInstanceOf[StructType]
@@ -107,11 +111,6 @@ final class SnapshotFileIndex(spark: SparkSession, rootP: Path,
 }
 
 object SnapshotFileIndex {
-
-  private[sources] def entryPathOf(line: String): String = {
-    val t = line.indexOf('\t')
-    if (t < 0) line else line.substring(0, t)
-  }
 
   /** Spark's (package-private) `DataType.asNullable`: every struct
     * field, array element and map value becomes nullable. */
@@ -132,7 +131,7 @@ object SnapshotFileIndex {
       : SnapshotFileIndex = {
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statuses = entries.map { e =>
-      val rel = entryPathOf(e)
+      val rel = SnapshotTable.entryPath(e)
       val p = fs.makeQualified(new Path(rootP, rel))
       val len = SnapshotTable.entryBytes(e)
         .getOrElse(fs.getFileStatus(p).getLen)

@@ -3,14 +3,17 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.core.SnapshotTable
+import graft.sources.SnapshotFileIndex
 
 /** Transparent data skipping via the manifest-backed FileIndex
   * ([[graft.sources.SnapshotFileIndex]]): plain `.filter(...)` on
-  * `SnapshotTable.table` must open ONLY the files whose recorded
+  * `SnapshotTable.read` must open ONLY the files whose recorded
   * sections admit the predicate — proven through the executed scan's
   * `numFiles` metric, not row counts (parquet row-group pruning hides
   * unskipped files from row-level evidence). */
@@ -38,7 +41,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
       spark.range(0L, 400L).selectExpr("id as k", "md5(concat('v', id)) as v")
         .repartitionByRange(4, col("k")),
       statsCols = Seq("k"), bloomCols = Seq("k"))
-    val t = SnapshotTable.table(spark, root)
+    val t = SnapshotTable.read(spark, root)
     assert(scannedFiles(t) == 4L) // no filter: every file
 
     def check(cond: org.apache.spark.sql.Column, maxFiles: Long): Unit = {
@@ -77,7 +80,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
           "concat('g', id % 4) as g")
         .repartition(4, col("g")),
       categoryCols = Seq("g"))
-    val t = SnapshotTable.table(spark, root)
+    val t = SnapshotTable.read(spark, root)
     val total = scannedFiles(t)
     val one = t.filter(col("g") === "g2")
     val n = scannedFiles(one)
@@ -93,17 +96,171 @@ class SnapshotFileIndexSpec extends SparkSpec {
       spark.range(0L, 100L).selectExpr("id as k", "concat('v', id) as v")
         .repartitionByRange(4, col("k")), statsCols = Seq("k"))
     SnapshotTable.deleteWhereDV(spark, root, col("k") === 7L)
-    val t = SnapshotTable.table(spark, root)
+    val t = SnapshotTable.read(spark, root)
     assert(t.count() == 99L, "the fallback must apply the tombstones")
     assert(t.filter(col("k") === 7L).count() == 0L)
     // after compaction folds the DV, transparent pruning returns
     SnapshotTable.compactSnapshot(spark, root,
       targetFileBytes = 1L, statsCols = Seq("k"))
     assert(SnapshotTable.dvFileCount(spark, root) == 0)
-    val t2 = SnapshotTable.table(spark, root)
+    val t2 = SnapshotTable.read(spark, root)
     assert(t2.count() == 99L)
     assert(scannedFiles(t2.filter(col("k") === 50L)) <
       scannedFiles(t2))
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** The data-side scan of a snapshot plan (the deletion-vector side
+    * scans `_dv/` entries), looked up through adaptive plans too. */
+  private def dataScan(plan: SparkPlan): FileSourceScanExec = {
+    val scans = Aqe.collect(plan) {
+      case s: FileSourceScanExec if (s.relation.location match {
+        case i: SnapshotFileIndex => !i.entries.exists(_.startsWith("_dv/"))
+        case _ => false
+      }) => s
+    }
+    assert(scans.size == 1, s"expected one data scan:\n$plan")
+    scans.head
+  }
+
+  /** Base names of the files `df`'s data scan keeps: the index's
+    * decision for the filters Spark pushed to that scan. */
+  private def keptFiles(df: DataFrame): Set[String] = {
+    val s = dataScan(df.queryExecution.sparkPlan)
+    s.relation.location.asInstanceOf[SnapshotFileIndex].kept(s.dataFilters)
+      .map(e => new Path(SnapshotTable.entryPath(e)).getName).toSet
+  }
+
+  /** The explicit pruning predicates the snapshot format had before
+    * every skip went through `entryMayMatch`, copied as the reference:
+    * recorded range intersects `[lo, hi]`, recorded category set holds
+    * the value, recorded Bloom may hold the value's string form; an
+    * entry without the section is kept. */
+  private object Reference {
+    def range(entries: Seq[String], c: String, lo: Long, hi: Long)
+        : Seq[String] = entries.filter { e =>
+      SnapshotTable.entryStats(e).get(c) match {
+        case Some((mn, mx)) => mx.forall(_ >= lo) && mn.forall(_ <= hi)
+        case None => true
+      }
+    }
+    def category(entries: Seq[String], c: String, v: String)
+        : Seq[String] = entries.filter { e =>
+      SnapshotTable.entryCategories(e).get(c) match {
+        case Some(vs) => vs.contains(v)
+        case None => true
+      }
+    }
+    def bloom(entries: Seq[String], c: String, v: String)
+        : Seq[String] = entries.filter { e =>
+      SnapshotTable.entryBlooms(e).get(c) match {
+        case Some((m, k, bits)) =>
+          SnapshotTable.bloomBitsOf(v, m, k).forall(bits.get)
+        case None => true
+      }
+    }
+  }
+
+  test("differential: every scanPruned* wrapper keeps the files the " +
+      "explicit predicates kept, pruneCounts* matches the executed " +
+      "scan, rows match the filtered read — without and with a live DV") {
+    val root = freshRoot()
+    // the benchmark's table shape: 8 files range-clustered on k, range
+    // stats on k, a category on flag, a 32768-bit Bloom on long partkey
+    val flags = array(lit("A"), lit("N"), lit("R"))
+    SnapshotTable.commit(spark, root,
+      spark.range(0L, 32000L, 1L, 4).select(col("id").as("k"),
+          (pmod(xxhash64(col("id"), lit(17L)), lit(50000L)) + 1L)
+            .as("partkey"),
+          element_at(flags,
+            (pmod(xxhash64(col("id"), lit(23L)), lit(3L)) + 1L).cast("int"))
+            .as("flag"))
+        .repartitionByRange(8, col("k")),
+      statsCols = Seq("k"), categoryCols = Seq("flag"),
+      bloomCols = Seq("partkey"), bloomBits = 32768)
+    val rnd = new scala.util.Random(8L)
+    val present = SnapshotTable.read(spark, root)
+      .select("partkey").as[Long](org.apache.spark.sql.Encoders.scalaLong)
+      .collect()
+    val ranges = Seq.fill(4) {
+      val lo = rnd.nextInt(32000).toLong
+      (lo, lo + (if (rnd.nextBoolean()) 0L else 200L))
+    }
+    val partkeys = Seq.fill(2)(present(rnd.nextInt(present.length))) ++
+      Seq.fill(2)(1L + rnd.nextInt(50000))
+    val keyProbe = rnd.nextInt(32000).toLong
+
+    def check(): Unit = {
+      val dataE = manifest(root, tip(root)).filterNot(_.startsWith("_dv/"))
+      def names(es: Seq[String]): Set[String] =
+        es.map(e => new Path(SnapshotTable.entryPath(e)).getName).toSet
+      val all = SnapshotTable.read(spark, root).collect()
+      val unfiltered = SnapshotTable.read(spark, root)
+      unfiltered.collect()
+      val total = dataScan(unfiltered.queryExecution.executedPlan)
+        .metrics("numFiles").value
+      assert(total == dataE.size)
+      def same(label: String, wrapper: DataFrame, counts: (Int, Int),
+               reference: Seq[String], exact: Boolean, pred: Column,
+               rowPred: Row => Boolean): Long = {
+        val kept = keptFiles(wrapper)
+        if (exact) assert(kept == names(reference), label)
+        else assert(kept.subsetOf(names(reference)), label)
+        // every file that holds a matching row is kept
+        val matching = spark.read.parquet(pathsOf(root, dataE): _*)
+          .filter(pred).select(input_file_name()).distinct().collect()
+          .map(r => new Path(r.getString(0)).getName).toSet
+        assert(matching.subsetOf(kept), s"$label dropped a matching file")
+        assert(counts == ((dataE.size, kept.size)), label)
+        val rows = wrapper.collect().map(_.toSeq).toSet
+        val opened = dataScan(wrapper.queryExecution.executedPlan)
+          .metrics("numFiles").value
+        assert(opened == counts._2, s"$label opened $opened files")
+        assert(rows == all.filter(rowPred).map(_.toSeq).toSet, label)
+        opened
+      }
+      ranges.foreach { case (lo, hi) =>
+        val opened = same(s"k in [$lo, $hi]",
+          SnapshotTable.scanPruned(spark, root, "k", lo, hi),
+          SnapshotTable.pruneCounts(spark, root, "k", lo, hi),
+          Reference.range(dataE, "k", lo, hi), exact = true,
+          col("k").between(lo, hi),
+          r => r.getLong(0) >= lo && r.getLong(0) <= hi)
+        assert(opened < total, s"k in [$lo, $hi] opened $opened of $total")
+      }
+      partkeys.foreach { pk =>
+        same(s"partkey = $pk",
+          SnapshotTable.scanPrunedBloom(spark, root, "partkey", pk.toString),
+          SnapshotTable.pruneCountsBloom(spark, root, "partkey", pk.toString),
+          Reference.bloom(dataE, "partkey", pk.toString), exact = true,
+          col("partkey") === pk, _.getLong(1) == pk)
+        // a pushed long literal keeps the same Bloom file set
+        assert(keptFiles(SnapshotTable.read(spark, root)
+            .filter(col("partkey") === pk)) ==
+          names(Reference.bloom(dataE, "partkey", pk.toString)))
+      }
+      Seq("A", "R", "Z").foreach { f =>
+        same(s"flag = $f",
+          SnapshotTable.scanPrunedEq(spark, root, "flag", f),
+          SnapshotTable.pruneCountsEq(spark, root, "flag", f),
+          Reference.category(dataE, "flag", f), exact = true,
+          col("flag") === f, _.getString(2) == f)
+      }
+      // k carries range stats but no category: the equality probe
+      // also range-prunes, so it keeps a subset of the category-only
+      // reference (which keeps every file)
+      same(s"k = $keyProbe",
+        SnapshotTable.scanPrunedEq(spark, root, "k", keyProbe.toString),
+        SnapshotTable.pruneCountsEq(spark, root, "k", keyProbe.toString),
+        Reference.category(dataE, "k", keyProbe.toString), exact = false,
+        col("k") === keyProbe, _.getLong(0) == keyProbe)
+    }
+    check()
+    val (_, n, _) = SnapshotTable.deleteWhereDV(spark, root,
+      col("k") % 997 === 5L)
+    assert(n > 0 && SnapshotTable.dvFileCount(spark, root) > 0)
+    check()
   }
 
   /** The manifest lines of `root`'s version `v`, read fs-level. */

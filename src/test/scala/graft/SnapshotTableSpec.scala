@@ -399,6 +399,36 @@ class SnapshotTableSpec extends SparkSpec {
     assert(seen.count(_ == "a") == 4 && seen.count(_ == "b") == 4)
   }
 
+  test("version claims on the local filesystem are exclusive: two " +
+      "claimers that both saw the lock absent get one claim between them") {
+    val rootP = new Path(freshRoot())
+    // a local FS whose exists() holds each lock probe until both
+    // claimers have probed — both pass Hadoop's exists-then-create
+    // check before either creates the lock
+    val bothProbed = new java.util.concurrent.CyclicBarrier(2)
+    val fs = new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def exists(p: Path): Boolean = {
+        val found = super.exists(p)
+        if (p.getName.endsWith(".lock"))
+          bothProbed.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        found
+      }
+    }
+    fs.initialize(java.net.URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new Path(rootP, "_manifests"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try {
+      val claims = Seq.fill(2)(scala.concurrent.Future(
+        SnapshotTable.claimVersion(fs, rootP, 1L)))
+      val won = claims.map(scala.concurrent.Await.result(_,
+        scala.concurrent.duration.Duration(120, "s")))
+      assert(won.count(identity) == 1, s"claims won: $won")
+    } finally pool.shutdownNow()
+  }
+
   test("streaming upsertSink on the snapshot layout: micro-batches " +
       "commit versions; the final table matches the batch merge") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
