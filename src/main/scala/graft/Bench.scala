@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every suite query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line of per-query wall seconds.
-  *
-  * Results are forced through the `noop` sink, not `count()`: count lets
-  * Catalyst prune projections (a map-only query would measure nothing),
-  * while noop executes the full physical plan and discards rows.
+import graft.core.Metrics
+
+/** Benchmark main: runs every suite query on SPARK_GRAFT_SF_DIR through
+  * the profiler ([[graft.core.Metrics.profile]]) and prints one JSON
+  * line of per-query wall seconds (construct + exec). A query whose
+  * runs fail is named on stderr, left out of the record, and makes the
+  * main exit 1 after BENCH_DETAIL.json is written.
   */
 object Bench {
 
@@ -57,25 +58,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.core.Session.cpus.toString
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // see core.Session: keep CPU-bound compact-row stages parallel
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.Session.cpus
+    val spark = graft.core.Session.local("graft-bench")
 
     // JVM + parquet-footer warmup so query 1 doesn't pay session costs.
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-
-    val metrics = new graft.core.MetricsListener
-    spark.listenerManager.register(metrics)
 
     // optional diagnostic subset: SPARK_GRAFT_BENCH_FILTER=regex runs
     // only matching queries (isolates suite-order effects from
@@ -101,41 +88,15 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3))
     val loadStart = loadavg()
 
-    def runReps(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        labelPrefix: String): Seq[Double] =
-      (1 to reps).map { r =>
-        val lbl = s"$labelPrefix$name#$r"
-        metrics.label(lbl)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-          }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        // listener callbacks are async: wait for this run's event before
-        // relabeling, or shuffle bytes get attributed to the next run.
-        // 30 s cap — the old 3 s silently misattributed under a starved
-        // host; if even 30 s is not enough, say so LOUDLY.
-        var tries = 0
-        while (ok && metrics.get(lbl).isEmpty && tries < 300) {
-          Thread.sleep(100); tries += 1
-        }
-        if (ok && metrics.get(lbl).isEmpty)
-          System.err.println(s"[bench] WARN: no listener event for $lbl " +
-            "after 30 s — shuffle attribution for this query is unreliable")
-        // queries are independent: any RDD still persisted (checkpoint
-        // blocks from iterative operators) is leaked state that would
-        // squeeze later queries' execution memory over a 100+-query run
-        graft.core.Checkpoints.freeAllPersisted(spark)
-        elapsed
+    def runReps(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Metrics.Record] =
+      (1 to reps).map { _ =>
+        val r = Metrics.profile(spark)(fn(spark, sfDir))
+        r.error.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+        r
       }
 
-    val firstPass = selected.map { case (name, (fn, _)) =>
-      val times = runReps(name, fn, "")
-      val shuffle = (1 to reps).flatMap(r => metrics.get(s"$name#$r")).headOption
-      (name, times, shuffle)
-    }
+    val firstPass = selected.map { case (name, (fn, _)) => (name, runReps(name, fn)) }
 
     // BASELINE-relative outlier re-probe: best-of-N inside ONE loaded
     // window does not decorrelate from sustained host load (the round-5
@@ -145,23 +106,33 @@ object Bench {
     // all runs. Queries with no baseline (new this round) are skipped —
     // the quiet record catches up when it is re-committed.
     val baseline = quietBaseline()
-    val reprobed = firstPass.map { case (name, times, shuffle) =>
-      val needsReprobe = baseline.get(name).exists(q => times.min > 2 * q)
-      val allTimes =
-        if (!needsReprobe) times
-        else times ++ runReps(name, Queries.queries(name), "re:")
-      (name, allTimes, shuffle, needsReprobe)
+    val reprobed = firstPass.map { case (name, runs) =>
+      val needsReprobe = runs.forall(_.ok) &&
+        baseline.get(name).exists(q => runs.flatMap(_.wallS).min > 2 * q)
+      val allRuns =
+        if (!needsReprobe) runs
+        else runs ++ runReps(name, Queries.queries(name))
+      (name, allRuns, needsReprobe)
     }
-    val nReprobed = reprobed.count(_._4)
+    val nReprobed = reprobed.count(_._3)
 
-    val results = reprobed.map { case (name, times, shuffle, _) =>
+    // A failed rep is not a time: a query with any failed run is left
+    // out of every per-query map (its time-to-exception would otherwise
+    // fold into BENCH_QUIET as a pin) and fails the whole run below.
+    val (passed, failed) = reprobed.partition(_._2.forall(_.ok))
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] left out of the record, a run failed: " +
+        failed.map(_._1).mkString(", "))
+
+    val results = passed.map { case (name, runs, _) =>
+      val times = runs.flatMap(_.wallS)
       val sorted = times.sorted
       // true median: for even N average the two middles — the upper-middle
       // element alone would record a worse-than-median "typical" value
       val med =
         if (sorted.length % 2 == 1) sorted(sorted.length / 2)
         else (sorted(sorted.length / 2 - 1) + sorted(sorted.length / 2)) / 2
-      (name, sorted.head, med, times, shuffle)
+      (name, sorted.head, med, times, runs.head.shuffleBytes)
     }
     val total = results.map(_._2).sum
     val loadEnd = loadavg()
@@ -181,8 +152,7 @@ object Bench {
       "\"" + k + "\":[" + ts.map(t => f"$t%.3f").mkString(",") + "]"
     }.mkString("{", ",", "}")
     val shuffleMb = results.map { case (k, _, _, _, sh) =>
-      val mb = sh.map(_.shuffleBytes / 1e6).getOrElse(-1.0) // -1 = unattributed, loud
-      "\"" + k + "\":" + f"$mb%.1f"
+      "\"" + k + "\":" + f"${sh / 1e6}%.1f"
     }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
@@ -201,5 +171,6 @@ object Bench {
     val truncated = results.size > topN
     println(s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","n_queries":${results.size},"reps":$reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"n_reprobed":$nReprobed,"queries":$top,"queries_truncated":$truncated,"queries_shown":${math.min(topN, results.size)},"detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

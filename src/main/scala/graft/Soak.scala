@@ -226,9 +226,6 @@ object Soak {
     val nDocs = docs10.count()
     println(s"[soak] corpus: $nDocs docs, ${emb10.count()} embeddings")
 
-    val metrics = new core.MetricsListener
-    spark.listenerManager.register(metrics)
-
     // optional diagnostic subset (the bench-filter convention):
     // SPARK_GRAFT_SOAK_FILTER=regex runs only matching rows — skipped
     // rows report -1 everywhere so a filtered record can never be
@@ -237,16 +234,10 @@ object Soak {
     def run(name: String)(df: => DataFrame): (String, Double, Double, Double) = {
       if (soakFilter.exists(_.findFirstIn(name).isEmpty))
         return (name, -1.0, -1.0, -1.0)
-      metrics.label(name)
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      var tries = 0
-      while (metrics.get(name).isEmpty && tries < 300) { Thread.sleep(100); tries += 1 }
-      val m = metrics.get(name)
-      val (shuf, spill) = m.map(q => (q.shuffleBytes / 1e6, q.spillBytes / 1e6))
-        .getOrElse((-1.0, -1.0))
-      core.Checkpoints.freeAllPersisted(spark)
+      val r = core.Metrics.profile(spark)(df)
+      r.error.foreach(e => throw e)
+      val wall = r.wallS.get
+      val (shuf, spill) = (r.shuffleBytes / 1e6, r.spillBytes / 1e6)
       println(f"[soak] $name%-28s ${wall}%8.2f s  shuffle ${shuf}%10.1f MB  spill ${spill}%10.1f MB")
       (name, wall, shuf, spill)
     }

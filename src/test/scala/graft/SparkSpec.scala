@@ -3,25 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole test run (JVM is forked once). */
+/** One shared local session for the whole test run (JVM is forked once),
+  * on the production conf of [[graft.core.Session]]; only the master and
+  * the warehouse dir are its own. */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
+  lazy val spark: SparkSession = graft.core.Session.build(
+    SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       // fresh warehouse per JVM: the in-memory catalog forgets tables on
       // exit but their files would survive and break saveAsTable reruns
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+        java.nio.file.Files.createTempDirectory("graft_wh").toString),
+    cpus = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
