@@ -8,7 +8,8 @@ import graft.core.Metrics
   * the profiler ([[graft.core.Metrics.profile]]) and prints one JSON
   * line of per-query wall seconds (construct + exec). A query whose
   * runs fail is named on stderr, left out of the record, and makes the
-  * main exit 1 after BENCH_DETAIL.json is written.
+  * main exit 1 after BENCH_DETAIL.json is written; so does a failed
+  * warm-up.
   */
 object Bench {
 
@@ -61,8 +62,11 @@ object Bench {
     val cpus = graft.core.Session.cpus
     val spark = graft.core.Session.local("graft-bench")
 
-    // JVM + parquet-footer warmup so query 1 doesn't pay session costs.
-    SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    // JVM + parquet-footer warmup so query 1 doesn't pay session costs;
+    // a failed warm-up is named and fails the run like a failed query.
+    val warmUp = Metrics.profile(spark)(SparkEntry.entry(spark))
+    warmUp.error.foreach(e =>
+      System.err.println(s"[bench] warm-up failed: ${e.getMessage}"))
 
     // optional diagnostic subset: SPARK_GRAFT_BENCH_FILTER=regex runs
     // only matching queries (isolates suite-order effects from
@@ -171,6 +175,6 @@ object Bench {
     val truncated = results.size > topN
     println(s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","n_queries":${results.size},"reps":$reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"n_reprobed":$nReprobed,"queries":$top,"queries_truncated":$truncated,"queries_shown":${math.min(topN, results.size)},"detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    if (failed.nonEmpty || !warmUp.ok) sys.exit(1)
   }
 }

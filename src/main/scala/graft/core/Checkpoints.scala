@@ -1,25 +1,31 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Block-manager hygiene for iterative operators and long-lived
-  * sessions.
+/** The one place the engine checkpoints a frame, and the one place it
+  * releases a checkpoint.
   *
   * `Dataset.localCheckpoint()` persists its data as RDD blocks that
   * OUTLIVE the Dataset reference — `Dataset.unpersist()` only clears
   * cache-manager entries, never checkpoint blocks. An iterative
-  * operator that checkpoints per generation therefore leaks every
-  * superseded generation into executor storage memory, and a session
-  * running many such queries accumulates dead blocks until execution
-  * memory is squeezed into spilling (observed: a full bench run
-  * degrading mid-suite queries 20-60× vs the same query standalone).
+  * operator that checkpoints per generation therefore frees each
+  * superseded generation itself, or a long session accumulates dead
+  * blocks until execution memory is squeezed into spilling (observed:
+  * a full bench run degrading mid-suite queries 20-60× vs the same
+  * query standalone).
   *
-  * [[eager]] tags each checkpoint with the RDD ids it persisted (the
-  * driver loop is single-threaded, so the before/after diff of
-  * `getPersistentRDDs` is exactly this checkpoint's blocks);
-  * [[free]] drops a superseded generation's blocks by id;
+  * The checkpointed frame is its own handle: its analyzed plan is a
+  * `LogicalRDD` over exactly the RDD the checkpoint persisted, so
+  * [[free]] needs nothing but the frame. A frame DERIVED from a
+  * checkpoint (a projection, a join) has another root, and freeing it
+  * is a no-op — a loop that keeps a projection of its checkpoint frees
+  * the checkpoint itself. One-shot checkpoints that no loop supersedes
+  * (edge tables, construct-phase materializations) are left to Spark's
+  * ContextCleaner, which unpersists an RDD once nothing references it
+  * (its weak-reference sweep runs at each driver GC).
   * [[freeAllPersisted]] is the harness-level sweep between independent
-  * queries.
+  * queries; it drops checkpoint blocks only, never a user `.cache()`.
   *
   * BACKEND CHOICE, named: `localCheckpoint` blocks live in
   * NON-REPLICATED executor storage and are NON-RECOMPUTABLE once
@@ -32,17 +38,27 @@ import org.apache.spark.sql.DataFrame
   * `SparkContext.setCheckpointDir`) to route [[eager]]/[[lazily]]
   * through `Dataset.checkpoint` — data lands in the reliable store
   * and survives executor loss, at the price of a write per
-  * checkpoint. The [[free]]/[[freeAllPersisted]] hygiene is
-  * backend-agnostic: reliable checkpoints leave no persistent BLOCKS,
-  * but they do leave FILES, and [[free]] deletes a superseded
-  * generation's checkpoint files along with any blocks — without
-  * that, per-generation iterative loops would grow the checkpoint
-  * directory without bound.
+  * checkpoint. Reliable checkpoints leave no persistent BLOCKS, but
+  * they do leave FILES, and [[free]] deletes a superseded generation's
+  * checkpoint files along with any blocks — without that,
+  * per-generation iterative loops would grow the checkpoint directory
+  * without bound.
   */
 object Checkpoints {
 
-  private def backendOf(df: DataFrame): String =
-    df.sparkSession.conf.get("spark.graft.checkpoint.backend", "local")
+  private def checkpointed(df: DataFrame, eager: Boolean): DataFrame = {
+    val out = df.sparkSession.conf.get("spark.graft.checkpoint.backend", "local") match {
+      case "local" => df.localCheckpoint(eager)
+      case "reliable" => ensureReliableDir(df); df.checkpoint(eager)
+      case other => sys.error(
+        s"unknown spark.graft.checkpoint.backend '$other' — " +
+          "use 'local' (default) or 'reliable'")
+    }
+    require(out.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+      "checkpoint did not produce a LogicalRDD plan — " +
+        "free would silently leak its blocks")
+    out
+  }
 
   private def ensureReliableDir(df: DataFrame): Unit = {
     val sc = df.sparkSession.sparkContext
@@ -56,39 +72,11 @@ object Checkpoints {
     }
   }
 
-  private def idsOf(out: DataFrame): Seq[Int] = {
-    val ids = out.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
-    require(ids.nonEmpty,
-      "checkpoint did not produce a LogicalRDD plan — " +
-        "checkpoint-block attribution would silently leak")
-    ids
-  }
+  /** Eagerly checkpoint `df`; pass the result to [[free]] once a newer
+    * generation supersedes it. */
+  def eager(df: DataFrame): DataFrame = checkpointed(df, eager = true)
 
-  /** Eagerly localCheckpoint `df`, returning the checkpointed frame
-    * plus the persistent-RDD ids backing it (pass to [[free]] once a
-    * newer generation supersedes it).
-    *
-    * Attribution reads the checkpointed Dataset's OWN plan — its
-    * `LogicalRDD` wraps exactly the RDD `localCheckpoint` persisted —
-    * rather than diffing `getPersistentRDDs` before/after, which is
-    * only sound on a single-threaded driver: under concurrent jobs the
-    * diff could capture another operation's RDD ids, and [[free]] would
-    * then unpersist LIVE localCheckpoint blocks, which are
-    * non-recomputable (lineage truncated) and fail downstream jobs. */
-  def eager(df: DataFrame): (DataFrame, Seq[Int]) = {
-    val out = backendOf(df) match {
-      case "local" => df.localCheckpoint()
-      case "reliable" => ensureReliableDir(df); df.checkpoint()
-      case other => sys.error(
-        s"unknown spark.graft.checkpoint.backend '$other' — " +
-          "use 'local' (default) or 'reliable'")
-    }
-    (out, idsOf(out))
-  }
-
-  /** LAZY localCheckpoint: lineage truncates and blocks persist on
+  /** LAZY checkpoint: lineage truncates and blocks persist on
     * FIRST evaluation — which, for a plan whose scalar subqueries
     * spawn broadcast jobs (e.g. per-iteration max renormalization),
     * happens inside the consuming job itself, so no extra
@@ -96,50 +84,40 @@ object Checkpoints {
     * have: (1) NEVER [[free]] a lazy checkpoint before every plan
     * built on top of it has executed — unpersisted lazy-checkpoint
     * blocks are non-recomputable (lineage is gone) and downstream
-    * jobs fail; leave them for the harness sweep; (2) the first
+    * jobs fail; leave them to the ContextCleaner; (2) the first
     * evaluation races under concurrent actions — fine on the
     * single-action-at-a-time driver loops this repo uses. */
-  def lazily(df: DataFrame): (DataFrame, Seq[Int]) = {
-    val out = backendOf(df) match {
-      case "local" => df.localCheckpoint(eager = false)
-      case "reliable" => ensureReliableDir(df); df.checkpoint(eager = false)
-      case other => sys.error(
-        s"unknown spark.graft.checkpoint.backend '$other' — " +
-          "use 'local' (default) or 'reliable'")
-    }
-    (out, idsOf(out))
-  }
+  def lazily(df: DataFrame): DataFrame = checkpointed(df, eager = false)
 
-  /** Release a SUPERSEDED checkpoint generation: unpersist its
-    * block-manager blocks (local backend; non-blocking, safe with
-    * already-freed ids) AND delete its reliable-checkpoint files
-    * (reliable backend — nothing else ever removes them, so without
-    * this sweep a per-generation iterative loop or a per-micro-batch
-    * sink would grow the checkpoint directory linearly forever). The
-    * freed DataFrame is DEAD either way — local blocks are
+  /** Release a SUPERSEDED checkpoint generation: unpersist the blocks
+    * of the `LogicalRDD` at the root of `df`'s plan (local backend;
+    * non-blocking, safe when already freed) AND delete its
+    * reliable-checkpoint files (reliable backend — nothing else ever
+    * removes them, so without this a per-generation iterative loop or
+    * a per-micro-batch sink would grow the checkpoint directory
+    * linearly forever). A no-op when `df` is not itself a checkpoint.
+    * The freed frame is DEAD either way — local blocks are
     * non-recomputable and the reliable files are gone — so free only
     * once every plan built on it has executed. */
-  def free(df: DataFrame, ids: Seq[Int]): Unit = {
-    val sc = df.sparkSession.sparkContext
-    val persisted = sc.getPersistentRDDs
-    ids.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = false)))
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach { rdd =>
-      if (ids.contains(rdd.id)) rdd.getCheckpointFile.foreach { f =>
+  def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: LogicalRDD =>
+      if (lr.rdd.getStorageLevel.isValid) lr.rdd.unpersist(blocking = false)
+      lr.rdd.getCheckpointFile.foreach { f =>
         val p = new org.apache.hadoop.fs.Path(f)
         // best-effort: a failed delete leaves a file the next sweep or
         // an operator rm can reclaim; it must not fail the job
-        try p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+        try p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+          .delete(p, true)
         catch { case _: java.io.IOException => () }
       }
-    }
+    case _ => ()
   }
 
-  /** Drop EVERY persistent RDD in the session — for harness code
-    * (bench/verify mains) between independent queries, where any block
-    * still persisted is by definition leaked. */
+  /** Drop every checkpoint's blocks in the session — for harness code
+    * (bench/verify mains) between independent queries, where any
+    * checkpoint still persisted is by definition dead. A `.cache()` or
+    * `persist()` of the caller's is left alone. */
   def freeAllPersisted(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values
+    spark.sparkContext.getPersistentRDDs.values.filter(_.isCheckpointed)
       .foreach(_.unpersist(blocking = false))
 }

@@ -77,9 +77,9 @@ object Metrics {
   }
 
   /** Build `frame`, run it through the noop sink and profile the run;
-    * afterwards free every persisted RDD (checkpoint blocks of
-    * iterative operators), so independent runs do not squeeze each
-    * other's execution memory. A frame that throws, while being built
+    * afterwards free every checkpoint's blocks (a caller's own caches
+    * stay), so independent runs do not squeeze each other's execution
+    * memory. A frame that throws, while being built
     * or run, yields a failed record instead of an exception. */
   def profile(spark: SparkSession)(frame: => DataFrame): Record = {
     val sc = spark.sparkContext

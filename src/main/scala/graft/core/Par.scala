@@ -89,9 +89,9 @@ object Par {
     * is returned UNCHANGED: the lazy shape recomputes the kernel per
     * reference, which for a linear-scan kernel is the right trade
     * against materializing an O(corpus) intermediate (the call sites
-    * name the kernel and the reference count). Blocks are swept by the
-    * harness (Checkpoints.freeAllPersisted) like every construct-phase
-    * checkpoint — the pageRank/duplicateClusters precedent.
+    * name the kernel and the reference count). The blocks are freed by
+    * the ContextCleaner once the caller drops the frame, like every
+    * one-shot construct-phase checkpoint ([[Checkpoints]]).
     * `spark.graft.spread.enabled=false` (or SPARK_GRAFT_SPREAD=false)
     * disables it together with the spreads, restoring the pre-round-17
     * plan shape for tests and A/B. */
@@ -103,7 +103,6 @@ object Par {
     val want = spark.sparkContext.defaultParallelism
     if (estimatedInputSlices(df) >= want) return df
     val spread = if (keys.isEmpty) df else df.repartition(want, keys: _*)
-    val (out, _) = Checkpoints.eager(spread)
-    out
+    Checkpoints.eager(spread)
   }
 }

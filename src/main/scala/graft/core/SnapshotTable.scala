@@ -1093,7 +1093,7 @@ object SnapshotTable {
     // guard, range agg, bloom probe, hit join, data write, feed step,
     // plus every rebase), and a batch with expensive lineage (a fresh
     // crawl's parse/join) must pay that lineage exactly once.
-    val (resolved, resolvedIds) = Checkpoints.eager(
+    val resolved = Checkpoints.eager(
       graft.operators.Components
         .mergeFirstWriterWins(Seq(batch), keys, tieBreak))
     try {
@@ -1156,7 +1156,7 @@ object SnapshotTable {
       // so evaluating the step lazily here still reads consistent state
       if (trackChanges) recordChangesStep(spark, root, prevV, v, stepThunk())
       (v, touchedN, untouchedN)
-    } finally Checkpoints.free(resolved, resolvedIds)
+    } finally Checkpoints.free(resolved)
   }
 
   /** Streaming upsert sink on the snapshot layout — the production
@@ -1638,7 +1638,7 @@ object SnapshotTable {
     // the cycle evaluates it several times (key guard, hit join per
     // rebase, the derive under the data write), and the feed step may
     // carry expensive lineage
-    val (net, netIds) = Checkpoints.eager(
+    val net = Checkpoints.eager(
       graft.operators.Components.mergeFirstWriterWins(
         Seq(changes), keys, Seq(col("version") * -1)))
     try {
@@ -1681,7 +1681,7 @@ object SnapshotTable {
         }
       }
       (v.get, out._1, out._2)
-    } finally Checkpoints.free(net, netIds)
+    } finally Checkpoints.free(net)
   }
 
   /** Z-ORDERED commit: [[Catalog.writeZOrdered]]'s layout trick

@@ -232,14 +232,16 @@ object Dedup {
     */
   def duplicateClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     import graft.core.Checkpoints
-    val (edges, edgeIds) = Checkpoints.eager(
+    val edges = Checkpoints.eager(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
         .distinct()) // eager: pair generation runs exactly once
     val labelType = edges.schema("src").dataType
-    var (labels, labelIds) = Checkpoints.eager(
+    var held = Checkpoints.eager(
       edges.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")))
+    // `held` itself, then a projection of it: free `held`, never `labels`
+    var labels = held
     // (A Graph.rankSide-style size-gated broadcast of the label vector
     // was tried here in round 17 and measured a WASH at sf0.1: the
     // node-count job plus two broadcast builds per iteration offset
@@ -263,7 +265,7 @@ object Dedup {
           .select(col("id0").as("id"), col("label"))
       // exactly one row per id carries old != null (its own previous
       // label), so max(old) recovers it and chg = strict improvement
-      val (next, nextIds) = Checkpoints.eager(
+      val next = Checkpoints.eager(
         labels.select(col("id"), col("label"), col("label").as("old"))
           .unionByName(neighborLabels.withColumn("old", lit(null).cast(labelType)))
           .unionByName(hop.withColumn("old", lit(null).cast(labelType)))
@@ -275,12 +277,12 @@ object Dedup {
       changed = next.agg(coalesce(sum(col("chg")), lit(0L))).head().getLong(0)
       // the superseded generation's blocks are dead — free them, or a
       // long session leaks a generation per iteration per query
-      Checkpoints.free(labels, labelIds)
+      Checkpoints.free(held)
+      held = next
       labels = next.select("id", "label")
-      labelIds = nextIds
       iter += 1
     }
-    Checkpoints.free(edges, edgeIds) // final labels are self-contained
+    Checkpoints.free(edges) // final labels are self-contained
     if (changed > 0)
       throw new IllegalStateException(
         s"duplicateClusters did not converge after $maxIter iterations " +

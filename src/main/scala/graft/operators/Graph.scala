@@ -65,12 +65,12 @@ object Graph {
     require(iterations >= 1, "need at least one iteration")
     require(checkpointInterval >= 1, "checkpoint interval must be positive")
     import graft.core.Checkpoints
-    // blocks freed by the harness sweep once the caller is done — the
-    // returned lazy plan reads them on every downstream action
-    val (e, _) = Checkpoints.eager(
+    // the returned lazy plan reads these on every downstream action;
+    // the ContextCleaner frees them once the caller drops the result
+    val e = Checkpoints.eager(
       edges.select(col("src"), col("dst")).distinct()
     ) // edge generation runs exactly once
-    val (nodes, _) = Checkpoints.eager(
+    val nodes = Checkpoints.eager(
       e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id"))).distinct())
     val n = nodes.count() // bounded driver state: one scalar
@@ -80,7 +80,7 @@ object Graph {
     val outDeg = rankSide(e.groupBy("src").agg(count(lit(1)).as("deg")), n)
     val teleport = 15L * scale / (100L * n) // floor, same in the SQL replay
     var ranks = nodes.withColumn("r", lit(scale / n))
-    var rankIds = Seq.empty[Int]
+    var held = ranks // the checkpoint `ranks` reads; none yet, so free is a no-op
     for (i <- 1 to iterations) {
       val sums = e
         .join(rankSide(ranks.withColumnRenamed("id", "src"), n), "src")
@@ -94,18 +94,13 @@ object Graph {
         .select(col("id"), (lit(teleport) +
           expr("(85 * coalesce(s, cast(0 as bigint))) div 100")).as("r"))
       if (i % checkpointInterval == 0 && i < iterations) {
-        val (ck, ckIds) = Checkpoints.eager(next)
-        Checkpoints.free(ranks, rankIds) // superseded generation is dead
-        ranks = ck
-        rankIds = ckIds
+        ranks = Checkpoints.eager(next)
+        Checkpoints.free(held) // superseded generation is dead
+        held = ranks
       } else {
         ranks = next
       }
     }
-    // the edge/node checkpoint blocks stay persisted (their ids are
-    // deliberately discarded above): the returned lazy plan reads them
-    // on every downstream action — the harness sweep (or the caller,
-    // once done) frees them
     ranks.select(col("id"), col("r").as("rank_fp"))
   }
 
@@ -128,9 +123,9 @@ object Graph {
     import graft.core.Checkpoints
     val spark = edges.sparkSession
     import spark.implicits._
-    val (e, _) = Checkpoints.eager(
+    val e = Checkpoints.eager(
       edges.select(col("src"), col("dst")).distinct())
-    val (nodes, _) = Checkpoints.eager(
+    val nodes = Checkpoints.eager(
       e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id"))).distinct())
     val n = nodes.count() // drives the same size-gated broadcast as pageRank
@@ -144,7 +139,7 @@ object Graph {
     var ranks = withSeed
       .withColumn("r", when(col("is_seed"), lit(start)).otherwise(lit(0L)))
       .select("id", "r")
-    var rankIds = Seq.empty[Int]
+    var held = ranks
     for (i <- 1 to iterations) {
       val sums = e
         .join(rankSide(ranks.withColumnRenamed("id", "src"), n), "src")
@@ -156,10 +151,9 @@ object Graph {
           (when(col("is_seed"), lit(teleport)).otherwise(lit(0L)) +
             expr("(85 * coalesce(s, cast(0 as bigint))) div 100")).as("r"))
       if (i % checkpointInterval == 0 && i < iterations) {
-        val (ck, ckIds) = Checkpoints.eager(next)
-        Checkpoints.free(ranks, rankIds)
-        ranks = ck
-        rankIds = ckIds
+        ranks = Checkpoints.eager(next)
+        Checkpoints.free(held)
+        held = ranks
       } else {
         ranks = next
       }
@@ -200,17 +194,17 @@ object Graph {
     * remaining cost is the honest price of 8 edge-join half-steps —
     * q_pagerank's 5 single-step iterations measure ~6 s on the same
     * graph). The broadcast job itself materializes each half-step's
-    * blocks, so no extra actions run; blocks stay persisted for the
-    * harness sweep (lazy checkpoints must not be freed mid-loop —
-    * see [[graft.core.Checkpoints.lazily]]). Returns (id, hub_fp,
-    * auth_fp). */
+    * blocks, so no extra actions run; the ContextCleaner frees the
+    * blocks once nothing references them (lazy checkpoints must not be
+    * freed mid-loop — see [[graft.core.Checkpoints.lazily]]). Returns
+    * (id, hub_fp, auth_fp). */
   def hits(edges: DataFrame, iterations: Int = 5,
            scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     import graft.core.Checkpoints
-    val (e, _) = Checkpoints.eager(
+    val e = Checkpoints.eager(
       edges.select(col("src"), col("dst")).distinct())
-    val (nodes, _) = Checkpoints.eager(
+    val nodes = Checkpoints.eager(
       e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id"))).distinct())
     val n = nodes.count() // drives the same size-gated broadcast as pageRank
@@ -223,13 +217,13 @@ object Graph {
     var hubs = nodes.withColumn("h", lit(scale))
     var auths: DataFrame = null
     for (_ <- 1 to iterations) {
-      val (aRaw, _) = Checkpoints.lazily(nodes.join(
+      val aRaw = Checkpoints.lazily(nodes.join(
         e.join(rankSide(hubs.withColumnRenamed("id", "src"), n), "src")
           .groupBy(col("dst").as("id")).agg(sum("h").as("a")),
         Seq("id"), "left")
         .select(col("id"), coalesce(col("a"), lit(0L)).as("a")))
       auths = renorm(aRaw, "a")
-      val (hRaw, _) = Checkpoints.lazily(nodes.join(
+      val hRaw = Checkpoints.lazily(nodes.join(
         e.join(rankSide(auths.withColumnRenamed("id", "dst"), n), "dst")
           .groupBy(col("src").as("id")).agg(sum("a").as("h")),
         Seq("id"), "left")
@@ -271,10 +265,10 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val (und, _) = Checkpoints.eager(
+    val und = Checkpoints.eager(
       e0.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(e0.select(col("b").as("src"), col("a").as("dst"))))
-    val (nodes, _) = Checkpoints.eager(und.select(col("src").as("id")).distinct())
+    val nodes = Checkpoints.eager(und.select(col("src").as("id")).distinct())
     var visited = nodes.select(col("id").as("v"), col("id").as("u"))
     var frontier = visited
     val layerCounts = Seq.newBuilder[DataFrame]
@@ -282,12 +276,16 @@ object Graph {
       val next = frontier.join(und, frontier("u") === und("src"))
         .select(frontier("v").as("v"), und("dst").as("u")).distinct()
         .join(visited, Seq("v", "u"), "left_anti")
-      val (nf, _) = Checkpoints.eager(next)
+      val nf = Checkpoints.eager(next)
       layerCounts += nf.groupBy("v").agg(count(lit(1)).as(s"n$r"))
-      val (vis, _) = Checkpoints.eager(visited.unionByName(nf))
+      val vis = Checkpoints.eager(visited.unionByName(nf))
+      Checkpoints.free(visited) // a no-op on round 1's projection of nodes
       visited = vis
       frontier = nf
     }
+    // the output reads only nodes and the frontier layers
+    Checkpoints.free(visited)
+    Checkpoints.free(und)
     val consts = (1 to radius).map(r =>
       BigDecimal(1).bigDecimal.divide(BigDecimal(r).bigDecimal, 9,
         java.math.RoundingMode.HALF_UP).toPlainString)
@@ -382,12 +380,11 @@ object Graph {
     def degrees(e: DataFrame): DataFrame =
       e.select(explode(array(col("a"), col("b"))).as("x"))
         .groupBy("x").agg(count(lit(1)).as("d"))
-    val (e0, _) = Checkpoints.eager(
+    var cur = Checkpoints.eager(
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .filter(col("a") =!= col("b")).distinct())
-    var cur = e0
-    var curIds = Seq.empty[Int]
+    var held = cur // the checkpoint `cur` reads
     for (r <- 1 to rounds) {
       val keep = degrees(cur).filter(col("d") >= k).select("x")
       val next = cur
@@ -395,10 +392,9 @@ object Graph {
         .join(keep.withColumnRenamed("x", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
       if (r % checkpointInterval == 0 && r < rounds) {
-        val (ck, ckIds) = Checkpoints.eager(next)
-        Checkpoints.free(cur, curIds)
-        cur = ck
-        curIds = ckIds
+        cur = Checkpoints.eager(next)
+        Checkpoints.free(held)
+        held = cur
       } else {
         cur = next
       }
@@ -433,12 +429,12 @@ object Graph {
     import graft.core.Checkpoints
     val dir0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    val (und, _) = Checkpoints.eager(
+    val und = Checkpoints.eager(
       dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
     var labels = und.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
-    var lblIds = Seq.empty[Int]
+    var held = labels
     for (r <- 1 to rounds) {
       val next = und
         .join(labels.select(col("id").as("dst"), col("lbl").as("nlbl")), "dst")
@@ -448,10 +444,9 @@ object Graph {
         .agg(max(struct(col("cnt"), (-col("nlbl")).as("neg"))).as("m"))
         .select(col("id"), (-col("m.neg")).as("lbl"))
       if (r % checkpointInterval == 0 && r < rounds) {
-        val (ck, ckIds) = Checkpoints.eager(next)
-        Checkpoints.free(labels, lblIds)
-        labels = ck
-        lblIds = ckIds
+        labels = Checkpoints.eager(next)
+        Checkpoints.free(held)
+        held = labels
       } else {
         labels = next
       }
@@ -542,7 +537,7 @@ object Graph {
             greatest(col("v"), col("w")).as("b")))).as("ed"))
         .select(col("ed.a").as("a"), col("ed.b").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
-    val (e0, _) = Checkpoints.eager(
+    var cur = Checkpoints.eager(
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .filter(col("a") =!= col("b")).distinct())
@@ -551,16 +546,12 @@ object Graph {
     // per-reference cost is a full triangle enumeration — a lazy
     // chain re-derives 2^rounds times (the q_hits lesson; measured
     // 67.6 → see BASELINE round-10 notes on the 500k-edge soak graph)
-    var cur = e0
-    var curIds = Seq.empty[Int]
     for (_ <- 1 to rounds) {
       val keep = support(cur).filter(col("support") >= k - 2)
         .select("a", "b")
-      val (ck, ckIds) = Checkpoints.eager(
-        cur.join(keep, Seq("a", "b"), "left_semi"))
-      Checkpoints.free(cur, curIds)
+      val ck = Checkpoints.eager(cur.join(keep, Seq("a", "b"), "left_semi"))
+      Checkpoints.free(cur)
       cur = ck
-      curIds = ckIds
     }
     cur.join(support(cur), Seq("a", "b"), "left")
       .select(col("a"), col("b"),

@@ -422,7 +422,7 @@ object PostTraining {
     val pairs = m.select(least(col("w"), col("l")).as("a"),
         greatest(col("w"), col("l")).as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("n"))
-    val (adj, _) = Checkpoints.eager(
+    val adj = Checkpoints.eager(
       pairs.select(col("a").as("item"), col("b").as("opp"), col("n"))
         .unionByName(pairs.select(col("b").as("item"), col("a").as("opp"),
           col("n"))))
@@ -430,7 +430,7 @@ object PostTraining {
       .join(wins, Seq("item"), "left")
       .select(col("item"), coalesce(col("wins"), lit(0L)).as("wins"))
     var p = items.select(col("item"), lit(1.0).as("p"))
-    var pIds = Seq.empty[Int]
+    var held = p // the checkpoint `p` reads; none yet, so free is a no-op
     for (r <- 1 to rounds) {
       val next = adj
         .join(p.select(col("item"), col("p").as("pi")), Seq("item"))
@@ -447,10 +447,9 @@ object PostTraining {
             (expr("aggregate(terms, cast(0 as double), (acc, x) -> acc + x)") +
               round(lit(2.0) / (col("pi") + lit(1.0)), 9)), 9).as("p"))
       if (r % checkpointInterval == 0 && r < rounds) {
-        val (ck, ckIds) = Checkpoints.eager(next)
-        Checkpoints.free(p, pIds)
-        p = ck
-        pIds = ckIds
+        p = Checkpoints.eager(next)
+        Checkpoints.free(held)
+        held = p
       } else {
         p = next
       }

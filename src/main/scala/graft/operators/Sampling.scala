@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -109,7 +110,7 @@ object Sampling {
     *      (the boundaries come from Spark's reservoir sample; ANY
     *      boundaries give the same global order since partitions are
     *      range-disjoint and internally sorted);
-    *   2. `localCheckpoint` the sorted partitions — the two passes
+    *   2. checkpoint the sorted partitions — the two passes
     *      below each read the materialized blocks, not the shuffle
     *      lineage;
     *   3. pass 1 counts rows per partition (tiny: numPartitions rows
@@ -162,10 +163,9 @@ object Sampling {
       acc.withColumn(s"__s$i", c)
     }
     val sCols = sortCols.indices.map(i => col(s"__s$i"))
-    val sorted = tagged
+    val sorted = Checkpoints.eager(tagged
       .repartitionByRange(n, sCols: _*)
-      .sortWithinPartitions(sCols: _*)
-      .localCheckpoint()
+      .sortWithinPartitions(sCols: _*))
     val mask = (1L << 33) - 1
     val counts = sorted
       .groupBy(spark_partition_id().as("__pid")).agg(count(lit(1)).as("__c"))
@@ -241,10 +241,9 @@ object Sampling {
         case (acc, (c, i)) => acc.withColumn(s"__s$i", c)
       }
     val sCols = sortCols.indices.map(i => col(s"__s$i"))
-    val sliced = tagged
+    val sliced = Checkpoints.eager(tagged
       .repartitionByRange(n, sCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("__pid", spark_partition_id()))
     val parts = sliced.groupBy("__pid")
       .agg(count(lit(1)).as("__c"), sum("__val").as("__sv"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -320,7 +319,7 @@ object Sampling {
     * row per round: (round, id, gain = newly covered gram count).
     *
     * Scale shape: the exploded (id, gram) table materializes ONCE
-    * (localCheckpoint — each round re-reads blocks, not the corpus)
+    * (checkpointed — each round re-reads blocks, not the corpus)
     * and every round is one anti-join against the covered-gram table,
     * one count agg, and a TakeOrdered top-1 (never a full sort). The
     * covered set stays DISTRIBUTED — a union of the winners' gram
@@ -333,10 +332,10 @@ object Sampling {
     require(k >= 1, "k must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    val g = Dedup.shingleSets(docs, idCol, textCol, n)
-      .select(strictLongId(col("id"), "coverageSelect").as("id"),
-        explode(col("sh")).as("gram"))
-      .localCheckpoint()
+    val g = Checkpoints.eager(
+      Dedup.shingleSets(docs, idCol, textCol, n)
+        .select(strictLongId(col("id"), "coverageSelect").as("id"),
+          explode(col("sh")).as("gram")))
     val out = Seq.newBuilder[(Int, Long, Long)]
     var covered: DataFrame = null
     for (r <- 1 to k) {
@@ -436,9 +435,7 @@ object Sampling {
     // second full-corpus pass); with audit off it stays lazy — computed
     // once when the caller materializes the result, and nothing leaks.
     def countsPlan = df.groupBy(col(groupCol)).agg(count(lit(1)).as("__n"))
-    val (counts, countIds) =
-      if (audit) graft.core.Checkpoints.eager(countsPlan)
-      else (countsPlan, Seq.empty[Int])
+    val counts = if (audit) Checkpoints.eager(countsPlan) else countsPlan
     def dec(c: Column) = c.cast("decimal(20,0)")
     val thinned = df.join(broadcast(counts), Seq(groupCol))
       .filter(col("__n") <= target ||
@@ -448,16 +445,16 @@ object Sampling {
     val capped = domainCap(thinned, groupCol, key, cap)
     if (!audit) capped
     else {
-      val (ck, ids) = graft.core.Checkpoints.eager(capped)
+      val ck = Checkpoints.eager(capped)
       val bad = counts.join(
           ck.groupBy(col(groupCol)).agg(count(lit(1)).as("__got")),
           Seq(groupCol), "left")
         .filter(coalesce(col("__got"), lit(0L)) <
           least(col("__n"), lit(cap.toLong)))
         .limit(1).collect()
-      graft.core.Checkpoints.free(counts, countIds)
+      Checkpoints.free(counts)
       if (bad.nonEmpty) {
-        graft.core.Checkpoints.free(ck, ids)
+        Checkpoints.free(ck)
         throw new IllegalStateException(
           s"domainCapThinned: thinning shortfall in group ${bad.head.get(0)} " +
             s"— raise oversample (=$oversample)")

@@ -59,7 +59,7 @@ class ParSpec extends SparkSpec {
     val docs = graft.core.Tables.documents(spark, dir)
       .select("doc_id", "n_chars")
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-    val (ck, ids) = graft.core.Checkpoints.eager(docs)
+    val ck = graft.core.Checkpoints.eager(docs)
     try {
       assert(graft.core.Par.estimatedInputSlices(ck) >=
         spark.sparkContext.defaultParallelism)
@@ -68,6 +68,6 @@ class ParSpec extends SparkSpec {
           org.apache.spark.sql.execution.FormattedMode)
       assert(!p.contains("REPARTITION_BY_NUM"),
         s"already-parallel checkpoint must not re-spread:\n$p")
-    } finally graft.core.Checkpoints.free(ck, ids)
+    } finally graft.core.Checkpoints.free(ck)
   }
 }

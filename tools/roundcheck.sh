@@ -18,6 +18,20 @@ if ! grep -q "(${n_q} queries" README.md; then
 fi
 echo "ok: ${n_q} queries (README matches)"
 
+echo "== checkpoint gate =="
+# core/Checkpoints.scala is the one place the engine checkpoints a frame
+# (it picks the backend and gives free() its handle); a raw checkpoint
+# anywhere else in src/main escapes both. Comment lines do not count.
+raw=$(grep -rnE 'localCheckpoint\(|\.checkpoint\(' src/main --include='*.scala' \
+  | grep -v '^src/main/scala/graft/core/Checkpoints.scala:' \
+  | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//)' || true)
+if [ -n "${raw}" ]; then
+  echo "FAIL: checkpoint outside core/Checkpoints.scala:"
+  printf '%s\n' "${raw}"
+  exit 1
+fi
+echo "ok: every checkpoint goes through core/Checkpoints.scala"
+
 echo "== unit/e2e specs =="
 t_out=$(sbt -batch test 2>&1 | grep -E 'Tests:|TESTS FAILED' | tail -2)
 printf '%s\n' "$t_out"
