@@ -102,16 +102,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * loser retries at a later version. On claim-atomic stores the
   * read-back is belt-and-braces only.
   * Claims linearize version NUMBERS; read-merge-commit CYCLES are
-  * additionally VALIDATED: [[upsertCycle]], [[upsertTargeted]],
-  * [[compactSnapshot]], [[deleteWhere]] and [[applyChangesCycle]]
-  * carry their base version into [[publishValidated]], which commits
-  * at EXACTLY base+1 (the claim is the compare-and-swap) and reports
-  * a conflict otherwise — the caller then re-reads, re-merges and
-  * retries, so two concurrent cyclers SERIALIZE instead of losing
-  * the earlier merge (Iceberg's commit validation). [[append]]
-  * validates too — its manifest union is a read-modify-write of the
-  * file list. Plain [[commit]] (replace semantics — last writer wins
-  * by intent) stays unvalidated and skips past contended numbers.
+  * additionally VALIDATED: every mutation but [[commit]] runs in
+  * [[rebaseLoop]] and carries its base version into
+  * [[publishValidated]], which commits at EXACTLY base+1 (the claim is
+  * the compare-and-swap) and reports a conflict otherwise — the caller
+  * then re-reads, re-merges and retries, so two concurrent cyclers
+  * SERIALIZE instead of losing the earlier merge (Iceberg's commit
+  * validation); [[append]]'s manifest union is a read-modify-write of
+  * the file list too. Plain [[commit]] (replace semantics — last
+  * writer wins by intent) stays unvalidated and skips past contended
+  * numbers.
   * Named residual:
   * a committer that crashes between claim and rename leaves a hole
   * that unvalidated writers skip but validated cyclers refuse loudly
@@ -202,14 +202,23 @@ object SnapshotTable {
     listVersions(fs, rootP)
   }
 
-  /** (name, type) schema signature for compatibility checks — a
+  /** Loud unless `df` has snapshot `bv`'s (name, type) schema — a
     * same-named column of a DIFFERENT type is exactly the
-    * mixed-schema manifest these guards exist to prevent (which file
+    * mixed-schema manifest this guard exists to prevent (which file
     * Spark samples would decide the read schema); column ORDER is
     * free (parquet reads match by name). */
-  private def schemaSig(s: org.apache.spark.sql.types.StructType): Seq[String] =
-    s.fields.map(f => s"${f.name}:${f.dataType.simpleString}")
-      .sorted.toSeq
+  private def requireSchemaOf(spark: SparkSession, root: String, bv: Long,
+                              df: DataFrame, what: String): Unit = {
+    def sig(d: DataFrame) = d.schema.fields
+      .map(f => s"${f.name}:${f.dataType.simpleString}").sorted.toSeq
+    val (have, got) = (sig(readVersion(spark, root, bv)), sig(df))
+    require(have == got,
+      s"$what: schema mismatch — snapshot v$bv has " +
+        s"(${have.mkString(",")}) but the new rows have " +
+        s"(${got.mkString(",")}); a mixed-schema manifest reads " +
+        "nondeterministically, so evolve the schema with " +
+        "evolveAddColumns or a full commit first")
+  }
 
   /** A manifest entry's root-relative file path (the part before the
     * optional TAB-separated stats). */
@@ -228,6 +237,11 @@ object SnapshotTable {
 
   private def isDvEntry(entry: String): Boolean =
     entryPath(entry).startsWith(s"$DvDir/")
+
+  /** A manifest entry's file base name (unique: part names carry a
+    * UUID) — what `__graft_fn` and a tombstone's `file_name` hold. */
+  private def entryName(entry: String): String =
+    new Path(entryPath(entry)).getName
 
   /** Scan manifest `entries` planned from the manifest alone — THE
     * constructor behind every snapshot read: a [[org.apache.spark.sql
@@ -421,11 +435,17 @@ object SnapshotTable {
     readEntriesWithDv(spark, rootP, dataE, dvE)
   }
 
+  /** The manifest sections [[writeDataFiles]] records on its files. */
+  private case class Sections(stats: Seq[String],
+                              categories: Seq[String] = Nil,
+                              blooms: Seq[String] = Nil,
+                              bloomBits: Int = DefaultBloomBits)
+
   /** Write `df`'s parquet files under a fresh unreferenced data
     * directory and return their manifest entries: root-relative path,
-    * the recorded sections of `statsCols` (per-file long min/max),
-    * `categoryCols` (value sets) and `bloomCols` (Blooms of
-    * `bloomBits`), and the file size. Every section is gathered by a
+    * the recorded `sections` (per-file long min/max of `stats`, value
+    * sets of `categories`, Blooms of `bloomBits` over `blooms`), and
+    * the file size. Every section is gathered by a
     * [[SectionStatsTracker]] in the ONE job that writes the files, so
     * building them launches no job after the write. Stats are
     * LONG-typed (`try_cast(c AS BIGINT)`): ids, counts, epoch
@@ -436,10 +456,8 @@ object SnapshotTable {
     * colliding on a directory name. */
   private def writeDataFiles(spark: SparkSession, fs: FileSystem,
                              rootP: Path, df: DataFrame,
-                             statsCols: Seq[String],
-                             categoryCols: Seq[String] = Nil,
-                             bloomCols: Seq[String] = Nil,
-                             bloomBits: Int = DefaultBloomBits): Seq[String] = {
+                             sections: Sections): Seq[String] = {
+    val Sections(statsCols, categoryCols, bloomCols, bloomBits) = sections
     require(bloomBits >= 64 && bloomBits % 8 == 0,
       s"bloomBits must be a multiple of 8 >= 64, got $bloomBits")
     // the stats suffix is a text format (TAB, ',', '=', ':', '#', '~'
@@ -689,8 +707,10 @@ object SnapshotTable {
     * the manifest to publish at base+1 — or `Left(out)` — a no-op
     * against this base (nothing publishes). On conflict the whole
     * attempt re-runs against the new base. This is the rebase loop
-    * under every cycle API ([[upsertCycle]], [[upsertTargeted]],
-    * [[compactSnapshot]], [[deleteWhere]], [[applyChangesCycle]]).
+    * under every validated API: [[upsertCycle]], [[append]],
+    * [[deleteWhereDV]], [[restore]], and through [[copyOnWrite]] the
+    * targeted rewrites ([[upsertTargeted]], [[applyChangesCycle]],
+    * [[deleteWhere]], [[updateWhere]], [[compactSnapshot]]).
     * Returns (Some(committedVersion) | None-for-no-op, out). */
   private def rebaseLoop[A](fs: FileSystem, rootP: Path)
       (attempt: Option[Long] => Either[A, (Seq[String], A)])
@@ -713,6 +733,82 @@ object SnapshotTable {
       "serialize the cyclers")
   }
 
+  /** What a [[copyOnWrite]] attempt writes: `rows` (None: nothing, a
+    * manifest-only commit) as fresh files recording `sections`, and
+    * `step`, the feed step in the `(keys..., change, non-keys...)`
+    * shape — built after the publish, still consistent because the
+    * base's data files are immutable. */
+  private case class Rewrite(rows: Option[DataFrame], sections: Sections,
+                             step: () => DataFrame = () =>
+                               sys.error("this rewrite records no feed step"))
+
+  /** THE copy-on-write core of every targeted mutation
+    * ([[upsertTargeted]], [[applyChangesCycle]], [[deleteWhere]],
+    * [[updateWhere]], [[compactSnapshot]]). Per [[rebaseLoop]] attempt:
+    * split the base manifest into data and DV entries (none without a
+    * base), ask `touch` which data entries to rewrite (None: a no-op,
+    * nothing publishes), hand their rows, tombstones applied, to
+    * `rewrite` (an empty frame of the base's schema when none is
+    * touched, None without a base), and publish the untouched entries
+    * VERBATIM (stats preserved) ++ the DV entries if `keepDv` ++ the
+    * new files. A `track`ed commit stores the rewrite's step: O(what
+    * the mutation touched), never a table diff. Returns (committed
+    * version | None, base version or 0, rewritten, kept verbatim). */
+  private def copyOnWrite(spark: SparkSession, root: String,
+                          track: Boolean, keepDv: Boolean = true)
+      (touch: (Option[Long], Seq[String], Seq[String]) => Option[Seq[String]])
+      (rewrite: (Seq[String], Option[DataFrame]) => Rewrite)
+      : (Option[Long], Long, Int, Int) = {
+    val (fs, rootP) = fsOf(spark, root)
+    val (v, (bv, rewritten, kept, step)) =
+      rebaseLoop[(Long, Int, Int, () => DataFrame)](fs, rootP) { base =>
+        val (dataE, dvE) = base.fold((Seq.empty[String], Seq.empty[String]))(
+          b => splitEntries(readManifest(fs, rootP, b)))
+        val bv = base.getOrElse(0L)
+        touch(base, dataE, dvE) match {
+          case None => Left((bv, 0, dataE.size, null))
+          case Some(touched) =>
+            val untouched = dataE.filterNot(touched.toSet)
+            val rows = base.map { _ =>
+              if (touched.isEmpty)
+                readEntriesWithDv(spark, rootP, dataE, dvE).limit(0)
+              else readEntriesWithDv(spark, rootP, touched, dvE)
+            }
+            val r = rewrite(touched, rows)
+            val newEntries = r.rows.toSeq.flatMap(
+              writeDataFiles(spark, fs, rootP, _, r.sections))
+            Right((untouched ++ (if (keepDv) dvE else Nil) ++ newEntries,
+              (bv, touched.size, untouched.size, r.step)))
+        }
+      }
+    v.foreach(ver =>
+      if (track) recordChangesStep(spark, root, bv, ver, step()))
+    (v, bv, rewritten, kept)
+  }
+
+  /** The keyed-table contract, enforced loudly: a NULL key would
+    * bypass every semi/anti join on the keys (SQL null never equals)
+    * and DUPLICATE instead of replacing. `what` names the caller's
+    * frame in the message. */
+  private def requireNonNullKeys(df: DataFrame, keys: Seq[String],
+                                 what: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    require(df.filter(keys.map(col(_).isNull).reduce(_ || _))
+        .limit(1).isEmpty,
+      s"$what carries NULL in a key (${keys.mkString(",")}) — keyed " +
+        "tables require non-null keys")
+  }
+
+  /** `df`'s rows as change-feed rows `(keys..., change, non-keys...)`,
+    * each tagged `change`. */
+  private def asChanges(df: DataFrame, keys: Seq[String],
+                        change: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val nonKeys = df.columns.filterNot(keys.contains).toSeq
+    df.select(keys.map(col) ++ Seq(lit(change).as("change")) ++
+      nonKeys.map(col): _*)
+  }
+
   /** Commit `df` as the next FULL snapshot (replace semantics — the
     * shape a merge-upsert cycle produces). `statsCols` records
     * per-file long min/max in the manifest for [[scanPruned]].
@@ -728,9 +824,8 @@ object SnapshotTable {
              bloomBits: Int = DefaultBloomBits): Long = {
     val (fs, rootP) = fsOf(spark, root)
     val prev = currentVersion(fs, rootP)
-    val v = publish(fs, rootP,
-      writeDataFiles(spark, fs, rootP, df, statsCols, categoryCols,
-        bloomCols, bloomBits))
+    val v = publish(fs, rootP, writeDataFiles(spark, fs, rootP, df,
+      Sections(statsCols, categoryCols, bloomCols, bloomBits)))
     if (changeKeys.nonEmpty) recordChanges(spark, root, prev, v, changeKeys)
     v
   }
@@ -763,50 +858,36 @@ object SnapshotTable {
              bloomBits: Int = DefaultBloomBits): Long = {
     import org.apache.spark.sql.functions._
     val (fs, rootP) = fsOf(spark, root)
+    // a NULL key cannot be tracked (and would break the very consumers
+    // the feed is for)
     if (changeKeys.nonEmpty)
-      // the keyed contract, loud like the cycles': a NULL key cannot
-      // be tracked (and would break the very consumers the feed is for)
-      require(df.filter(
-          changeKeys.map(col(_).isNull).reduce(_ || _)).limit(1).isEmpty,
-        s"SnapshotTable.append: tracked append carries NULL in a key " +
-          s"(${changeKeys.mkString(",")}) — keyed tables require " +
-          "non-null keys")
-    def checkSchema(bv: Long): Unit = {
-      val have = schemaSig(readVersion(spark, root, bv).schema)
-      val got = schemaSig(df.schema)
-      require(have == got,
-        s"SnapshotTable.append: schema mismatch — snapshot v$bv has " +
-          s"(${have.mkString(",")}) but the appended frame has " +
-          s"(${got.mkString(",")}); a mixed-schema manifest reads " +
-          "nondeterministically, so evolve the schema with " +
-          "evolveAddColumns / a full commit instead")
-    }
-    def checkDisjoint(bv: Long): Unit = if (changeKeys.nonEmpty) {
-      val (entries, dvE) = splitEntries(readManifest(fs, rootP, bv))
-      val bk = df.select(changeKeys.map(col): _*).distinct()
-      val (touched, _) =
-        detectTouched(spark, rootP, entries, dvE, changeKeys, bk)
-      require(touched.isEmpty,
-        s"SnapshotTable.append: tracked append carries keys already " +
-          s"present in snapshot v$bv (${touched.size} file(s) hit) — " +
-          "append is file-level and would DUPLICATE them; route " +
-          "colliding batches through upsertTargeted")
+      requireNonNullKeys(df, changeKeys, "SnapshotTable.append: tracked append")
+    def check(bv: Long): Unit = {
+      requireSchemaOf(spark, root, bv, df, "SnapshotTable.append")
+      if (changeKeys.nonEmpty) {
+        val (entries, dvE) = splitEntries(readManifest(fs, rootP, bv))
+        val bk = df.select(changeKeys.map(col): _*).distinct()
+        val touched = detectTouched(spark, rootP, entries, dvE, changeKeys, bk)
+        require(touched.isEmpty,
+          s"SnapshotTable.append: tracked append carries keys already " +
+            s"present in snapshot v$bv (${touched.size} file(s) hit) — " +
+            "append is file-level and would DUPLICATE them; route " +
+            "colliding batches through upsertTargeted")
+      }
     }
     // fail-fast pre-checks BEFORE the (possibly huge) data write — a
     // mismatched append must not strand a full frame of orphan files
     // for vacuum; the in-loop checks re-run per rebase in case the
     // table moved under us
-    currentVersion(fs, rootP).foreach { bv =>
-      checkSchema(bv); checkDisjoint(bv)
-    }
+    currentVersion(fs, rootP).foreach(check)
     // the new data files don't depend on the base version — write them
     // ONCE; only the manifest union re-runs on a rebase (an append is
     // a read-modify-write of the file LIST, so it validates like the
     // cycles: two concurrent appends must both survive into the tip)
-    val newEntries = writeDataFiles(spark, fs, rootP, df, statsCols,
-      categoryCols, bloomCols, bloomBits)
+    val newEntries = writeDataFiles(spark, fs, rootP, df,
+      Sections(statsCols, categoryCols, bloomCols, bloomBits))
     val (v, _) = rebaseLoop(fs, rootP) { base =>
-      base.foreach { bv => checkSchema(bv); checkDisjoint(bv) }
+      base.foreach(check)
       val prior = base.map(readManifest(fs, rootP, _)).getOrElse(Nil)
       Right((prior ++ newEntries, base))
     }
@@ -814,12 +895,8 @@ object SnapshotTable {
       // the feed step is the appended rows as inserts, read back from
       // the just-written files — O(batch) with no lineage re-pay, and
       // exact by the disjointness guard above
-      val written = scan(spark, rootP, newEntries)
-      val nonKeys = written.columns.filterNot(changeKeys.contains).toSeq
-      recordChangesStep(spark, root,
-        v.get - 1, v.get,
-        written.select(changeKeys.map(col) ++
-          Seq(lit("insert").as("change")) ++ nonKeys.map(col): _*))
+      recordChangesStep(spark, root, v.get - 1, v.get,
+        asChanges(scan(spark, rootP, newEntries), changeKeys, "insert"))
     }
     v.get
   }
@@ -944,29 +1021,38 @@ object SnapshotTable {
     * Idempotent in content: re-delivering a cycle (foreachBatch's
     * at-least-once crash replay) publishes a new version with
     * IDENTICAL rows. Concurrent readers keep their pinned snapshot
-    * throughout.
+    * throughout. A first cycle (empty table) resolves the batch alone.
     *
     * WRITE AMPLIFICATION, named: this path REWRITES the whole merged
     * table every cycle — the right shape when a cycle also wants a
     * fresh global layout (stats re-clustered), and an O(table) cost
     * everywhere else. The scale path is [[upsertTargeted]], which
-    * rewrites only the files actually holding batch keys. */
+    * rewrites only the files actually holding batch keys. The tracked
+    * feed step is batch-scoped all the same (the batch keys' prior
+    * rows against the resolved batch), never a whole-table diff. */
   def upsertCycle(batch: DataFrame, root: String, keys: Seq[String],
                   tieBreak: Seq[org.apache.spark.sql.Column] = Nil,
                   statsCols: Seq[String] = Nil,
                   trackChanges: Boolean = false): Long = {
+    import org.apache.spark.sql.functions.col
     val spark = batch.sparkSession
     val (fs, rootP) = fsOf(spark, root)
-    val (v, base) = rebaseLoop(fs, rootP) { base =>
-      val merged = base match {
+    def merge(frames: DataFrame*): DataFrame =
+      graft.operators.Components.mergeFirstWriterWins(frames, keys, tieBreak)
+    val resolved = merge(batch)
+    val (v, (bv, step)) = rebaseLoop(fs, rootP) { base =>
+      val (merged, step) = base match {
         case Some(bv) =>
-          graft.operators.Components.mergeFirstWriterWins(
-            Seq(batch, readVersion(spark, root, bv)), keys, tieBreak)
-        case None => batch
+          val cur = readVersion(spark, root, bv)
+          (merge(batch, cur), () => diffOf(
+            cur.join(resolved.select(keys.map(col): _*), keys, "left_semi"),
+            resolved, keys))
+        case None => (resolved, () => asChanges(resolved, keys, "insert"))
       }
-      Right((writeDataFiles(spark, fs, rootP, merged, statsCols), base))
+      Right((writeDataFiles(spark, fs, rootP, merged, Sections(statsCols)),
+        (base.getOrElse(0L), step)))
     }
-    if (trackChanges) recordChanges(spark, root, base, v.get, keys)
+    if (trackChanges) recordChangesStep(spark, root, bv, v.get, step())
     v.get
   }
 
@@ -977,10 +1063,10 @@ object SnapshotTable {
     * pre-prune and relies on the scan-side semi-join. */
   private val BloomProbeMaxKeys = 256
 
-  /** Partition snapshot data `entries` into (touched, untouched) by
-    * whether each file actually HOLDS one of `batchKeys`' key tuples —
-    * the shared hit-detection core of [[upsertTargeted]] and
-    * [[applyChangesCycle]]: recorded range stats bound the candidates
+  /** The snapshot data `entries` that actually HOLD one of `batchKeys`'
+    * key tuples — the shared hit detection of [[upsertTargeted]],
+    * [[applyChangesCycle]] and the tracked [[append]]'s collision
+    * guard: recorded range stats bound the candidates
     * when every batch key is long-castable, recorded Blooms prune
     * point-wise for small batches (≤ [[BloomProbeMaxKeys]] distinct
     * keys), and the surviving candidates are read KEY COLUMNS ONLY
@@ -990,7 +1076,7 @@ object SnapshotTable {
   private def detectTouched(spark: SparkSession, rootP: Path,
                             entries: Seq[String], dvE: Seq[String],
                             keys: Seq[String], batchKeys: DataFrame)
-      : (Seq[String], Seq[String]) = {
+      : Seq[String] = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.catalyst.expressions.{And,
       AttributeReference, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
@@ -1048,7 +1134,22 @@ object SnapshotTable {
         .join(batchKeys, keys, "left_semi")
         .select("__graft_fn").distinct().collect()
         .map(_.getString(0)).toSet
-    entries.partition(e => hit.contains(new Path(entryPath(e)).getName))
+    entries.filter(e => hit.contains(entryName(e)))
+  }
+
+  /** The data entries holding a row where `condition` is TRUE — the
+    * hit scan of [[deleteWhere]] and [[updateWhere]], DV-aware: an
+    * already-tombstoned row can neither re-match (touching its file
+    * needlessly) nor resurrect into the rewrite. */
+  private def entriesMatching(spark: SparkSession, rootP: Path,
+                              dataE: Seq[String], dvE: Seq[String],
+                              condition: org.apache.spark.sql.Column)
+      : Seq[String] = {
+    val hit = readWithPos(spark, rootP, dataE, dvE)
+      .filter(condition)
+      .select("__graft_fn")
+      .distinct().collect().map(_.getString(0)).toSet
+    dataE.filter(e => hit.contains(entryName(e)))
   }
 
   /** One incremental upsert cycle that rewrites ONLY the files
@@ -1086,7 +1187,7 @@ object SnapshotTable {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "upsertTargeted needs merge keys")
     val spark = batch.sparkSession
-    val (fs, rootP) = fsOf(spark, root)
+    val rootP = new Path(root)
     // resolve within-batch duplicates ONCE, outside the rebase loop —
     // the same (priority, tieBreak) ordering upsertCycle's merge uses.
     // CHECKPOINTED: the cycle evaluates the batch several times (key
@@ -1097,65 +1198,35 @@ object SnapshotTable {
       graft.operators.Components
         .mergeFirstWriterWins(Seq(batch), keys, tieBreak))
     try {
-      // the keyed-table contract, enforced loudly: a NULL merge key
-      // would bypass the semi/anti joins below (SQL null never equals)
-      // and DUPLICATE instead of replacing — a silent divergence from
-      // upsertCycle's window merge, which groups nulls together
-      require(resolved.filter(
-          keys.map(col(_).isNull).reduce(_ || _)).limit(1).isEmpty,
-        s"upsertTargeted: batch carries NULL in a merge key " +
-          s"(${keys.mkString(",")}) — keyed tables require non-null keys")
+      // a NULL key is a silent divergence from upsertCycle's window
+      // merge, which groups nulls together
+      requireNonNullKeys(resolved, keys, "upsertTargeted: batch")
       // already distinct: mergeFirstWriterWins keeps one row per key
       // tuple, and the guard above rules out null keys — a distinct()
       // here would add a shuffle to every plan that reads batchKeys
       val batchKeys = resolved.select(keys.map(col): _*)
-    val (nv, out) =
-      rebaseLoop[(Long, Int, Int, () => DataFrame)](fs, rootP) {
-        case None =>
-          // first commit: the batch IS the table; the feed step is the
-          // batch as inserts
-          val lines = writeDataFiles(spark, fs, rootP, resolved,
-            statsCols, categoryCols, bloomCols, bloomBits)
-          val nonKeys = resolved.columns.filterNot(keys.contains).toSeq
-          Right((lines, (0L, 0, 0, () => resolved.select(
-            keys.map(col) ++ Seq(lit("insert").as("change")) ++
-              nonKeys.map(col): _*))))
-        case Some(bv) =>
-          val have = schemaSig(readVersion(spark, root, bv).schema)
-          val got = schemaSig(resolved.schema)
-          require(have == got,
-            s"upsertTargeted: schema mismatch — snapshot v$bv has " +
-              s"(${have.mkString(",")}) but the batch has " +
-              s"(${got.mkString(",")}); evolve with evolveAddColumns " +
-              "or a full commit first")
-          val (entries, dvE) = splitEntries(readManifest(fs, rootP, bv))
-          val (touched, untouched) =
-            detectTouched(spark, rootP, entries, dvE, keys, batchKeys)
-          val touchedRows =
-            if (touched.isEmpty) readVersion(spark, root, bv).limit(0)
-            else readEntriesWithDv(spark, rootP, touched, dvE)
+      val (v, _, rewritten, kept) =
+        copyOnWrite(spark, root, trackChanges) { (base, entries, dvE) =>
+          base.foreach(requireSchemaOf(spark, root, _, resolved,
+            "upsertTargeted"))
+          Some(detectTouched(spark, rootP, entries, dvE, keys, batchKeys))
+        } { (_, touchedRows) =>
           // targeted merge: batch keys leave the touched files (the
           // batch's row wins), everything else in them survives; the
-          // resolved batch lands as fresh files
-          val newData = touchedRows.join(batchKeys, keys, "left_anti")
-            .unionByName(resolved)
-          val newEntries = writeDataFiles(spark, fs, rootP, newData,
-            statsCols, categoryCols, bloomCols, bloomBits)
-          // the feed step is batch-scoped: old state of batch keys is
-          // exactly the touched files' matched rows (hit detection
-          // guarantees no other file holds a batch key); upserts never
-          // delete, so diffOf emits insert/update only
-          val prevMatched = touchedRows.join(batchKeys, keys, "left_semi")
-          Right((untouched ++ dvE ++ newEntries,
-            (bv, touched.size, untouched.size,
-              () => diffOf(prevMatched, resolved, keys))))
-      }
-      val (prevV, touchedN, untouchedN, stepThunk) = out
-      val v = nv.get
-      // base-version data files are immutable and outlive the commit,
-      // so evaluating the step lazily here still reads consistent state
-      if (trackChanges) recordChangesStep(spark, root, prevV, v, stepThunk())
-      (v, touchedN, untouchedN)
+          // resolved batch lands as fresh files. The feed step is
+          // batch-scoped: the old state of batch keys is exactly the
+          // touched files' matched rows (hit detection guarantees no
+          // other file holds a batch key), and upserts never delete,
+          // so diffOf emits insert/update only.
+          Rewrite(
+            Some(touchedRows.fold(resolved)(
+              _.join(batchKeys, keys, "left_anti").unionByName(resolved))),
+            Sections(statsCols, categoryCols, bloomCols, bloomBits),
+            () => touchedRows.fold(asChanges(resolved, keys, "insert"))(
+              t => diffOf(t.join(batchKeys, keys, "left_semi"), resolved,
+                keys)))
+        }
+      (v.get, rewritten, kept)
     } finally Checkpoints.free(resolved)
   }
 
@@ -1215,8 +1286,10 @@ object SnapshotTable {
     * handful of files the key lives in, not the table. A predicate
     * matching nothing publishes nothing. Non-empty `changeKeys`
     * records the deletes in the change feed, so CDC consumers retract
-    * downstream state; rewritten files get fresh stats per the
-    * `statsCols`/`categoryCols`/`bloomCols` passed here. Returns
+    * downstream state: the touched files' rows where `condition` is
+    * TRUE, O(touched), never a table diff. Rewritten files get fresh
+    * stats per the `statsCols`/`categoryCols`/`bloomCols` passed here.
+    * Returns
     * (version, filesRewritten, filesKeptVerbatim) — version is the
     * PRIOR version when nothing matched. */
   def deleteWhere(spark: SparkSession, root: String,
@@ -1227,49 +1300,31 @@ object SnapshotTable {
                   bloomCols: Seq[String] = Nil,
                   bloomBits: Int = DefaultBloomBits): (Long, Int, Int) = {
     import org.apache.spark.sql.functions._
-    val (fs, rootP) = fsOf(spark, root)
-    val (nv, out) = rebaseLoop[(Long, Int, Int)](fs, rootP) { base =>
-      val bv = base.getOrElse(throw new IllegalStateException(
-        s"SnapshotTable at $root has no committed snapshot to delete from"))
-      val (dataE, dvE) = splitEntries(readManifest(fs, rootP, bv))
-      // DV-aware source: an already-tombstoned row can neither
-      // re-match (touching a file needlessly) nor resurrect into the
-      // rewrite. Part-file names carry a UUID, so the base name is a
-      // unique key.
-      val hit = readWithPos(spark, rootP, dataE, dvE)
-        .filter(condition)
-        .select(col("__graft_fn"))
-        .distinct().collect().map(_.getString(0)).toSet
-      val (touched, untouched) =
-        dataE.partition(e => hit.contains(new Path(entryPath(e)).getName))
-      if (touched.isEmpty) Left((bv, 0, untouched.size))
-      else {
+    val rootP = new Path(root)
+    val (v, bv, rewritten, kept) =
+      copyOnWrite(spark, root, changeKeys.nonEmpty) { (base, dataE, dvE) =>
+        base.getOrElse(throw new IllegalStateException(
+          s"SnapshotTable at $root has no committed snapshot to delete from"))
+        Some(entriesMatching(spark, rootP, dataE, dvE, condition))
+          .filter(_.nonEmpty)
+      } { (_, rows) =>
         // survivors are the rows where the predicate is NOT TRUE — a
         // row where the condition evaluates to NULL (e.g. a null in
         // the probed column) was not asked to be deleted, and
         // `!condition` would be NULL too, silently dropping it from
         // the rewrite (and the change feed would then propagate that
         // loss to CDC consumers); Delta's copy-on-write delete keeps
-        // not-true rows for exactly this reason
-        val survivors = readEntriesWithDv(spark, rootP, touched, dvE)
-          .filter(!coalesce(condition, lit(false)))
-        val newEntries = writeDataFiles(spark, fs, rootP, survivors,
-          statsCols, categoryCols, bloomCols, bloomBits)
-        // DV entries carry forward verbatim; tombstones naming the
-        // rewritten files go stale-but-harmless (those file names left
-        // the manifest, the anti-join matches nothing) until a
-        // compaction folds everything clean
-        Right((untouched ++ dvE ++ newEntries,
-          (bv, touched.size, untouched.size)))
+        // not-true rows for exactly this reason. DV entries carry
+        // forward verbatim; tombstones naming the rewritten files go
+        // stale-but-harmless (those file names left the manifest, the
+        // anti-join matches nothing) until a compaction folds
+        // everything clean.
+        val old = rows.get
+        Rewrite(Some(old.filter(!coalesce(condition, lit(false)))),
+          Sections(statsCols, categoryCols, bloomCols, bloomBits),
+          () => asChanges(old.filter(condition), changeKeys, "delete"))
       }
-    }
-    val (bv, touchedN, untouchedN) = out
-    nv match {
-      case Some(v) =>
-        if (changeKeys.nonEmpty) recordChanges(spark, root, Some(bv), v, changeKeys)
-        (v, touchedN, untouchedN)
-      case None => (bv, touchedN, untouchedN)
-    }
+    (v.getOrElse(bv), rewritten, kept)
   }
 
   /** Row-level DELETE as MERGE-ON-READ deletion vectors — the
@@ -1334,24 +1389,15 @@ object SnapshotTable {
           val newDv = staged.map(e => s"$DvDir/$nonce/$e")
           // feed step: the matched rows as deletes — lazy, and still
           // consistent post-commit (base data files are immutable)
-          val step = () => {
-            val nonKeys = matched.columns
-              .filterNot(c => changeKeys.contains(c) ||
-                c == "__graft_fn" || c == "__graft_ri").toSeq
-            matched.select(changeKeys.map(col) ++
-              Seq(lit("delete").as("change")) ++ nonKeys.map(col): _*)
-          }
+          val step = () => asChanges(
+            matched.drop("__graft_fn", "__graft_ri"), changeKeys, "delete")
           Right((dataE ++ dvE ++ newDv, (bv, n, newDv.size, step)))
         }
       }
-    val (bv, n, dvFiles, stepThunk) = out
-    nv match {
-      case Some(v) =>
-        if (changeKeys.nonEmpty)
-          recordChangesStep(spark, root, bv, v, stepThunk())
-        (v, n, dvFiles)
-      case None => (bv, n, dvFiles)
-    }
+    val (bv, n, dvFiles, step) = out
+    nv.foreach(v =>
+      if (changeKeys.nonEmpty) recordChangesStep(spark, root, bv, v, step()))
+    (nv.getOrElse(bv), n, dvFiles)
   }
 
   /** ROLLBACK as a manifest-only commit — Delta RESTORE / Iceberg
@@ -1413,58 +1459,42 @@ object SnapshotTable {
     require(sets.map(_._1).distinct.size == sets.size,
       s"updateWhere: duplicate set column in " +
         s"(${sets.map(_._1).mkString(",")}) — one expression per column")
-    val (fs, rootP) = fsOf(spark, root)
-    val (nv, out) =
-      rebaseLoop[(Long, Int, Int, () => DataFrame)](fs, rootP) { base =>
+    val rootP = new Path(root)
+    val (v, bv, rewritten, kept) =
+      copyOnWrite(spark, root, changeKeys.nonEmpty) { (base, dataE, dvE) =>
         val bv = base.getOrElse(throw new IllegalStateException(
           s"SnapshotTable at $root has no committed snapshot to update"))
-        val (dataE, dvE) = splitEntries(readManifest(fs, rootP, bv))
         sets.foreach { case (n, _) =>
           require(
             readVersion(spark, root, bv).columns.contains(n),
             s"updateWhere: column '$n' does not exist — updates never " +
               "change the schema; evolveAddColumns first") }
-        val hit = readWithPos(spark, rootP, dataE, dvE)
-          .filter(condition)
-          .select(col("__graft_fn"))
-          .distinct().collect().map(_.getString(0)).toSet
-        val (touched, untouched) =
-          dataE.partition(e => hit.contains(new Path(entryPath(e)).getName))
-        if (touched.isEmpty) Left((bv, 0, untouched.size, null))
-        else {
-          val oldRows = readEntriesWithDv(spark, rootP, touched, dvE)
-          // NOT-TRUE rows pass through unchanged (NULL-safe, like the
-          // deletes); TRUE rows get each set column replaced — in ONE
-          // projection, so the condition AND every set's right-hand
-          // side resolve against the ORIGINAL row (SQL UPDATE
-          // semantics). A sequential withColumn chain would re-resolve
-          // them against already-updated columns: for
-          // SET status='done', ts=x WHERE status='pending', the second
-          // withColumn's condition re-reads the REWRITTEN status,
-          // evaluates false, and ts silently keeps its old value.
-          val setBy = sets.toMap
-          val newRows = oldRows.select(oldRows.columns.toSeq.map { c =>
-            setBy.get(c) match {
-              case Some(e) => when(coalesce(condition, lit(false)), e)
-                .otherwise(col(c)).as(c)
-              case None => col(c)
-            }
-          }: _*)
-          val newEntries = writeDataFiles(spark, fs, rootP, newRows,
-            statsCols, categoryCols, bloomCols, bloomBits)
-          Right((untouched ++ dvE ++ newEntries,
-            (bv, touched.size, untouched.size,
-              () => diffOf(oldRows, newRows, changeKeys))))
-        }
+        Some(entriesMatching(spark, rootP, dataE, dvE, condition))
+          .filter(_.nonEmpty)
+      } { (_, rows) =>
+        val oldRows = rows.get
+        // NOT-TRUE rows pass through unchanged (NULL-safe, like the
+        // deletes); TRUE rows get each set column replaced — in ONE
+        // projection, so the condition AND every set's right-hand
+        // side resolve against the ORIGINAL row (SQL UPDATE
+        // semantics). A sequential withColumn chain would re-resolve
+        // them against already-updated columns: for
+        // SET status='done', ts=x WHERE status='pending', the second
+        // withColumn's condition re-reads the REWRITTEN status,
+        // evaluates false, and ts silently keeps its old value.
+        val setBy = sets.toMap
+        val newRows = oldRows.select(oldRows.columns.toSeq.map { c =>
+          setBy.get(c) match {
+            case Some(e) => when(coalesce(condition, lit(false)), e)
+              .otherwise(col(c)).as(c)
+            case None => col(c)
+          }
+        }: _*)
+        Rewrite(Some(newRows),
+          Sections(statsCols, categoryCols, bloomCols, bloomBits),
+          () => diffOf(oldRows, newRows, changeKeys))
       }
-    val (bv, touchedN, untouchedN, stepThunk) = out
-    nv match {
-      case Some(v) =>
-        if (changeKeys.nonEmpty)
-          recordChangesStep(spark, root, bv, v, stepThunk())
-        (v, touchedN, untouchedN)
-      case None => (bv, touchedN, untouchedN)
-    }
+    (v.getOrElse(bv), rewritten, kept)
   }
 
   /** The newest version committed AT OR BEFORE `asOfMs` — wall-clock
@@ -1642,45 +1672,29 @@ object SnapshotTable {
       graft.operators.Components.mergeFirstWriterWins(
         Seq(changes), keys, Seq(col("version") * -1)))
     try {
-      // the keyed-table contract, loud like upsertTargeted's: a NULL
-      // key would bypass the semi/anti joins (SQL null never equals)
-      // and strand stale view rows instead of replacing them
-      require(net.filter(
-          keys.map(col(_).isNull).reduce(_ || _)).limit(1).isEmpty,
-        s"applyChangesCycle: feed batch carries NULL in a key " +
-          s"(${keys.mkString(",")}) — keyed views require non-null keys")
+      // a NULL key would strand stale view rows instead of replacing them
+      requireNonNullKeys(net, keys, "applyChangesCycle: feed batch")
       val ups = derive(net.filter(col("change") =!= "delete")
         .drop("change", "version"))
-      val batchKeys = net.select(keys.map(col): _*).distinct()
-      val (fs, rootP) = fsOf(spark, root)
-      val (v, out) = rebaseLoop[(Int, Int)](fs, rootP) { base =>
-        // stats/category/bloom sections recorded per cycle, so the
-        // CDC-maintained view prunes like any hand-committed table —
-        // no dedicated stats pass needed downstream
-        base match {
-          case Some(bv) =>
-            val (entries, dvE) = splitEntries(readManifest(fs, rootP, bv))
-            val (touched, untouched) =
-              detectTouched(spark, rootP, entries, dvE, keys, batchKeys)
-            val touchedRows =
-              if (touched.isEmpty) readVersion(spark, root, bv).limit(0)
-              else readEntriesWithDv(spark, rootP, touched, dvE)
-            // drop EVERY batch key from the touched files (deletes
-            // never return, upserts come back re-derived), keep the
-            // files' other rows; untouched entries never move
-            val merged = touchedRows
-              .join(batchKeys, keys, "left_anti")
-              .unionByName(ups)
-            val newEntries = writeDataFiles(spark, fs, rootP, merged,
-              statsCols, categoryCols, bloomCols, bloomBits)
-            Right((untouched ++ dvE ++ newEntries,
-              (touched.size, untouched.size)))
-          case None =>
-            Right((writeDataFiles(spark, fs, rootP, ups, statsCols,
-              categoryCols, bloomCols, bloomBits), (0, 0)))
+      // already distinct: net holds one row per key tuple, none null
+      val batchKeys = net.select(keys.map(col): _*)
+      val rootP = new Path(root)
+      // stats/category/bloom sections recorded per cycle, so the
+      // CDC-maintained view prunes like any hand-committed table — no
+      // dedicated stats pass needed downstream
+      val (v, _, rewritten, kept) =
+        copyOnWrite(spark, root, track = false) { (_, entries, dvE) =>
+          Some(detectTouched(spark, rootP, entries, dvE, keys, batchKeys))
+        } { (_, touchedRows) =>
+          // drop EVERY batch key from the touched files (deletes never
+          // return, upserts come back re-derived), keep the files'
+          // other rows; untouched entries never move
+          Rewrite(
+            Some(touchedRows.fold(ups)(
+              _.join(batchKeys, keys, "left_anti").unionByName(ups))),
+            Sections(statsCols, categoryCols, bloomCols, bloomBits))
         }
-      }
-      (v.get, out._1, out._2)
+      (v.get, rewritten, kept)
     } finally Checkpoints.free(net)
   }
 
@@ -1752,10 +1766,22 @@ object SnapshotTable {
       : Option[(Long, Int, Int)] = {
     require(targetFileBytes >= 1L, "targetFileBytes must be >= 1")
     val (fs, rootP) = fsOf(spark, root)
-    val (v, out) = rebaseLoop[(Int, Int)](fs, rootP) { base =>
-      val bv = base.getOrElse(throw new IllegalStateException(
+    // recorded sizes when present (manifest-only planning — no
+    // per-file filesystem sweep), getFileStatus only for pre-size
+    // manifests
+    def size(e: String): Long = entryBytes(e).getOrElse(
+      fs.getFileStatus(new Path(rootP, entryPath(e))).getLen)
+    // binpack split: DV-bearing files rewrite regardless of size
+    // (folding is the point); clean files rewrite only when under 3/4
+    // of target (Iceberg's min-file-size default) AND there are at
+    // least two of them to merge
+    val minBytes = targetFileBytes - targetFileBytes / 4
+    // the commit drops ALL sidecar entries: every live tombstone's
+    // file is rewritten, the rest are stale
+    val (v, _, rewritten, kept) = copyOnWrite(spark, root,
+        changeKeys.nonEmpty, keepDv = false) { (base, dataE, dvE) =>
+      base.getOrElse(throw new IllegalStateException(
         s"SnapshotTable at $root has no committed snapshot to compact"))
-      val (dataE, dvE) = splitEntries(readManifest(fs, rootP, bv))
       // LIVE tombstoned files: sidecar-named files still in the
       // manifest (a rewrite by deleteWhere/upsertTargeted leaves a
       // sidecar's names stale-but-harmless — those must not force
@@ -1763,63 +1789,36 @@ object SnapshotTable {
       // file names is bounded by the delete volume, never the table.
       val dvHit: Set[String] =
         if (dvE.isEmpty) Set.empty
-        else {
-          val present = dataE.map(e => new Path(entryPath(e)).getName).toSet
-          scan(spark, rootP, dvE)
-            .select("file_name").distinct().collect()
-            .map(_.getString(0)).toSet.intersect(present)
-        }
-      // binpack split: DV-bearing files rewrite regardless of size
-      // (folding is the point); clean files rewrite only when under
-      // 3/4 of target (Iceberg's min-file-size default) AND there are
-      // at least two of them to merge
-      val minBytes = targetFileBytes - targetFileBytes / 4
-      // recorded sizes when present (manifest-only planning — no
-      // per-file filesystem sweep), getFileStatus only for pre-size
-      // manifests
-      val sized = dataE.map(e => e -> entryBytes(e).getOrElse(
-        fs.getFileStatus(new Path(rootP, entryPath(e))).getLen))
-      val (small, fat) = sized.partition { case (e, len) =>
-        dvHit.contains(new Path(entryPath(e)).getName) || len < minBytes
-      }
-      if (dvHit.isEmpty && small.size < 2) {
-        // nothing to fold or merge; shed all-stale sidecars with a
-        // manifest-only commit so reads stop paying their anti-join
-        if (dvE.nonEmpty) Right((dataE, (0, dataE.size)))
-        else Left((0, dataE.size))
-      } else {
-        val touched = small.map(_._1)
-        val untouched = fat.map(_._1)
-        val want = math.max(1, math.ceil(
-          small.map(_._2).sum.toDouble / targetFileBytes).toInt)
-        val folded = readEntriesWithDv(spark, rootP, touched, dvE)
-          .coalesce(want)
-        // the folded files' category and Bloom columns carry over, so
-        // equality and point lookups still prune the compacted files;
-        // Blooms keep the widest width recorded on them
-        val cats = touched.flatMap(entryCategories(_).keys).distinct.sorted
-        val blooms = touched.flatMap(entryBlooms(_).toSeq)
-        val newEntries = writeDataFiles(spark, fs, rootP, folded, statsCols,
-          cats, blooms.map(_._1).distinct.sorted,
-          if (blooms.isEmpty) DefaultBloomBits else blooms.map(_._2._1).max)
-        Right((untouched ++ newEntries, (touched.size, untouched.size)))
-      }
+        else scan(spark, rootP, dvE)
+          .select("file_name").distinct().collect()
+          .map(_.getString(0)).toSet.intersect(dataE.map(entryName).toSet)
+      val small = dataE.filter(e =>
+        dvHit.contains(entryName(e)) || size(e) < minBytes)
+      // nothing to fold or merge: shed all-stale sidecars with a
+      // manifest-only commit so reads stop paying their anti-join
+      if (dvHit.nonEmpty || small.size >= 2) Some(small)
+      else if (dvE.nonEmpty) Some(Nil)
+      else None
+    } { (touched, rows) =>
+      val want = math.max(1, math.ceil(
+        touched.map(size).sum.toDouble / targetFileBytes).toInt)
+      // the folded files' category and Bloom columns carry over, so
+      // equality and point lookups still prune the compacted files;
+      // Blooms keep the widest width recorded on them
+      val blooms = touched.flatMap(entryBlooms(_).toSeq)
+      // a TRACKED table's compaction must keep the change chain
+      // unbroken: the commit changes no rows, so its feed step is EMPTY
+      // — schema-shaped, zero rows — rather than absent (an absent step
+      // is a chain GAP that fails every CDC consumer loudly, by design)
+      Rewrite(
+        if (touched.isEmpty) None else rows.map(_.coalesce(want)),
+        Sections(statsCols,
+          touched.flatMap(entryCategories(_).keys).distinct.sorted,
+          blooms.map(_._1).distinct.sorted,
+          if (blooms.isEmpty) DefaultBloomBits else blooms.map(_._2._1).max),
+        () => asChanges(rows.get.limit(0), changeKeys, "insert"))
     }
-    // a TRACKED table's compaction must keep the change chain
-    // unbroken: the commit changes no rows, so its feed step is EMPTY
-    // — schema-shaped, zero rows — rather than absent (an absent step
-    // is a chain GAP that fails every CDC consumer loudly, by design)
-    v.foreach { ver =>
-      if (changeKeys.nonEmpty) {
-        import org.apache.spark.sql.functions._
-        val cur = readVersion(spark, root, ver)
-        val nonKeys = cur.columns.filterNot(changeKeys.contains).toSeq
-        recordChangesStep(spark, root, ver - 1, ver,
-          cur.limit(0).select(changeKeys.map(col) ++
-            Seq(lit("insert").as("change")) ++ nonKeys.map(col): _*))
-      }
-    }
-    v.map(ver => (ver, out._1, out._2))
+    v.map(ver => (ver, rewritten, kept))
   }
 
   /** Can a file possibly hold rows matching `filter`? — THE pruning
@@ -2081,25 +2080,21 @@ object SnapshotTable {
   private def recordChanges(spark: SparkSession, root: String,
                             prev: Option[Long], v: Long,
                             keys: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions._
     val step = prev match {
       case Some(p) => diff(spark, root, p, v, keys)
-      case None =>
-        val full = readVersion(spark, root, v)
-        val nonKeys = full.columns.filterNot(keys.contains).toSeq
-        full.select(keys.map(col) ++ Seq(lit("insert").as("change")) ++
-          nonKeys.map(col): _*)
+      case None => asChanges(readVersion(spark, root, v), keys, "insert")
     }
     recordChangesStep(spark, root, prev.getOrElse(0L), v, step)
   }
 
   /** Store a PRECOMPUTED changelog step for commit `v` (diffed against
-    * `prevV`) — [[recordChanges]]' core, taken directly by callers
-    * that already know their change set ([[upsertTargeted]]'s step is
-    * O(batch + touched files), and re-deriving it through [[diff]]'s
+    * `prevV`) — [[recordChanges]]' core, taken directly by every
+    * mutation that knows its change set (a [[copyOnWrite]] step is
+    * O(what it touched), and re-deriving it through [[diff]]'s
     * full-outer table join would reinstate exactly the O(table) read
-    * the targeted path exists to avoid). `step` must carry the feed
-    * shape `(keys..., change, non-keys...)`. */
+    * the targeted paths exist to avoid; only [[commit]] and
+    * [[restore]] replace the table wholesale and diff). `step` must
+    * carry the feed shape `(keys..., change, non-keys...)`. */
   private def recordChangesStep(spark: SparkSession, root: String,
                                 prevV: Long, v: Long,
                                 step: DataFrame): Unit = {

@@ -796,11 +796,10 @@ object EventStreams {
     val staging = new org.apache.hadoop.fs.Path(path + ".staging")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.core.Catalog.recoverSwap(fs, target, staging)
-    val merged =
-      if (fs.exists(target))
-        graft.operators.Components.mergeFirstWriterWins(
-          Seq(batch, spark.read.parquet(path)), keys, tieBreak)
-      else batch
+    // the first batch resolves its own duplicate keys the same way
+    val merged = graft.operators.Components.mergeFirstWriterWins(
+      batch +: (if (fs.exists(target)) Seq(spark.read.parquet(path)) else Nil),
+      keys, tieBreak)
     merged.write.mode("overwrite").parquet(staging.toString)
     graft.core.Catalog.swapInto(fs, staging, target)
     ()
@@ -917,11 +916,11 @@ object EventStreams {
       q.stop()
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
-    // the crash-replayed FINAL batch through the identical cycle path:
-    // one more version publishes, with content the oracle proves
-    // unchanged
+    // the crash-replayed FINAL batch through the sink's own cycle
+    // (upsertTargeted): one more version publishes, with content the
+    // oracle proves unchanged
     chunks.lastOption.foreach { c =>
-      graft.core.SnapshotTable.upsertCycle(
+      graft.core.SnapshotTable.upsertTargeted(
         c.toSeq.toDF("event_id", "ts", "user_id", "value")
           .select(col("user_id"), col("ts"), col("event_id"), col("value")),
         root, keys, tieBreak)

@@ -147,6 +147,16 @@ class SnapshotTableSpec extends SparkSpec {
       root, Seq("k"), Seq(col("eid")))
     assert(table() == expected)
     assert(SnapshotTable.versions(spark, root).max == vBefore + 1)
+    // a single cycle on an empty table resolves its own duplicates:
+    // the tieBreak winner is the key's only row
+    val first = freshRoot()
+    SnapshotTable.upsertCycle(
+      Seq((1L, 11L, "e11"), (1L, 10L, "e10"), (2L, 20L, "e20"))
+        .toDF("k", "eid", "payload"),
+      first, Seq("k"), Seq(col("eid")))
+    assert(SnapshotTable.read(spark, first).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet ==
+      Set((1L, 10L, "e10"), (2L, 20L, "e20")))
   }
 
   test("scanPruned bounds are INCLUSIVE on both ends: probes at a " +
@@ -1549,5 +1559,51 @@ class SnapshotTableSpec extends SparkSpec {
       .collect().toMap
     assert(got.size == 21 && got("2024-01-03") == "new" &&
       got("2024-03-01") == "ins" && got("2024-01-04") == "v3")
+  }
+
+  test("jobs per mutation on a fixed 4k-row, 8-file keyed table") {
+    def table(): String = {
+      val root = freshRoot()
+      SnapshotTable.commit(spark, root,
+        spark.range(0L, 4000L).select(col("id").as("k"),
+            concat(lit("v"), col("id")).as("v"))
+          .repartitionByRange(8, col("k")),
+        statsCols = Seq("k"), changeKeys = Seq("k"))
+      assert(SnapshotTable.dataFiles(spark, root).size == 8)
+      root
+    }
+    def jobs(op: String => Unit): Int = {
+      val root = table()
+      jobsDuring(op(root))
+    }
+    val batch = Seq((1L, "u1"), (2L, "u2"), (4100L, "n4100")).toDF("k", "v")
+    val changes = Seq((1L, "update", "u1", 2L), (3L, "delete", "v3", 2L),
+      (4100L, "insert", "n4100", 2L)).toDF("k", "change", "v", "version")
+    val got = Map(
+      "upsertTargeted" -> jobs(SnapshotTable.upsertTargeted(batch, _,
+        Seq("k"), statsCols = Seq("k"), trackChanges = true)),
+      "applyChangesCycle" -> jobs(SnapshotTable.applyChangesCycle(changes,
+        _, Seq("k"), identity, statsCols = Seq("k"))),
+      "updateWhere" -> jobs(SnapshotTable.updateWhere(spark, _,
+        col("k") < 10, Seq("v" -> lit("x")), changeKeys = Seq("k"),
+        statsCols = Seq("k"))),
+      "deleteWhereDV" -> jobs(SnapshotTable.deleteWhereDV(spark, _,
+        col("k") === 5L, changeKeys = Seq("k"))),
+      "deleteWhere" -> jobs(SnapshotTable.deleteWhere(spark, _,
+        col("k") < 10, statsCols = Seq("k"))),
+      "deleteWhere tracked" -> jobs(SnapshotTable.deleteWhere(spark, _,
+        col("k") < 10, changeKeys = Seq("k"), statsCols = Seq("k"))),
+      "upsertCycle" -> jobs(SnapshotTable.upsertCycle(batch, _, Seq("k"),
+        statsCols = Seq("k"))),
+      "compactSnapshot" -> jobs(SnapshotTable.compactSnapshot(spark, _,
+        statsCols = Seq("k"))))
+    // a tracked deleteWhere pays one job over the touched rows for its
+    // feed, never a whole-table diff; applyChangesCycle joins its feed
+    // keys as they come, already one row per key (a distinct() on them
+    // would add three jobs)
+    assert(got == Map("upsertTargeted" -> 13, "applyChangesCycle" -> 9,
+      "updateWhere" -> 6, "deleteWhereDV" -> 3, "deleteWhere" -> 3,
+      "deleteWhere tracked" -> 4, "upsertCycle" -> 2,
+      "compactSnapshot" -> 1), got)
   }
 }

@@ -234,8 +234,12 @@ class StreamingSpec extends SparkSpec {
     val q = EventStreams.upsertSink(
       input.toDF().select($"user_id", $"event_type", $"value"),
       path, ck, keys = Seq("user_id"))
-    input.addData(Event(1, ts(1), 7, "click", 1.0), Event(2, ts(2), 8, "view", 2.0))
+    // key 7 twice in the first batch: the batch resolves its own
+    // duplicates (first by the non-key columns) before any table exists
+    input.addData(Event(1, ts(1), 7, "click", 1.0), Event(2, ts(2), 8, "view", 2.0),
+      Event(5, ts(5), 7, "view", 4.0))
     q.processAllAvailable()
+    assert(spark.read.parquet(path).count() == 2L)
     input.addData(Event(3, ts(3), 8, "buy", 9.0), Event(4, ts(4), 9, "view", 3.0))
     q.processAllAvailable()
     q.stop()

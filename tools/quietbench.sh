@@ -14,6 +14,11 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# Spark sizing defaults from this host, as the Tier-1 verify derives them:
+# every core, and half the memory clamped to 2-8g. Explicit env values win.
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+
 tag="${1:?usage: tools/quietbench.sh <tag, e.g. r14pins>}"
 
 echo "== waiting for quiet host (1-min loadavg < 1.5) =="
@@ -25,9 +30,7 @@ done
 echo "loadavg: $(cut -d' ' -f1-3 /proc/loadavg)"
 
 echo "== full-suite bench @ sf0.1 =="
-SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g} \
-  SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' | sed 's/^\[info\] //'
 
 cp BENCH_DETAIL.json "BENCH_DETAIL_${tag}.json"

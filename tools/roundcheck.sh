@@ -7,6 +7,11 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# Spark sizing defaults from this host, as the Tier-1 verify derives them:
+# every core, and half the memory clamped to 2-8g. Explicit env values win.
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+
 echo "== README query-count gate =="
 # the count was hand-typed and drifted in rounds 7 AND 8 (ADVICE both
 # times) — compare the declared suite size against the README claim and
@@ -50,16 +55,13 @@ fi
 echo "ok: ${n_t} tests (README matches)"
 
 echo "== oracle @ sf0.01 (the driver's gate) =="
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} \
-  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_sf001" >/dev/null 2>&1
+sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_sf001" >/dev/null 2>&1
 python3 tools/oracle_check.py /root/testdata/sf0.01 /tmp/verify_sf001 | grep -v '^PASS'
 
 echo "== oracle @ sf0.1 (scale-dependent float-boundary sweep) =="
-SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g} SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-  sbt -batch "runMain graft.Verify /root/testdata/sf0.1 /tmp/verify_sf01" >/dev/null 2>&1
+sbt -batch "runMain graft.Verify /root/testdata/sf0.1 /tmp/verify_sf01" >/dev/null 2>&1
 python3 tools/oracle_check.py /root/testdata/sf0.1 /tmp/verify_sf01 | grep -v '^PASS'
 
 echo "== bench @ sf0.1 =="
-SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g} SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' | sed 's/^\[info\] //'
